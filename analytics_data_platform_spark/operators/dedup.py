@@ -554,28 +554,15 @@ def minhash_signature_portable(
     )
 
 
-# Column-AST memo for the band-bucket expression: the portable MinHash
-# tree is ~32 affine folds × 16 bands of fluent Column objects — ~0.4-2 s
-# of py4j round trips PER CONSTRUCTION (driver-side, data-independent).
-# Unresolved Columns are immutable and reusable across DataFrames, so one
-# build per (params, SparkContext) serves every call in the session —
-# the incremental pipeline builds this 3-4× per tick otherwise.
-_BAND_COL_MEMO: dict[tuple, Column] = {}
-
-
 def _band_buckets_col(text_col: str, num_hashes: int, bands: int, seed: int) -> Column:
-    from pyspark import SparkContext
-
-    sc = SparkContext._active_spark_context
-    key = (id(sc), text_col, num_hashes, bands, seed)
-    col = _BAND_COL_MEMO.get(key)
-    if col is not None:
-        return col
+    """Portable pure-Catalyst band-bucket array: the reference that
+    tests/test_minhash_native.py holds :func:`_band_rows_arrow` bit-equal
+    to."""
     r = num_hashes // bands
     # let-bound signature → every band bucket references the once-evaluated
     # array (see functions.expr.bind; unbound, projection collapse
     # re-evaluates the whole md5 signature per band)
-    col = bind(
+    return bind(
         minhash_signature_portable(shingle_tokens(text_col), num_hashes, seed),
         lambda sig: F.when(
             sig.isNotNull(),
@@ -591,11 +578,6 @@ def _band_buckets_col(text_col: str, num_hashes: int, bands: int, seed: int) -> 
             ),
         ),
     )
-    # drop entries from a previous (stopped) SparkContext — stale JVM refs
-    for k in [k for k in _BAND_COL_MEMO if k[0] != id(sc)]:
-        del _BAND_COL_MEMO[k]
-    _BAND_COL_MEMO[key] = col
-    return col
 
 
 def _band_rows_arrow(
@@ -699,16 +681,12 @@ def minhash_band_rows(
     batches can join against them without re-shingling the corpus
     (see :func:`incremental_minhash_candidates`).
 
-    Two bit-identical implementations (flip via SPARK_GRAFT_MINHASH_IMPL):
-    the default ``arrow`` path hands whole batches to hashlib/numpy inside
-    one ``mapInArrow`` (guide §4.2 — the interpreted md5 × 32-affine HOF
+    The rows come from one ``mapInArrow`` pass that hands whole batches
+    to hashlib/numpy (guide §4.2 — the interpreted md5 × 32-affine HOF
     fold was the largest per-row compute left in the engine, ~4.8 s per
-    sf0.1 bootstrap); ``hof`` keeps the pure-Catalyst expression pipeline
-    (zero Python boundary, e.g. for a cluster without Python workers).
-    Equality is pinned by tests/test_minhash_native.py.
+    sf0.1 bootstrap). tests/test_minhash_native.py pins it bit-equal to
+    the pure-Catalyst reference :func:`_band_buckets_col`.
     """
-    import os
-
     if num_hashes % bands:
         raise ValueError("num_hashes must be divisible by bands")
     base = df.select(id_col, text_col)
@@ -720,9 +698,6 @@ def minhash_band_rows(
     # to skip the probe outright (guide §1.2: driver-side cost is real).
     if not assume_wide:
         base = spread(base)
-    if os.environ.get("SPARK_GRAFT_MINHASH_IMPL", "arrow") == "hof":
-        buckets = _band_buckets_col(text_col, num_hashes, bands, seed)
-        return base.select(id_col, F.explode(buckets).alias("bucket"))
     return _band_rows_arrow(base, text_col, id_col, num_hashes, bands, seed)
 
 

@@ -131,6 +131,7 @@ that size.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 
 from analytics_data_platform_spark.operators import dedup
@@ -775,10 +776,14 @@ def refresh_corpus_state(
         try:
             tallies = obs.get
             n_raw, n_clean = int(tallies["n_raw"]), int(tallies["n_clean"])
-        except Exception:
+        except Py4JJavaError as exc:
             # an empty batch can collapse to an empty LocalRelation and
-            # strip the CollectMetrics row — fall back to the direct agg
-            # (cheap by construction: the batch produced no metrics)
+            # strip the CollectMetrics row: the JVM's row conversion then
+            # fails its non-empty assertion. Only that falls back to the
+            # direct agg (cheap by construction: the batch produced no
+            # metrics); any other failure propagates
+            if exc.java_exception.getClass().getName() != "java.lang.AssertionError":
+                raise
             row = annotated.agg(
                 F.count(F.lit(1)).alias("n_raw"),
                 F.coalesce(F.sum(F.col("_ok").cast("long")), F.lit(0)).alias(

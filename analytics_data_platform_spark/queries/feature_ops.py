@@ -361,7 +361,7 @@ register(
         join_key_skew_profile,
         SKEW_SQL,
         doc="per-join-key skew histogram (log2 frequency buckets) for shuffle planning",
-        cites="observability family; feeds operators/skew.py salting decisions",
+        cites="observability family; feeds AQE skew-join and salting decisions",
         tags=("observability", "agg"),
     )
 )

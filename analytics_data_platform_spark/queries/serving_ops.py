@@ -52,6 +52,9 @@ from __future__ import annotations
 
 import shutil
 import tempfile
+from concurrent.futures import ThreadPoolExecutor
+from functools import partial
+from typing import Callable, NamedTuple
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -60,7 +63,14 @@ from analytics_data_platform_spark.functions.concurrency import await_all
 from analytics_data_platform_spark.operators import similarity
 from analytics_data_platform_spark.operators.search_index import SearchIndex
 from analytics_data_platform_spark.operators.similarity import topk_per_query
+from analytics_data_platform_spark.pipelines.incremental import (
+    read_state_part,
+    refresh_corpus_state,
+    state_changelog,
+    takedown_corpus_state,
+)
 from analytics_data_platform_spark.queries import QuerySpec, register
+from analytics_data_platform_spark.queries.corpus_ops import c4_core_pass
 from analytics_data_platform_spark.queries.scale_ops import (
     _IVF_NLIST,
     _IVF_NPROBE,
@@ -381,8 +391,6 @@ def index_hybrid_rrf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         # their jobs from a driver pool so each one's stage tail
         # back-fills the executors (guide §2.6). Pure job scheduling; no
         # served plan changes.
-        from concurrent.futures import ThreadPoolExecutor
-
         postings, stats = _scored_posting_rows(d)
 
         def _write_lex() -> None:
@@ -591,8 +599,6 @@ def index_hybrid_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         # MoreLikeThis terms, filtered vector index) — overlap their jobs
         # from a driver pool (guide §2.6); pure job scheduling, no served
         # plan changes
-        from concurrent.futures import ThreadPoolExecutor
-
         postings, stats = _scored_posting_rows(d)
 
         def _write_lex() -> None:
@@ -939,9 +945,100 @@ register(
 
 
 # ---------------------------------------------------------------------------
-# serving_index_corpus_sync — the serving index maintained FROM the governed
+# corpus→index sync — the serving indexes maintained FROM the governed
 # corpus state's changelog (ingest → dedup → evict → serve, end to end)
 # ---------------------------------------------------------------------------
+
+
+class _SyncedIndex(NamedTuple):
+    """One serving index as the corpus→index syncs drive it: ``build``
+    takes the tick-0 live set, ``append`` a tick's appeared rows and
+    ``delete`` its evicted ``doc_id`` frame, returning the evicted count."""
+
+    build: Callable[[DataFrame], object]
+    append: Callable[[DataFrame], object]
+    delete: Callable[[DataFrame], int]
+
+
+def _synced_search(idx: SearchIndex) -> _SyncedIndex:
+    return _SyncedIndex(idx.build, idx.append, idx.delete_docs)
+
+
+def _overlapped(fns: list[Callable[[], object]]) -> list:
+    """Run independent index operations (one per index root). Two or more
+    overlap from a driver pool so each one's job tail back-fills the
+    executors (guide §2.6) — pure job scheduling, identical contents."""
+    if len(fns) == 1:
+        return [fns[0]()]
+    with ThreadPoolExecutor(max_workers=len(fns)) as pool:
+        return await_all(*(pool.submit(f) for f in fns))
+
+
+def _apply_changelog(
+    spark: SparkSession, state: str, tick: int, indexes: list[_SyncedIndex]
+) -> int:
+    """Apply tick ``tick``'s MANIFEST changelog (``state_changelog``: the
+    tick's appended data files and merge-on-read delete-key files) to
+    every index: appeared docs append, evicted keepers are deleted.
+    Returns the first index's evicted count."""
+    appeared, evicted = state_changelog(
+        spark, state, "live", tick - 1, tick, key_cols=["doc_id"]
+    )
+    if not appeared.isEmpty():  # takedown ticks append nothing
+        _overlapped([partial(i.append, appeared) for i in indexes])
+    return _overlapped([partial(i.delete, evicted) for i in indexes])[0]
+
+
+def _sync_batch_ticks(
+    spark: SparkSession, state: str, docs: DataFrame, indexes: list[_SyncedIndex]
+) -> None:
+    """The batch syncs' three ticks: even doc_ids, odd doc_ids, then a
+    content-keyed takedown of every doc_id ≡ 0 (mod 97).
+
+    Cross-tick overlap (guide §2.6): snapshot versions are immutable
+    (copy-on-write), so the index builds read live@v0 while the tick-1
+    refresh commits v1, and tick-1's index maintenance (index roots only)
+    runs while the tick-2 takedown commits v2. Same operations, same
+    dependency order as the sequential loop: each changelog read waits
+    for its tick's commit AND the indexes existing."""
+    refresh_corpus_state(spark, state, docs.where(F.col("doc_id") % 2 == 0), 0)
+    live0 = read_state_part(spark, state, "live", 0)
+    with ThreadPoolExecutor(max_workers=len(indexes) + 1) as pool:
+        builds = [pool.submit(i.build, live0) for i in indexes]
+        f_t1 = pool.submit(
+            refresh_corpus_state, spark, state, docs.where(F.col("doc_id") % 2 == 1), 1
+        )
+        await_all(*builds, f_t1)
+        f_t2 = pool.submit(
+            takedown_corpus_state, spark, state, docs.where(F.col("doc_id") % 97 == 0), 2
+        )
+        f_m1 = pool.submit(_apply_changelog, spark, state, 1, indexes)
+        n_evicted, _ = await_all(f_m1, f_t2)
+    n_evicted += _apply_changelog(spark, state, 2, indexes)
+    assert n_evicted > 0, "takedown tick must evict live keepers"
+
+
+def _sync_live_set(d: DataFrame) -> DataFrame:
+    """The sync ticks' final live set built one-shot (clean → exact-dedup
+    keepers → content-keyed takedown) for the internal-plan audit; the
+    state machinery's own tick plans are audited under the
+    refresh/changelog entries."""
+    from analytics_data_platform_spark.operators import dedup
+
+    cleaned = d.where(F.length(F.trim("text")) > 0).where(c4_core_pass("text"))
+    tdfp = (
+        d.where(F.col("doc_id") % 97 == 0)
+        .select(dedup.fingerprint_col("text").alias("_fp"))
+        .distinct()
+    )
+    fp = cleaned.select("doc_id", dedup.fingerprint_col("text").alias("_fp"))
+    keep = (
+        fp.join(F.broadcast(tdfp), "_fp", "left_anti")
+        .groupBy("_fp")
+        .agg(F.min("doc_id").alias("doc_id"))
+        .select("doc_id")
+    )
+    return cleaned.join(keep, "doc_id", "left_semi")
 
 
 def serving_index_corpus_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -971,62 +1068,12 @@ def serving_index_corpus_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-sized live versions (no state-side shuffle; plan-pinned in
     tests/test_serving_ops.py).
     """
-    from analytics_data_platform_spark.pipelines.incremental import (
-        read_state_part,
-        refresh_corpus_state,
-        state_changelog,
-        takedown_corpus_state,
-    )
-
-    from concurrent.futures import ThreadPoolExecutor
-
     docs = load_table(spark, sf_dir, "documents")
     state = tempfile.mkdtemp(prefix="adps-sync-state-")
     root = tempfile.mkdtemp(prefix="adps-sync-idx-")
-
-    def _apply_changelog(idx, tick: int) -> int:
-        appeared, evicted = state_changelog(
-            spark, state, "live", tick - 1, tick, key_cols=["doc_id"]
-        )
-        if not appeared.isEmpty():  # takedown ticks append nothing
-            idx.append(appeared)
-        return idx.delete_docs(evicted)
-
     try:
-        # cross-tick overlap (guide §2.6): snapshot versions are immutable
-        # (copy-on-write), so the tick-0 index build reads live@v0 while
-        # the tick-1 refresh commits v1 — and tick-1's index maintenance
-        # (append + delete, same-index-sequential) touches only the index
-        # root while the tick-2 takedown commits v2. Same operations, same
-        # dependency order as the sequential loop: each changelog read
-        # waits for its tick's commit AND the index existing.
-        refresh_corpus_state(spark, state, docs.where(F.col("doc_id") % 2 == 0), 0)
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_build = pool.submit(
-                lambda: SearchIndex(spark, root, mode="scored").build(
-                    read_state_part(spark, state, "live", 0)
-                )
-            )
-            f_t1 = pool.submit(
-                refresh_corpus_state,
-                spark,
-                state,
-                docs.where(F.col("doc_id") % 2 == 1),
-                1,
-            )
-            idx, _ = await_all(f_build, f_t1)
-            f_t2 = pool.submit(
-                takedown_corpus_state,
-                spark,
-                state,
-                docs.where(F.col("doc_id") % 97 == 0),
-                2,
-            )
-            f_m1 = pool.submit(_apply_changelog, idx, 1)
-            n_evicted, _ = await_all(f_m1, f_t2)
-        n_evicted += _apply_changelog(idx, 2)
-        assert n_evicted > 0, "takedown tick must evict live keepers"
-
+        idx = SearchIndex(spark, root, mode="scored")
+        _sync_batch_ticks(spark, state, docs, [_synced_search(idx)])
         served = idx.bm25(QUERY_TERMS)
         schema = served.schema
         rows = sorted(tuple(r) for r in served.collect())
@@ -1040,27 +1087,10 @@ def serving_index_corpus_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sync_internal_plans(spark, sf_dir):
-    """The serve plan over the one-shot live set; the state machinery's
-    own tick plans are audited under the refresh/changelog entries."""
-    from analytics_data_platform_spark.operators import dedup
-    from analytics_data_platform_spark.queries.corpus_ops import c4_core_pass
+    """The serve plan over the one-shot live set."""
     from analytics_data_platform_spark.queries.search_ops import _bm25_scores
 
-    d = load_table(spark, sf_dir, "documents")
-    cleaned = d.where(F.length(F.trim("text")) > 0).where(c4_core_pass("text"))
-    tdfp = (
-        d.where(F.col("doc_id") % 97 == 0)
-        .select(dedup.fingerprint_col("text").alias("_fp"))
-        .distinct()
-    )
-    fp = cleaned.select("doc_id", dedup.fingerprint_col("text").alias("_fp"))
-    keep = (
-        fp.join(F.broadcast(tdfp), "_fp", "left_anti")
-        .groupBy("_fp")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
-    live = cleaned.join(keep, "doc_id", "left_semi")
+    live = _sync_live_set(load_table(spark, sf_dir, "documents"))
     scored = _bm25_scores(spark, live, _query_frame(spark))
     return [("serve", topk_per_query(scored, TOPK, "q_id", "doc_id", "score"))]
 
@@ -1134,13 +1164,6 @@ def streaming_index_corpus_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    from analytics_data_platform_spark.pipelines.incremental import (
-        read_state_part,
-        refresh_corpus_state,
-        state_changelog,
-        takedown_corpus_state,
-    )
-
     src = os.path.join(sf_dir, "documents.parquet")
     work = tempfile.mkdtemp(prefix="adps-streamsync-")
     staging = os.path.join(work, "staging")
@@ -1148,21 +1171,14 @@ def streaming_index_corpus_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     state = os.path.join(work, "state")
     os.makedirs(staging)
     idx = SearchIndex(spark, os.path.join(work, "idx"), mode="scored")
-
-    def apply_tick(bid: int) -> int:
-        appeared, evicted = state_changelog(
-            spark, state, "live", bid - 1, bid, key_cols=["doc_id"]
-        )
-        if not appeared.isEmpty():
-            idx.append(appeared)
-        return idx.delete_docs(evicted)
+    synced = [_synced_search(idx)]
 
     def tick(bdf: DataFrame, bid: int) -> None:
         refresh_corpus_state(spark, state, bdf, bid)
         if bid == 0:
             idx.build(read_state_part(spark, state, "live", 0))
         else:
-            apply_tick(bid)
+            _apply_changelog(spark, state, bid, synced)
 
     def drain() -> None:
         stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(
@@ -1187,7 +1203,7 @@ def streaming_index_corpus_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
         drain()
         docs = load_table(spark, sf_dir, "documents")
         takedown_corpus_state(spark, state, docs.where(F.col("doc_id") % 97 == 0), 2)
-        n_evicted = apply_tick(2)
+        n_evicted = _apply_changelog(spark, state, 2, synced)
         assert n_evicted > 0, "takedown tick must evict live keepers"
 
         served = idx.bm25(QUERY_TERMS)
@@ -1931,12 +1947,6 @@ def serving_hybrid_corpus_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     the erased exemplar's terms all hash-diverge on the fused cut.
     """
     from analytics_data_platform_spark.operators.vector_index import VectorIndex
-    from analytics_data_platform_spark.pipelines.incremental import (
-        read_state_part,
-        refresh_corpus_state,
-        state_changelog,
-        takedown_corpus_state,
-    )
 
     d = load_table(spark, sf_dir, "documents")
     e = load_table(spark, sf_dir, "embeddings")
@@ -1957,54 +1967,18 @@ def serving_hybrid_corpus_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     try:
         # the two serving tiers are independent indexes under separate
-        # roots: their builds, per-tick appends and per-tick erasures
-        # overlap from a driver pool so each tier's job tail back-fills
-        # the executors (guide §2.6) — pure job scheduling, identical
-        # index contents and metadata
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _apply_changelog(tick: int) -> int:
-            appeared, evicted = state_changelog(
-                spark, state, "live", tick - 1, tick, key_cols=["doc_id"]
-            )
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                if not appeared.isEmpty():
-                    fa = pool.submit(idx.append, appeared)
-                    fb = pool.submit(vx.append, vec_rows(appeared, delta=True))
-                    await_all(fa, fb)
-                fd = pool.submit(idx.delete_docs, evicted)
-                fe = pool.submit(
-                    vx.delete_vecs, evicted.select(F.col("doc_id").alias("vec_id"))
-                )
-                return await_all(fd, fe)[0]
-
-        # cross-tick overlap on top (guide §2.6): snapshot versions are
-        # immutable, so both tier builds read live@v0 while the tick-1
-        # refresh commits v1, and tick-1's index maintenance (index roots
-        # only) runs while the tick-2 takedown commits v2 — same
-        # operations, same dependency order as the sequential loop
-        refresh_corpus_state(spark, state, d.where(F.col("doc_id") % 2 == 0), 0)
-        live0 = read_state_part(spark, state, "live", 0)
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            f_lex = pool.submit(
-                lambda: SearchIndex(spark, lex_root, mode="scored").build(live0)
-            )
-            f_vec = pool.submit(
-                lambda: VectorIndex(
-                    spark, ivf_root, nlist=_IVF_NLIST, nprobe=_IVF_NPROBE
-                ).build(vec_rows(live0), centroids=cents)
-            )
-            f_t1 = pool.submit(
-                refresh_corpus_state, spark, state, d.where(F.col("doc_id") % 2 == 1), 1
-            )
-            idx, vx, _ = await_all(f_lex, f_vec, f_t1)
-            f_t2 = pool.submit(
-                takedown_corpus_state, spark, state, d.where(F.col("doc_id") % 97 == 0), 2
-            )
-            f_m1 = pool.submit(_apply_changelog, 1)
-            n_evicted, _ = await_all(f_m1, f_t2)
-        n_evicted += _apply_changelog(2)
-        assert n_evicted > 0, "takedown tick must evict live keepers"
+        # roots, so their builds, per-tick appends and per-tick erasures
+        # overlap (``_overlapped``)
+        idx = SearchIndex(spark, lex_root, mode="scored")
+        vx = VectorIndex(spark, ivf_root, nlist=_IVF_NLIST, nprobe=_IVF_NPROBE)
+        vec = _SyncedIndex(
+            lambda live: vx.build(vec_rows(live), centroids=cents),
+            lambda appeared: vx.append(vec_rows(appeared, delta=True)),
+            lambda evicted: vx.delete_vecs(
+                evicted.select(F.col("doc_id").alias("vec_id"))
+            ),
+        )
+        _sync_batch_ticks(spark, state, d, [_synced_search(idx), vec])
 
         # serve: MoreLikeThis terms over the LIVE corpus (an erased
         # exemplar has no text to select from), then both synced tiers
@@ -2036,28 +2010,11 @@ def serving_hybrid_corpus_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _hybrid_sync_internal_plans(spark, sf_dir):
-    """The fused serve plan over the one-shot live set (the state
-    machinery's own tick plans are audited under the refresh/changelog
-    entries; the serve shape is what this query adds)."""
-    from analytics_data_platform_spark.operators import dedup
-    from analytics_data_platform_spark.queries.corpus_ops import c4_core_pass
-
+    """The fused serve plan over the one-shot live set (the serve shape is
+    what this query adds)."""
     d = load_table(spark, sf_dir, "documents")
     e = load_table(spark, sf_dir, "embeddings")
-    cleaned = d.where(F.length(F.trim("text")) > 0).where(c4_core_pass("text"))
-    tdfp = (
-        d.where(F.col("doc_id") % 97 == 0)
-        .select(dedup.fingerprint_col("text").alias("_fp"))
-        .distinct()
-    )
-    fp = cleaned.select("doc_id", dedup.fingerprint_col("text").alias("_fp"))
-    keep = (
-        fp.join(F.broadcast(tdfp), "_fp", "left_anti")
-        .groupBy("_fp")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
-    live = cleaned.join(keep, "doc_id", "left_semi")
+    live = _sync_live_set(d)
     postings, stats = _scored_posting_rows(live)
     cents = _pinned_centroids(e)
     e_live = e.join(

@@ -544,11 +544,8 @@ def semantic_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     representative-per-neighborhood rule). At 100 TB: k grows with n to
     hold cluster sizes bounded, and a skewed cluster is sub-split by
     recursing on its members — the published algorithm's own knob; the
-    per-cluster work here is provably Σ c², never n². The sub-split is
-    IMPLEMENTED in operators/semdedup.py::semdedup(max_cluster_size=...)
-    — deterministic secondary first-k centroids, hash-salt last resort,
-    adversarial-skew tested (tests/test_semdedup_operator.py); this query
-    form keeps flat clustering so the oracle is unchanged.
+    per-cluster work here is provably Σ c², never n². This query keeps
+    flat clustering (no sub-split), so the oracle stays one SQL pass.
 
     Output is one row per cluster (bounded by k): sizes, drops, and an
     exact dropped-id checksum the DuckDB oracle reproduces bit-for-bit.

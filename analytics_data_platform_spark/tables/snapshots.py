@@ -1,10 +1,10 @@
 """Manifest snapshots: Iceberg's metadata layer re-built on bare parquet.
 
-`tables/versioned.py` gives the parquet fallback an atomic commit protocol,
-but each version is a FULL copy — an append or a small merge rewrites the
-whole table, which is exactly what Iceberg's manifests exist to avoid
-(reference: elt-common/src/elt_common/iceberg/io.py:63-144 works on a real
-Iceberg catalog; maintenance/__init__.py:28-62 drives the four maintenance
+Bare parquet has no commit protocol, and versioning a table by FULL copy
+makes an append or a small merge rewrite the whole table, which is
+exactly what Iceberg's manifests exist to avoid (reference:
+elt-common/src/elt_common/iceberg/io.py:63-144 works on a real Iceberg
+catalog; maintenance/__init__.py:28-62 drives the four maintenance
 procedures). This module implements the same metadata design directly:
 
     root/
@@ -744,7 +744,14 @@ class SnapshotTable:
     def read(self, version: int | None = None) -> DataFrame:
         s = self.snapshot(version)
         if not s.files:
-            raise FileNotFoundError(f"snapshot v{s.version} of {self.root} is empty")
+            # a zero-file snapshot (e.g. a state part a takedown emptied)
+            # is an empty table with the manifest schema
+            schema = self._read_schema(version)
+            if schema is None:
+                raise FileNotFoundError(
+                    f"snapshot v{s.version} of {self.root} is empty and records no schema"
+                )
+            return self.spark.createDataFrame([], schema)
         return self._mor_grouped_read(s, [f.path for f in s.files], version)
 
     def _mor_grouped_read(

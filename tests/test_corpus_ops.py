@@ -1,71 +1,10 @@
-"""End-to-end corpus-prep DAG: raw documents through quality filter,
-exact + near dedup, and sequence packing, with data tests and TableIO
-materialization — the operators composing as a pipeline."""
+"""Planted-truth checks for two corpus_ops dedup primitives: the winnowing
+fingerprint coverage guarantee and substring-containment dedup under a
+hot shared anchor."""
 
 from __future__ import annotations
 
-import uuid
-
 import pyspark.sql.functions as F
-import pytest
-
-from analytics_data_platform_spark.operators.dedup import fingerprint_col
-from analytics_data_platform_spark.plans.corpus_prep import PACK_BUDGET, dag
-from analytics_data_platform_spark.tables.io import TableIO
-
-SF_DIR = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module")
-def built(spark):
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    ns = f"corpus_{uuid.uuid4().hex[:6]}"
-    io = TableIO(spark)
-    try:
-        yield dag.run(
-            spark,
-            sources={("landing", "documents"): docs},
-            target_namespace=ns,
-            io=io,
-        )
-    finally:
-        io.drop_namespace(ns)
-
-
-def test_pipeline_monotone_survival(built):
-    stg = built["stg_documents"].count()
-    clean = built["clean_documents"].count()
-    kept = built["dedup_documents"].count()
-    assert stg >= clean >= kept > 0
-    assert kept < stg  # the corpus HAS planted duplicates; some must go
-
-
-def test_no_exact_duplicates_survive(built):
-    kept = built["dedup_documents"]
-    n = kept.count()
-    n_fp = kept.select(fingerprint_col("text").alias("fp")).distinct().count()
-    assert n == n_fp
-
-
-def test_packs_respect_budget_except_oversized_docs(built):
-    packs = (
-        built["packed_sequences"]
-        .groupBy("source", "pack_id")
-        .agg(F.sum("n_tokens").alias("tok"), F.count("*").alias("n_docs"))
-    )
-    over = packs.where((F.col("tok") > PACK_BUDGET) & (F.col("n_docs") > 1)).count()
-    assert over == 0  # only single oversized docs may exceed the budget
-    assert packs.count() > 0
-
-
-def test_stats_mart_reconciles(built):
-    stats = {r.source: r for r in built["mart_corpus_stats"].collect()}
-    kept_total = built["dedup_documents"].count()
-    assert sum(r.kept_docs for r in stats.values()) == kept_total
-    for r in stats.values():
-        assert r.raw_docs >= r.kept_docs
-        if r.n_packs:
-            assert 0 < r.avg_fill <= 1.5  # oversized singleton packs can exceed 1
 
 
 class TestWinnowingGuarantee:
@@ -188,7 +127,6 @@ class TestSubstringContainmentDedup:
         never corpus². With 50 hot-anchor docs of ~10 tokens each, the
         anchor gram occurs ~3x per doc -> candidates ≲ 50*150; assert the
         verify input stays in that band (collected count on planted data)."""
-        import pyspark.sql.functions as F
         from analytics_data_platform_spark.queries.corpus_ops import PASSAGE_N
         from analytics_data_platform_spark.sources.testdata import load_table
 

@@ -776,3 +776,55 @@ def test_delete_compaction_preserves_bucket_clustering(spark, tmp_path, sf_dir):
         for r in read_state_part(spark, state, "live", 1).select("doc_id", "_fp").collect()
     }
     assert after == before, "compaction changed the live rows"
+
+
+def test_compaction_after_takedown_without_near_duplicates(spark, tmp_path):
+    """A corpus with no near-duplicates leaves the ``pairs`` part with no
+    data files. A takedown still stages a merge-on-read delete against it,
+    so compaction must read that zero-file snapshot as an empty table
+    (manifest schema) instead of failing."""
+    from analytics_data_platform_spark.pipelines.incremental import (
+        _table,
+        compact_state_deletes,
+        takedown_corpus_state,
+    )
+
+    state = str(tmp_path / "state")
+    other = " ".join(f"omega{i} sigma{i} kappa{i}" for i in range(12))
+    docs = spark.createDataFrame(
+        [_doc(10, f"Hello World {_BODY}"), _doc(11, f"unrelated text {other}")],
+        _SCHEMA,
+    )
+    refresh_corpus_state(spark, state, docs, 0)
+    takedown_corpus_state(spark, state, docs.where("doc_id = 10"), 1)
+    pairs = _table(spark, state, "pairs")
+    assert not pairs.snapshot().files and pairs.snapshot().delete_files
+
+    assert "pairs" in compact_state_deletes(spark, state)
+    assert pairs.read().count() == 0
+    assert {r.doc_id for r in read_state_part(spark, state, "live", 1).collect()} == {11}
+
+
+def test_empty_batch_tallies_fall_back_to_direct_count(spark, tmp_path, monkeypatch):
+    """An empty batch collapses to an empty relation that strips the
+    observed-metrics row, so reading the tallies fails in the JVM; the
+    tick must take the direct-count fallback and record n_raw = n_clean
+    = 0 rather than fail."""
+    from pyspark.sql import Observation
+
+    real_get = Observation.get
+    raised = []
+
+    def spy(obs):
+        try:
+            return real_get.fget(obs)
+        except Exception as exc:
+            raised.append(exc)
+            raise
+
+    monkeypatch.setattr(Observation, "get", property(spy))
+    state = str(tmp_path / "state")
+    refresh_corpus_state(spark, state, spark.createDataFrame([], _SCHEMA), 0)
+    assert raised, "the empty batch must reach the fallback"
+    counts = read_state_part(spark, state, "counts", 0).collect()
+    assert [(r.n_raw, r.n_clean) for r in counts] == [(0, 0)]

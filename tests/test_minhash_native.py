@@ -1,5 +1,6 @@
-"""The native (hashlib/numpy mapInArrow) MinHash band-row twin must be
-BIT-IDENTICAL to the portable HOF formulation — the bucket strings feed
+"""The native (hashlib/numpy mapInArrow) MinHash band rows, the only
+runtime path, must be BIT-IDENTICAL to the portable HOF reference
+expression ``dedup._band_buckets_col``: the bucket strings feed
 the LSH equi-join AND the generated DuckDB oracle SQL, so a single
 differing hash desynchronizes the dedup family. Adversarial shapes cover
 every place the two runtimes could disagree: Java-vs-Python regex ``\\s``
@@ -31,24 +32,24 @@ ADVERSARIAL = [
 ]
 
 
-def _rows(spark, df, impl, **kw):
-    import os
-
-    prev = os.environ.get("SPARK_GRAFT_MINHASH_IMPL")
-    os.environ["SPARK_GRAFT_MINHASH_IMPL"] = impl
-    try:
-        return sorted(map(tuple, dedup.minhash_band_rows(df, **kw).collect()))
-    finally:
-        if prev is None:
-            os.environ.pop("SPARK_GRAFT_MINHASH_IMPL", None)
-        else:
-            os.environ["SPARK_GRAFT_MINHASH_IMPL"] = prev
+def _rows(df, impl, text_col="text", id_col="doc_id", num_hashes=32, bands=16, seed=42):
+    """Sorted (id, bucket) rows from the runtime path (``arrow``) or the
+    pure-Catalyst reference expression (``hof``)."""
+    if impl == "hof":
+        buckets = dedup._band_buckets_col(text_col, num_hashes, bands, seed)
+        out = df.select(id_col, F.explode(buckets).alias("bucket"))
+    else:
+        out = dedup.minhash_band_rows(
+            df, text_col=text_col, id_col=id_col, num_hashes=num_hashes,
+            bands=bands, seed=seed,
+        )
+    return sorted(map(tuple, out.collect()))
 
 
 def test_adversarial_shapes_bit_identical(spark):
     df = spark.createDataFrame(ADVERSARIAL, "doc_id long, text string")
-    hof = _rows(spark, df, "hof")
-    arrow = _rows(spark, df, "arrow")
+    hof = _rows(df, "hof")
+    arrow = _rows(df, "arrow")
     assert hof == arrow, (
         f"HOF/native divergence: only-hof={set(hof) - set(arrow)} "
         f"only-native={set(arrow) - set(hof)}"
@@ -65,7 +66,7 @@ def test_adversarial_shapes_bit_identical(spark):
 
 def test_corpus_bit_identical(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    assert _rows(spark, d, "hof") == _rows(spark, d, "arrow")
+    assert _rows(d, "hof") == _rows(d, "arrow")
 
 
 def test_alternate_family_params_and_id_column(spark):
@@ -74,4 +75,4 @@ def test_alternate_family_params_and_id_column(spark):
         "uid int, text string",
     ).withColumn("text", F.concat("text", F.lit(" zeta eta theta")))
     kw = dict(id_col="uid", num_hashes=24, bands=8, seed=7)
-    assert _rows(spark, df, "hof", **kw) == _rows(spark, df, "arrow", **kw)
+    assert _rows(df, "hof", **kw) == _rows(df, "arrow", **kw)

@@ -216,28 +216,6 @@ def test_apply_changes_null_op_is_upsert_not_silent_delete(spark):
     assert got == {1: (None, "v2")}
 
 
-def test_semdedup_rank_split_hard_bound(spark):
-    """Adversarial salt collisions: even if the hash salt under-splits, the
-    rank-split residue pass makes the size bound HARD (code-review r5)."""
-    from analytics_data_platform_spark.operators.semdedup import (
-        quantize_vectors,
-        semdedup,
-    )
-
-    # 300 bit-identical vectors: un-separable by re-clustering, so the
-    # bound can only come from the salt + rank-split fallback
-    rows = [(i, [5.0, 5.0, 5.0, 5.0]) for i in range(300)]
-    vecs = quantize_vectors(
-        spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    )
-    out = semdedup(vecs, k=4, max_cluster_size=7, max_split_rounds=1).cache()
-    sizes = [r["count"] for r in out.groupBy("cluster").count().collect()]
-    assert max(sizes) <= 7, sorted(sizes, reverse=True)[:5]
-    assert sum(sizes) == 300
-    assert out.where("NOT is_dropped").count() == len(sizes)
-    out.unpersist()
-
-
 def test_apply_changes_tombstones_block_late_resurrection(spark):
     """Incremental two-stage merge: a delete collapsed in batch 1 must
     survive into the persisted state (keep_tombstones=True) so a LATE,

@@ -186,28 +186,6 @@ def test_dsir_and_nb_survive_8x(spark, smoke_dir):
         print(f"{name} 8x: {n} rows in {dt:.1f}s")
 
 
-def test_semdedup_subsplit_survives_8x(spark, smoke_dir_vec):
-    """8x replicated embeddings: every replica family is a tight cone —
-    adversarial for cluster balance. The bounded operator must keep the
-    max cluster under the cap and finish in budget."""
-    from analytics_data_platform_spark.operators.semdedup import (
-        quantize_vectors,
-        semdedup,
-    )
-
-    e = spark.read.parquet(f"{smoke_dir_vec}/embeddings.parquet")
-    t0 = time.time()
-    out = semdedup(
-        quantize_vectors(e), k=8, max_cluster_size=500, max_split_rounds=6
-    )
-    sizes = [r["count"] for r in out.groupBy("cluster").count().collect()]
-    dt = time.time() - t0
-    assert dt < BUDGET_S, f"semdedup 8x took {dt:.0f}s"
-    assert max(sizes) <= 500
-    assert sum(sizes) == e.count()
-    print(f"semdedup 8x: {len(sizes)} clusters, max {max(sizes)}, in {dt:.1f}s")
-
-
 # ---- round-6 ops under 8x -------------------------------------------------
 
 

@@ -1,87 +1,11 @@
-"""Salted-rewrite equivalence tests + Iceberg MERGE SQL generation."""
+"""Iceberg MERGE SQL generation, table-provider detection and the AQE
+skew-join split."""
 
 from __future__ import annotations
 
 import uuid
 
-import pyspark.sql.functions as F
-import pytest
-
-from analytics_data_platform_spark.operators import skew
 from analytics_data_platform_spark.tables.io import TableIO, merge_into_sql
-
-
-@pytest.fixture(scope="module")
-def skewed(spark):
-    # key 'hot' holds 80% of rows
-    hot = spark.range(8000).select(
-        F.lit("hot").alias("k"), (F.col("id") % 100).cast("double").alias("v")
-    )
-    rest = spark.range(2000).select(
-        F.concat(F.lit("k"), (F.col("id") % 50).cast("string")).alias("k"),
-        (F.col("id") % 7).cast("double").alias("v"),
-    )
-    return hot.unionByName(rest)
-
-
-def test_salted_aggregate_matches_plain(spark, skewed):
-    plain = {
-        r["k"]: r
-        for r in skewed.groupBy("k")
-        .agg(
-            F.sum("v").alias("v_sum"),
-            F.count("v").alias("v_n"),
-            F.min("v").alias("v_min"),
-            F.max("v").alias("v_max"),
-        )
-        .collect()
-    }
-    salted = {
-        r["k"]: r
-        for r in skew.salted_aggregate(
-            skewed,
-            ["k"],
-            {
-                "v_sum": ("sum", "v"),
-                "v_n": ("count", "v"),
-                "v_min": ("min", "v"),
-                "v_max": ("max", "v"),
-            },
-            salt=8,
-        ).collect()
-    }
-    assert set(plain) == set(salted)
-    for k in plain:
-        assert salted[k]["v_n"] == plain[k]["v_n"]
-        assert salted[k]["v_min"] == plain[k]["v_min"]
-        assert salted[k]["v_max"] == plain[k]["v_max"]
-        assert abs(salted[k]["v_sum"] - plain[k]["v_sum"]) < 1e-6
-
-    with pytest.raises(ValueError, match="unsupported aggregate"):
-        skew.salted_aggregate(skewed, ["k"], {"x": ("avg", "v")})
-
-
-def test_salted_join_matches_plain(spark, skewed):
-    dim = spark.createDataFrame(
-        [("hot", "HOT"), ("k1", "K1"), ("k2", "K2"), ("missing", "M")], "k string, label string"
-    )
-    plain = skewed.join(dim, "k", "inner").groupBy("k", "label").count()
-    salted = skew.salted_join(skewed, dim, ["k"], salt=4, how="inner").groupBy("k", "label").count()
-    assert {tuple(r) for r in plain.collect()} == {tuple(r) for r in salted.collect()}
-
-    # left join keeps unmatched large-side rows exactly once
-    left_plain = skewed.join(dim, "k", "left").count()
-    left_salted = skew.salted_join(skewed, dim, ["k"], salt=4, how="left").count()
-    assert left_plain == left_salted == skewed.count()
-
-    with pytest.raises(ValueError, match="inner and left"):
-        skew.salted_join(skewed, dim, ["k"], how="full")
-
-
-def test_skew_diagnostics(spark, skewed):
-    top = skew.top_frequent_keys(skewed, ["k"], n=1).collect()
-    assert top[0]["k"] == "hot" and top[0]["n_rows"] == 8000
-    assert skew.key_skew_factor(skewed, ["k"]) > 10
 
 
 def test_merge_into_sql_generation():
@@ -112,9 +36,8 @@ def test_provider_detection_parquet_path(spark):
 def test_aqe_splits_manufactured_skew_join(spark):
     """Prove the configured AQE skew-join path actually fires: a fact
     side with one hot key (2/3 of all rows) sort-merge-joined to a dim
-    must re-plan with SortMergeJoin(skew=true) + a skewed AQEShuffleRead —
-    the runtime half of the salting story (operators/skew.py is the
-    static half). Thresholds are lowered to make local-test row counts
+    must re-plan with SortMergeJoin(skew=true) + a skewed AQEShuffleRead.
+    Thresholds are lowered to make local-test row counts
     register as skew; production keeps the defaults."""
     import pyspark.sql.functions as F
 

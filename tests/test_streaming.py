@@ -436,8 +436,8 @@ def test_late_data_through_snapshot_sink_exactly_once_state_bounded(
         (3, m(12), 7, "click", 1.0, "{}"),
     ])
     drain()
-    # nothing finalized yet — the sink committed only empty snapshots
-    # (SnapshotTable.read raises on a fileless snapshot by design)
+    # nothing finalized yet — the sink committed only empty snapshots,
+    # and it records no schema, so there is no empty table to read
     with pytest.raises(FileNotFoundError, match="is empty"):
         t.read()
 

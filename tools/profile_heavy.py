@@ -55,6 +55,8 @@ def main() -> None:
     import analytics_data_platform_spark.queries.pipeline_ops  # noqa: F401
     import analytics_data_platform_spark.queries.serving_ops as sv
     sv.SearchIndex = SearchIndex
+    for fn in ("refresh_corpus_state", "takedown_corpus_state", "state_changelog"):
+        setattr(sv, fn, getattr(incr, fn))
 
     from analytics_data_platform_spark.queries import all_queries
     registry = all_queries()
