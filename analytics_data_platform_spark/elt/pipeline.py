@@ -36,10 +36,6 @@ class ELTJobManifest:
         return f"{self.domain}_{self.name}"
 
     @property
-    def landing_warehouse(self) -> str:
-        return self.warehouse if self.warehouse.endswith("_landing") else f"{self.warehouse}_landing"
-
-    @property
     def module_path(self) -> Path:
         return self.directory / f"{self.name}.py"
 

@@ -67,37 +67,7 @@ def parse_utc_timestamp(date_str: Column, time_str: Column, tz: str = "Europe/Lo
     (macros/parse_utc_timestamp.sql:7-16). Spark parses then shifts with
     ``to_utc_timestamp``. NOTE Spark silently resolves DST-ambiguous local
     times (picks the earlier offset); the reference *rejects* ambiguous rows
-    (electricity_sharepoint.py:82-117) — callers needing that parity should
-    pre-filter with :func:`is_dst_ambiguous`.
+    (electricity_sharepoint.py:82-117).
     """
     ts = F.to_timestamp(F.concat_ws(" ", date_str, time_str), "yyyy-MM-dd HH:mm:ss")
     return F.to_utc_timestamp(ts, tz)
-
-
-def is_dst_ambiguous(local_ts: Column, tz: str = "Europe/London") -> Column:
-    """True when a naive local timestamp is ambiguous (fall-back hour).
-
-    A local time is ambiguous iff converting local→UTC→local is stable but
-    the two candidate UTC instants differ; detectable because Spark's
-    to_utc_timestamp picks one offset: shifting the picked UTC instant by
-    the DST gap (1h) and converting back reproduces the same local time.
-    """
-    utc = F.to_utc_timestamp(local_ts, tz)
-    other = F.from_utc_timestamp(F.timestamp_add("HOUR", F.lit(1), utc), tz)
-    return other == local_ts
-
-
-def decode_yn_bool(col: Column | str) -> Column:
-    """'Y'/'N' text flag → boolean (base_opralogweb__entries.sql:17-20)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.when(c == "Y", F.lit(True)).when(c == "N", F.lit(False)).otherwise(F.lit(None))
-
-
-def century_fix_cycle_year(two_digit: Column) -> Column:
-    """2-digit cycle year → 4-digit: '9x'→199x else 20xx.
-
-    Reference: moderator_performance.py:118-127 (F15).
-    """
-    return F.when(two_digit.startswith("9"), F.concat(F.lit("19"), two_digit)).otherwise(
-        F.concat(F.lit("20"), two_digit)
-    )

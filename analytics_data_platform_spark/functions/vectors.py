@@ -39,10 +39,5 @@ def cosine(a: Column | str, b: Column | str) -> Column:
     return F.when((na > 0) & (nb > 0), d / (na * nb))
 
 
-def l2_distance(a: Column | str, b: Column | str) -> Column:
-    diffs = F.zip_with(_c(a), _c(b), lambda x, y: x.cast("double") - y.cast("double"))
-    return F.sqrt(F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x * x))
-
-
 def scale(a: Column | str, s: Column) -> Column:
     return F.transform(_c(a), lambda x: x.cast("double") * s)

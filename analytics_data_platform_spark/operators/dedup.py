@@ -2,24 +2,22 @@
 
 Scale design (100 TB documents):
 - exact: one shuffle on the fingerprint hash; keep min(doc_id) per group.
-- MinHash+LSH: signatures are computed JVM-side (xxhash64 inside
-  higher-order functions — no Python boundary), then candidates come from a
-  band-bucket equi-join: cost is O(sum of bucket sizes²) not O(n²). Bands
-  are exploded to (band_id, band_hash) rows so the join shuffles on the
-  bucket key and AQE handles skewed buckets.
-- SimHash: 64-bit signature via vectorized Arrow batches (numpy bit-packing
-  in a pandas iterator UDF); near-dup = signatures within k Hamming bits,
-  found by 4-way table-split banding (each 16-bit chunk exact-matches at
-  least once when hamming ≤ 3 per pigeonhole at 4 chunks).
+- MinHash+LSH: band rows come from one Arrow-batched pass
+  (:func:`minhash_band_rows`), then candidates come from a band-bucket
+  equi-join: cost is O(sum of bucket sizes²) not O(n²). Bands are
+  exploded to (band, bucket) rows so the join shuffles on the bucket key
+  and AQE handles skewed buckets.
+- SimHash: 64-bit signature as two 32-bit halves, voted in one codegen'd
+  aggregation; near-dup = signatures within k Hamming bits, found by
+  4-way table-split banding (each 16-bit chunk exact-matches at least
+  once when hamming ≤ 3 per pigeonhole at 4 chunks).
 - exact n-gram Jaccard verification of candidate pairs only.
 """
 
 from __future__ import annotations
 
 import warnings
-from collections.abc import Iterator
 
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
@@ -70,87 +68,6 @@ def shingle_tokens(text: Column | str, k: int = 3) -> Column:
                 )
             ),
         ).otherwise(F.array().cast("array<string>")),
-    )
-
-
-def minhash_signature(shingles: Column, num_hashes: int = 32) -> Column:
-    """MinHash signature: per seed, min over xxhash64(shingle ++ seed).
-
-    All JVM-side (xxhash64 in a lambda) — each document costs
-    O(|shingles| * num_hashes) hash evaluations, zero Python. The shingle
-    array is let-bound (functions.expr.bind) so the splitting/normalizing
-    expression underneath it is evaluated once per row, not once per
-    hash seed after projection collapse.
-    """
-    return bind(
-        shingles,
-        lambda sh: F.array(
-            *[
-                F.array_min(
-                    F.transform(sh, lambda s: F.xxhash64(F.concat(s, F.lit(f"#{i}"))))
-                )
-                for i in range(num_hashes)
-            ]
-        ),
-    )
-
-
-def minhash_lsh_candidates(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 32,
-    bands: int = 8,
-) -> DataFrame:
-    """Candidate near-dup pairs: docs sharing ≥1 LSH band bucket.
-
-    rows: (id_a, id_b, n_shared_bands). With r = num_hashes/bands rows per
-    band, the usual S-curve applies (P[candidate] = 1-(1-j^r)^b).
-    """
-    if num_hashes % bands:
-        raise ValueError("num_hashes must be divisible by bands")
-    r = num_hashes // bands
-    # signature AND its band buckets in ONE let-bound expression: the
-    # signature is evaluated exactly once per row even though every band
-    # references it (bind = CollapseProject re-evaluation barrier)
-    buckets = bind(
-        minhash_signature(shingle_tokens(text_col), num_hashes),
-        lambda sig: F.when(
-            sig.isNotNull(),
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            F.concat_ws(
-                                ",", *[F.element_at(sig, b * r + j + 1) for j in range(r)]
-                            )
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            ),
-        ),
-    )
-    # explode(null) emits nothing — empty-shingle docs drop out here;
-    # spread() keeps the hash-heavy projection core-parallel on small scans
-    banded = spread(df.select(id_col, text_col)).select(
-        id_col, F.explode(buckets).alias("bb")
-    ).select(id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .agg(F.count("*").alias("n_shared_bands"))
     )
 
 
@@ -208,136 +125,7 @@ def exact_jaccard_pairs(
     )
 
 
-def dedup_minhash(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.8,
-    num_hashes: int = 32,
-    bands: int = 8,
-) -> DataFrame:
-    """Near-duplicate removal: drop the higher-id doc of every verified pair.
-
-    (Connected-component clustering would drop transitive chains; the
-    pairwise rule matches common corpus-dedup practice and needs no
-    iterative joins.)
-    """
-    cands = minhash_lsh_candidates(df, text_col, id_col, num_hashes, bands)
-    dupes = (
-        exact_jaccard_pairs(df, cands, text_col, id_col)
-        .where(F.col("jaccard") >= threshold)
-        .select(F.col("id_b").alias(id_col))
-        .distinct()
-    )
-    return df.join(dupes, on=id_col, how="left_anti")
-
-
-# --- SimHash --------------------------------------------------------------
-
-
-def simhash_signatures(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """64-bit SimHash per document, Arrow-batched (numpy bit voting).
-
-    Python is unavoidable here (per-bit majority vote over token hashes);
-    mapInPandas keeps it vectorized per batch instead of per row.
-    """
-    import numpy as np
-
-    norm = spread(df.select(F.col(id_col), F.col(text_col))).select(
-        F.col(id_col), normalized_text(text_col).alias("_norm")
-    )
-
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_ids, out_sigs = [], []
-            for did, text in zip(pdf[id_col], pdf["_norm"]):
-                toks = text.split(" ") if text else []
-                if not toks:
-                    out_ids.append(did)
-                    out_sigs.append(0)
-                    continue
-                # deterministic 64-bit token hashes (stdlib-free, numpy only)
-                hs = np.array(
-                    [np.uint64(abs(hash64(t))) for t in toks], dtype=np.uint64
-                )
-                bits = ((hs[:, None] >> np.arange(64, dtype=np.uint64)) & np.uint64(1)).astype(
-                    np.int64
-                )
-                votes = (2 * bits - 1).sum(axis=0)
-                sig = np.uint64(0)
-                for i in np.nonzero(votes > 0)[0]:
-                    sig |= np.uint64(1) << np.uint64(i)
-                out_ids.append(did)
-                out_sigs.append(np.int64(sig.astype(np.int64)))
-            yield pd.DataFrame({id_col: out_ids, "simhash": out_sigs})
-
-    return norm.mapInPandas(compute, schema=f"{id_col} long, simhash long")
-
-
-def cluster_duplicates(
-    pairs: DataFrame,
-    max_iter: int = 10,
-    a_col: str = "id_a",
-    b_col: str = "id_b",
-) -> DataFrame:
-    """Connected components over a duplicate-pair graph → (doc_id, cluster_id).
-
-    Iterative min-label propagation over undirected edges; converges in
-    O(graph diameter) joins — duplicate clusters are shallow (near-clique),
-    so 2-4 iterations in practice. Each iteration is one shuffle on the
-    node id; the fixpoint check is a cheap count. For billion-edge graphs
-    swap in large-star/small-star; the contract (minimum member id becomes
-    the cluster id) stays identical.
-    """
-    edges = (
-        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        .unionByName(pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
-        .distinct()
-        # joined against every round; materialize once so an expensive
-        # candidate-pair build is not re-evaluated per iteration
-        .localCheckpoint(eager=False)
-    )
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("cluster_id", F.col("node"))
-    )
-    for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, edges.src == labels.node)
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.min("cluster_id").alias("nbr_min"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, "node", "left")
-            .select(
-                "node",
-                F.least(F.col("cluster_id"), F.coalesce("nbr_min", "cluster_id")).alias(
-                    "new_cluster_id"
-                ),
-                "cluster_id",
-            )
-        )
-        changed = new_labels.where(F.col("new_cluster_id") != F.col("cluster_id")).count()
-        labels = new_labels.select("node", F.col("new_cluster_id").alias("cluster_id"))
-        if changed == 0:
-            break
-        labels = labels.localCheckpoint()  # truncate the iterative lineage
-    else:
-        # exhausted max_iter with labels still moving: clusters whose graph
-        # diameter exceeds max_iter are SPLIT — transitive duplicates would
-        # silently survive a dedup built on this result, so say so loudly.
-        warnings.warn(
-            f"cluster_duplicates did not converge in {max_iter} iterations "
-            f"({changed} labels still changing); deep duplicate chains are "
-            "split. Raise max_iter, or use cluster_duplicates_star (O(log n) "
-            "rounds) for long-chain / billion-edge graphs.",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    return labels.select(F.col("node").alias("doc_id"), "cluster_id")
+# --- duplicate clusters ---------------------------------------------------
 
 
 def cluster_duplicates_star(
@@ -347,11 +135,10 @@ def cluster_duplicates_star(
     b_col: str = "id_b",
 ) -> DataFrame:
     """Connected components via alternating large-star / small-star rounds
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    same contract as :func:`cluster_duplicates` (min member id becomes the
-    cluster id) but O(log n) rounds instead of O(diameter), so a
-    billion-edge duplicate graph with deep chains converges in a handful
-    of shuffles where min-label propagation needs one per hop.
+    (Kiveris et al., "Connected Components in MapReduce and Beyond"): the
+    min member id becomes the cluster id, in O(log n) rounds instead of
+    min-label propagation's O(diameter), so a billion-edge duplicate graph
+    with deep chains converges in a handful of shuffles.
 
     Each round is two grouped aggregations on the node id; the fixpoint
     test compares (edge count, hash checksum) of the round's output — one
@@ -416,76 +203,6 @@ def cluster_duplicates_star(
     # the mins themselves are their own cluster ids
     return edges.select(F.col("u").alias("doc_id"), F.col("v").alias("cluster_id")).unionByName(
         edges.select(F.col("v").alias("doc_id"), F.col("v").alias("cluster_id")).distinct()
-    )
-
-
-def dedup_minhash_clustered(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.8,
-    num_hashes: int = 32,
-    bands: int = 8,
-) -> DataFrame:
-    """Transitive near-dup removal: keep the min-id doc of each connected
-    duplicate cluster (A~B, B~C ⇒ only A survives even when A~C was never
-    a candidate pair — the chain `dedup_minhash` would miss)."""
-    cands = minhash_lsh_candidates(df, text_col, id_col, num_hashes, bands)
-    verified = exact_jaccard_pairs(df, cands, text_col, id_col).where(
-        F.col("jaccard") >= threshold
-    )
-    clusters = cluster_duplicates(verified)
-    losers = clusters.where(F.col("doc_id") != F.col("cluster_id")).select(
-        F.col("doc_id").alias(id_col)
-    )
-    return df.join(losers, on=id_col, how="left_anti")
-
-
-def hash64(token: str) -> int:
-    """Deterministic 64-bit FNV-1a (Python's hash() is salted per-process —
-    unusable across executors)."""
-    h = 0xCBF29CE484222325
-    for ch in token.encode("utf-8"):
-        h = ((h ^ ch) * 0x100000001B3) & 0xFFFFFFFFFFFFFFFF
-    return h - 0x8000000000000000  # into signed-64 range
-
-
-def simhash_near_pairs(sigs: DataFrame, id_col: str = "doc_id", max_hamming: int = 3) -> DataFrame:
-    """Pairs with Hamming(sig_a, sig_b) ≤ max_hamming via 4×16-bit banding.
-
-    Pigeonhole: ≤3 differing bits over 4 chunks → at least one 16-bit chunk
-    equal, so candidates come from 4 equi-joins, not an all-pairs scan.
-    """
-    chunks = [
-        F.shiftrightunsigned(F.col("simhash"), i * 16).bitwiseAND(F.lit(0xFFFF)).alias(f"c{i}")
-        for i in range(4)
-    ]
-    banded = sigs.select(id_col, "simhash", *chunks).select(
-        id_col,
-        "simhash",
-        F.explode(
-            F.array(*[F.struct(F.lit(i).alias("band"), F.col(f"c{i}").alias("chunk")) for i in range(4)])
-        ).alias("bb"),
-    ).select(id_col, "simhash", F.col("bb.band").alias("band"), F.col("bb.chunk").alias("chunk"))
-    a, b = banded.alias("a"), banded.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col("a.simhash").alias("sig_a"),
-            F.col("b.simhash").alias("sig_b"),
-        )
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
-    return pairs.select("id_a", "id_b", hamming.alias("hamming")).where(
-        F.col("hamming") <= max_hamming
     )
 
 
@@ -737,39 +454,6 @@ def incremental_minhash_candidates(
     )
 
 
-def compact_band_index(
-    index_rows: DataFrame,
-    live_docs: DataFrame,
-    id_col: str = "doc_id",
-    version_col: str | None = None,
-) -> DataFrame:
-    """Expire dead rows from a persisted LSH band index.
-
-    :func:`incremental_minhash_candidates` appends each batch's band rows
-    to the index forever; two classes of rows go dead under re-ingest:
-    documents later DELETED upstream (id no longer live), and SUPERSEDED
-    versions — a re-ingested id whose new text produced new band rows,
-    leaving the old version's stale buckets colliding forever. Compaction
-    is a left-semi join against the live id set, plus (when the index
-    carries a ``version_col``, e.g. the ingest batch id) a semi-join on
-    each id's max version. Both joins shuffle on the id key only — no
-    re-shingling — so the maintenance loop runs this nightly next to file
-    compaction (tables/maintenance.py::compact_band_index_table).
-
-    ``live_docs`` is whatever defines liveness upstream (the current
-    documents table, or its id projection); duplicated ids there are
-    fine (semi-join semantics).
-    """
-    live = live_docs.select(F.col(id_col)).distinct()
-    out = index_rows.join(live, id_col, "left_semi")
-    if version_col is not None:
-        latest = index_rows.groupBy(id_col).agg(
-            F.max(version_col).alias(version_col)
-        )
-        out = out.join(latest, [id_col, version_col], "left_semi")
-    return out
-
-
 def minhash_lsh_candidates_portable(
     df: DataFrame,
     text_col: str = "text",
@@ -778,11 +462,12 @@ def minhash_lsh_candidates_portable(
     bands: int = 16,
     seed: int = 42,
 ) -> DataFrame:
-    """`minhash_lsh_candidates` under the portable hash family.
+    """MinHash LSH candidate pairs under the portable hash family.
 
-    Identical banding topology (explode → band-bucket equi-join → pair
-    groupBy); the bucket key is the band's value string instead of an
-    xxhash64 of it, so an external engine reproduces the exact pairs.
+    Band rows explode to (band, bucket), a band-bucket equi-join yields
+    the pairs and a pair groupBy counts shared bands; the bucket key is
+    the band's value string, so an external engine reproduces the exact
+    pairs.
     """
     banded = minhash_band_rows(df, text_col, id_col, num_hashes, bands, seed)
     a, b = banded.alias("a"), banded.alias("b")
@@ -804,9 +489,8 @@ def simhash_signatures_portable(
 
     Each token hashes once via md5; halves of the digest give two
     independent 32-bit hashes. The per-bit majority vote is an unrolled
-    `aggregate` per bit (constant plan size, whole-stage codegen) — unlike
-    :func:`simhash_signatures` there is NO Python boundary, so this is
-    also the faster path at scale, and the one the DuckDB oracle mirrors.
+    `aggregate` per bit (constant plan size, whole-stage codegen) with NO
+    Python boundary; the DuckDB oracle mirrors it.
     Columns: (id, sim_lo, sim_hi) — signed-safe 32-bit values in longs.
     """
     # explode tokens, then take the 64 per-bit majority votes as ONE
@@ -851,7 +535,8 @@ def simhash_near_pairs_portable(
     sigs: DataFrame, id_col: str = "doc_id", max_hamming: int = 3
 ) -> DataFrame:
     """Near pairs over split (sim_lo, sim_hi) signatures: 4×16-bit banding
-    equi-joins (pigeonhole, same as :func:`simhash_near_pairs`), Hamming =
+    equi-joins (pigeonhole: ≤3 differing bits over 4 chunks leave one
+    chunk equal), Hamming =
     popcount(lo⊕lo′) + popcount(hi⊕hi′)."""
     chunks = [
         F.shiftrightunsigned(F.col("sim_lo"), 0).bitwiseAND(F.lit(0xFFFF)).alias("c0"),

@@ -2,13 +2,13 @@
 
 The reference engine has no graph operators; this fills the "iterative
 algorithm" slot of the brief (the same driver-side loop pattern as
-dedup.cluster_duplicates' label propagation). Each iteration is one
+dedup.cluster_duplicates_star). Each iteration is one
 shuffle join (ranks ⋈ edges on src) + one shuffled aggregation (sum of
 contributions per dst) — both keyed on node ids, so an iteration is a
 linear pass at any scale. No per-iteration driver action: the dangling
 mass folds in as a broadcast 1-row aggregate, so the whole power
 iteration is one lazy plan, lineage-truncated with localCheckpoint every
-few rounds (the same guard dedup.cluster_duplicates uses).
+few rounds (the same guard dedup.cluster_duplicates_star uses).
 """
 
 from __future__ import annotations

@@ -2,12 +2,9 @@
 
 Images/audio/video are carried as ``binary`` columns with a metadata struct
 (the lakehouse-native pattern: payload in parquet, no filesystem
-side-channel). Decode/resize/frame-sample run as Arrow-batched
-``mapInPandas`` stages — the Spark-side contract (schema, batching,
-partition sizing) is real and tested; the codec call itself is pluggable
-because this container has no image/audio libraries (PIL/ffmpeg): the
-default decoder raises ``NotImplementedError`` and tests inject a
-deterministic fake codec.
+side-channel). Byte features and frame sampling run as Arrow-batched
+``mapInPandas`` stages over the raw payload bytes, so no image/audio
+codec (PIL/ffmpeg) is needed.
 
 Scale notes: binary payloads dominate row size — repartition by size
 budget (``target_partition_mb``) before any Python stage so Arrow batches
@@ -16,7 +13,7 @@ stay bounded; never collect payloads to the driver.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 
 import pandas as pd
 import pyspark.sql.functions as F
@@ -27,53 +24,6 @@ MEDIA_SCHEMA = (
 )
 
 FEATURE_SCHEMA = "media_id long, n_bytes long, entropy double, byte_mean double, header_hex string"
-
-
-def attach_media_metadata(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Cheap metadata without decoding: size + header signature (JVM-side)."""
-    return df.withColumn("n_bytes", F.length(payload_col)).withColumn(
-        "header_hex", F.hex(F.substring(F.col(payload_col), 1, 8))
-    )
-
-
-def default_decoder(payload: bytes, media_type: str):
-    raise NotImplementedError(
-        "no media codec available in this environment — inject a decoder "
-        "(e.g. PIL.Image.open / torchaudio.load) via decode_media(decoder=...)"
-    )
-
-
-def decode_media(
-    df: DataFrame,
-    decoder: Callable[[bytes, str], dict] = default_decoder,
-    payload_col: str = "payload",
-    type_col: str = "media_type",
-    id_col: str = "media_id",
-    target_partition_mb: int = 256,
-) -> DataFrame:
-    """Decode payloads to per-item feature dicts via Arrow-batched Python.
-
-    ``decoder(payload, media_type) -> {width, height, duration_ms}``.
-    Output schema is fixed so the plan is stable regardless of codec.
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload, mtype in zip(pdf[id_col], pdf[payload_col], pdf[type_col]):
-                meta = decoder(bytes(payload), mtype)
-                rows.append(
-                    {
-                        id_col: mid,
-                        "width": meta.get("width"),
-                        "height": meta.get("height"),
-                        "duration_ms": meta.get("duration_ms"),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[id_col, "width", "height", "duration_ms"])
-
-    sized = _bound_partitions(df.select(id_col, payload_col, type_col), payload_col, target_partition_mb)
-    return sized.mapInPandas(run, schema=f"{id_col} long, width int, height int, duration_ms int")
 
 
 def extract_byte_features(
@@ -121,7 +71,7 @@ def sample_frames(
     duration_col: str = "duration_ms",
 ) -> DataFrame:
     """Frame-sampling plumbing: one row per sampled timestamp (JVM explode);
-    the downstream decode of each frame is the pluggable codec stage."""
+    a downstream codec decodes each sampled frame."""
     n = (F.col(duration_col) / every_ms).cast("int")
     return df.select(
         id_col,
@@ -141,53 +91,3 @@ def _bound_partitions(df: DataFrame, payload_col: str, target_mb: int) -> DataFr
     parts = max(1, int(total / (target_mb * 1024 * 1024)) + 1)
     current = df.rdd.getNumPartitions()
     return df.repartition(parts) if parts > current else df
-
-
-def default_resizer(payload: bytes, media_type: str, width: int, height: int) -> bytes:
-    raise NotImplementedError(
-        "no media codec available in this environment — inject a resizer "
-        "(e.g. PIL thumbnail + re-encode) via resize_media(resizer=...)"
-    )
-
-
-def resize_media(
-    df: DataFrame,
-    width: int,
-    height: int,
-    resizer: Callable[[bytes, str, int, int], bytes] = default_resizer,
-    payload_col: str = "payload",
-    type_col: str = "media_type",
-    id_col: str = "media_id",
-    target_partition_mb: int = 256,
-) -> DataFrame:
-    """Resize/transcode payloads to a target resolution (Arrow-batched).
-
-    ``resizer(payload, media_type, width, height) -> bytes`` is the
-    pluggable codec stage; output keeps the binary-column shape
-    (id, payload, media_type, width, height) so resized media writes
-    straight back to a lakehouse table. Same partition-size bounding as
-    the other Python stages — batches stay ~``target_partition_mb``.
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_ids, out_payloads, out_types = [], [], []
-            for mid, payload, mtype in zip(pdf[id_col], pdf[payload_col], pdf[type_col]):
-                out_ids.append(mid)
-                out_payloads.append(resizer(bytes(payload), mtype, width, height))
-                out_types.append(mtype)
-            yield pd.DataFrame(
-                {
-                    id_col: out_ids,
-                    "payload": out_payloads,
-                    "media_type": out_types,
-                    "width": width,
-                    "height": height,
-                }
-            )
-
-    sized = _bound_partitions(df.select(id_col, payload_col, type_col), payload_col, target_partition_mb)
-    return sized.mapInPandas(
-        run,
-        schema=f"{id_col} long, payload binary, media_type string, width int, height int",
-    )

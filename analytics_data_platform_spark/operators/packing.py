@@ -29,7 +29,6 @@ from __future__ import annotations
 from collections.abc import Iterable
 
 import pandas as pd
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 
@@ -69,8 +68,3 @@ def pack_greedy(
         return pdf
 
     return slim.groupBy(*group_cols).applyInPandas(pack, schema=schema)
-
-
-def with_shard(df: DataFrame, id_col: str, n_shards: int, shard_col: str = "shard") -> DataFrame:
-    """Deterministic shard column for bounding pack-group size at scale."""
-    return df.withColumn(shard_col, F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_shards)).cast("int"))

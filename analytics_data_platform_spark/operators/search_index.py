@@ -14,7 +14,6 @@ full lifecycle —
     idx.compact()              # per-bucket small-file rewrite (atomic
                                # swaps, crash-recovered)
     idx.bm25(queries, k=10)    # ranked top-k reading ONLY query buckets
-    idx.lookup_all(terms)      # conjunctive AND, pruned
     idx.phrase(a, b)           # positional adjacency (mode="positional")
 
 Modes fix the posting layout at build time:
@@ -186,11 +185,6 @@ class SearchIndex:
         return meta
 
     # -- build / ingest ---------------------------------------------------
-
-    def _rows(self, docs: DataFrame) -> tuple[DataFrame, dict]:
-        """Posting rows for this mode (+ the batch's exact stats totals)."""
-        postings = self._posting_frame(docs)
-        return postings, self._batch_totals(docs)
 
     def _posting_frame(self, docs: DataFrame) -> DataFrame:
         if self.mode == "scored":
@@ -562,27 +556,6 @@ class SearchIndex:
         want = self._bucket_of(terms)
         return self.spark.read.parquet(self.postings_dir).where(
             F.col("bucket").isin(*want)
-        )
-
-    def lookup_all(self, terms: list[str]) -> DataFrame:
-        """Conjunctive AND: (doc_id, source) of documents containing EVERY
-        term — reads ≤ |terms| bucket directories."""
-        if self.mode == "scored":
-            raise ValueError(
-                "lookup_all() needs mode='boolean' or 'positional' "
-                "(scored postings don't carry source)"
-            )
-        terms = sorted(set(terms))
-        return (
-            self._served(self._pruned(terms))
-            .where(F.col("term").isin(*terms))
-            .groupBy("doc_id")
-            .agg(
-                F.count_distinct("term").alias("_nt"),
-                F.max("source").alias("source"),
-            )
-            .where(F.col("_nt") == len(terms))
-            .select("doc_id", "source")
         )
 
     def phrase(self, first: str, second: str) -> DataFrame:

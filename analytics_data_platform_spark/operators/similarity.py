@@ -79,47 +79,6 @@ def local_topk(
     )
 
 
-def local_topk_mapside(
-    scored: DataFrame,
-    k: int,
-    q_id_col: str = "q_id",
-    id_col: str = "vec_id",
-    score_col: str = "cos_sim",
-) -> DataFrame:
-    """Phase 1 with ZERO-shuffle map-side pruning (``mapInPandas``).
-
-    The JVM ``local_topk`` groups on (partition_id, q_id): the aggregation
-    collapses each group to one row before the exchange, but that row
-    carries the group's FULL candidate list packed as an array — shuffle
-    bytes stay O(candidates). This variant prunes inside the map task
-    with bounded state (a running top-k per query, folded batch by
-    batch), so only k rows per (partition, query) ever leave the task:
-    shuffle rows AND bytes are O(k × partitions × queries).
-
-    Tradeoff: crosses the Python boundary (Arrow-batched; three scalar
-    columns only). Prefer it when per-partition candidate volume is much
-    larger than k — the 100-TB brute-force scan — and the JVM form when
-    candidates are already thin (post-LSH/IVF pruning).
-    """
-    slim = scored.select(q_id_col, id_col, score_col)
-    schema = slim.schema
-
-    def prune(batches):
-        best: dict = {}  # q_id -> pdf of current top-k
-        for pdf in batches:
-            for q, grp in pdf.groupby(q_id_col, sort=False):
-                cur = best.get(q)
-                merged = grp if cur is None else pd.concat((cur, grp), ignore_index=True)
-                merged = merged.sort_values(
-                    [score_col, id_col], ascending=[False, True], kind="mergesort"
-                )
-                best[q] = merged.head(k)
-        if best:
-            yield pd.concat(best.values(), ignore_index=True)
-
-    return slim.mapInPandas(prune, schema=schema)
-
-
 def topk_per_query(
     scored: DataFrame,
     k: int,
@@ -127,7 +86,6 @@ def topk_per_query(
     id_col: str = "vec_id",
     score_col: str = "cos_sim",
     rank_col: str = "rank",
-    prune: str = "jvm",
 ) -> DataFrame:
     """Exact top-k per query in two phases.
 
@@ -135,16 +93,8 @@ def topk_per_query(
     so the single-task-per-query sort that kills the naive plan at scale
     is over a bounded, tiny input. Result is identical to the one-window
     form (same total order, including tie-breaks).
-
-    ``prune`` picks phase 1: ``"jvm"`` (codegen'd, whole-stage, shuffles
-    packed per-group arrays) or ``"arrow"`` (``local_topk_mapside``:
-    Python boundary but only k rows per partition per query cross the
-    wire — the right choice for full-corpus scans at 100 TB).
     """
-    if prune not in ("jvm", "arrow"):
-        raise ValueError(f"prune {prune!r} not in ('jvm', 'arrow')")
-    phase1 = local_topk if prune == "jvm" else local_topk_mapside
-    pruned = phase1(scored, k, q_id_col, id_col, score_col)
+    pruned = local_topk(scored, k, q_id_col, id_col, score_col)
     w = Window.partitionBy(q_id_col).orderBy(
         F.desc_nulls_last(score_col), F.asc(id_col)
     )
@@ -481,29 +431,6 @@ def ivf_table_topk_sq8(
     return topk_per_query(scored, k, q_id_col, id_col, "cos_sim")
 
 
-def write_ivf_table(
-    io,
-    corpus: DataFrame,
-    table: str,
-    centroids: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Persist the corpus as an IVF index IN THE TABLE LAYOUT: rows are
-    partitioned by nearest-centroid cell, so the inverted lists are
-    parquet partitions and a probe is a partition prune, not a scan.
-
-    This is the 100 TB form of the index — Faiss keeps inverted lists in
-    RAM; a lakehouse keeps them as partition directories that any engine
-    (and Spark's dynamic partition pruning) can skip without reading."""
-    if len(centroids) > MAX_LITERAL_CENTROIDS:
-        cell = assign_centroid_udf(centroids)(F.col(vec_col))
-    else:
-        cell = assign_centroid_col(vec_col, centroids)
-    df = spread(corpus).withColumn("_cell", cell.cast("int"))
-    io.write_table(df, table, mode="replace", partition_spec={"_cell": "identity"})
-
-
 def ivf_table_topk(
     io,
     table: str,
@@ -517,7 +444,8 @@ def ivf_table_topk(
     q_vec_col: str = "q_emb",
     score_round: int | None = None,
 ) -> DataFrame:
-    """IVF search against a :func:`write_ivf_table` layout.
+    """IVF search against a cell-partitioned table layout (one ``_cell``
+    partition per centroid, as ``VectorIndex`` writes it).
 
     The probe side (queries × nprobe cells) broadcasts; joining it to the
     table on the PARTITION column lets dynamic partition pruning skip
@@ -620,407 +548,6 @@ def lsh_near_dup_pairs(
         .select("id_a", "id_b", score.alias("cos_sim"))
         .where(F.col("cos_sim") >= threshold)
     )
-
-
-# --- multi-probe LSH ------------------------------------------------------
-
-
-def _probe_signatures(vec_col: str, planes: list[list[float]], n_probes: int) -> Column:
-    """Array of probe signatures: the base sign-bit signature plus
-    ``n_probes`` variants with the LEAST-CONFIDENT bit flipped (smallest
-    |projection| — the standard multi-probe heuristic). All JVM HOFs.
-    """
-    n = len(planes)
-    dots = F.array(
-        *[dot(F.col(vec_col), F.array(*[F.lit(float(x)) for x in p])) for p in planes]
-    )
-    # bit characters of the base signature, as an array for per-index flips
-    bits = F.transform(dots, lambda d: F.when(d >= 0, "1").otherwise("0"))
-    # plane indices ordered by |projection| ascending (least confident first)
-    order = F.transform(
-        F.array_sort(
-            F.zip_with(
-                F.transform(dots, lambda d: F.abs(d)),
-                F.sequence(F.lit(0), F.lit(n - 1)),
-                lambda a, i: F.struct(a.alias("a"), i.alias("i")),
-            )
-        ),
-        lambda s: s["i"],
-    )
-    flips = F.slice(order, 1, n_probes)
-    probes = F.concat(
-        F.array(F.array_join(bits, "")),
-        F.transform(
-            flips,
-            lambda fi: F.array_join(
-                F.zip_with(
-                    bits,
-                    F.sequence(F.lit(0), F.lit(n - 1)),
-                    lambda ch, k: F.when(k == fi, F.when(ch == "1", "0").otherwise("1")).otherwise(ch),
-                ),
-                "",
-            ),
-        ),
-    )
-    return probes
-
-
-def lsh_topk_multiprobe(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    n_bits: int = 12,
-    n_probes: int = 2,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    q_id_col: str = "q_id",
-    q_vec_col: str = "q_emb",
-    seed: int = 42,
-    score_round: int | None = None,
-) -> DataFrame:
-    """Multi-probe LSH top-k: each query probes its own bucket plus the
-    ``n_probes`` buckets reached by flipping its least-confident sign bits.
-
-    Recall rises toward brute-force at the cost of (n_probes+1)× the probe
-    rows on the (broadcast, tiny) query side — the corpus side is still
-    hashed ONCE and joined by signature equality, so the scan/shuffle
-    profile is identical to single-probe; candidates stay deduplicated by
-    construction (probe signatures of one query are distinct, and a corpus
-    vector has exactly one signature).
-    """
-    planes = _hyperplanes(dim, n_bits, seed)
-    c = spread(corpus).withColumn("_sig", lsh_signature_col(vec_col, planes))
-    q = queries.select(
-        q_id_col,
-        q_vec_col,
-        F.explode(_probe_signatures(q_vec_col, planes, n_probes)).alias("_qsig"),
-    )
-    score = cosine(q_vec_col, vec_col)
-    if score_round is not None:
-        score = F.round(score, score_round)
-    scored = c.join(
-        F.broadcast(q),
-        (F.col("_sig") == F.col("_qsig")) & (F.col(id_col) != F.col(q_id_col)),
-    ).select(q_id_col, id_col, score.alias("cos_sim"))
-    return topk_per_query(scored, k, q_id_col, id_col, "cos_sim")
-
-
-# --- product quantization (PQ) --------------------------------------------
-
-
-def _kmeans_np(vecs, k: int, max_iter: int, seed: int):
-    rng = np.random.RandomState(seed)
-    cents = vecs[rng.choice(len(vecs), size=min(k, len(vecs)), replace=False)].astype(np.float64)
-    for _ in range(max_iter):
-        d = ((vecs[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-        assign = d.argmin(axis=1)
-        for c in range(len(cents)):
-            members = vecs[assign == c]
-            if len(members):
-                cents[c] = members.mean(axis=0)
-    return cents
-
-
-def train_pq_codebooks(
-    corpus: DataFrame,
-    m: int = 8,
-    k: int = 16,
-    dim: int = 64,
-    vec_col: str = "embedding",
-    max_iter: int = 10,
-    seed: int = 42,
-) -> list[list[list[float]]]:
-    """Product-quantization codebooks: split the vector into ``m``
-    subspaces of dim/m and k-means each on a bounded driver sample —
-    Faiss-style PQ training (driver memory O(sample), like IVF)."""
-    if dim % m:
-        raise ValueError("dim must be divisible by m")
-    dsub = dim // m
-    vecs = np.array(corpus.select(vec_col).limit(k * 256).toPandas()[vec_col].tolist())
-    books = []
-    for j in range(m):
-        sub = vecs[:, j * dsub : (j + 1) * dsub]
-        books.append(_kmeans_np(sub, k, max_iter, seed + j).round(6).tolist())
-    return books
-
-
-def pq_encode_col(vec_col: str, codebooks: list[list[list[float]]]):
-    """Code array (m int8-range entries): per-subspace argmin over the
-    sub-codebook — pure JVM literal expressions (m×k×dsub literal nodes;
-    at Faiss-scale k=256 switch to a pandas_udf as with IVF centroids)."""
-    m = len(codebooks)
-    dsub = len(codebooks[0][0])
-    codes = []
-    for j, book in enumerate(codebooks):
-        sub = F.slice(F.col(vec_col), j * dsub + 1, dsub)
-        dists = [
-            F.aggregate(
-                F.zip_with(
-                    sub,
-                    F.array(*[F.lit(float(x)) for x in cent]),
-                    lambda a, b: (a - b) * (a - b),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            for cent in book
-        ]
-        best = F.array_position(
-            F.array(*dists), F.array_min(F.array(*dists))
-        ) - 1  # 0-based code
-        codes.append(best.cast("int"))
-    return F.array(*codes)
-
-
-def pq_topk(
-    corpus: DataFrame,
-    queries: list[tuple[int, list[float]]],
-    codebooks: list[list[list[float]]],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    refine: int = 4,
-) -> DataFrame:
-    """Approximate top-k by asymmetric distance computation (ADC).
-
-    The corpus is scanned ONCE as compact codes (m bytes per vector, a
-    64x compression at m=8 over 64 floats); each query contributes an
-    m×k lookup table of exact partial distances (computed on the driver
-    with numpy), and the scan scores a vector as the sum of m table
-    lookups — no float vector math per candidate. Selection is the same
-    two-phase top-k as every other ANN path. This is the memory-bound
-    regime's answer at 100 TB: the code table fits where raw vectors
-    cannot.
-
-    ``refine`` (Faiss-style refine stage): ADC quantization cannot rank
-    within a tight cluster — many vectors share identical codes, so the
-    top-k boundary is an arbitrary tie-break. The scan therefore keeps
-    ``k × refine`` ADC candidates per query and re-ranks ONLY those with
-    exact L2 against the raw vectors (a semi-join back to the corpus —
-    touches k×refine×queries vectors, not the corpus). ``refine=1``
-    disables re-ranking (pure ADC).
-    """
-    m = len(codebooks)
-    dsub = len(codebooks[0][0])
-    coded = spread(corpus).select(id_col, pq_encode_col(vec_col, codebooks).alias("_codes"))
-
-    rows = []
-    for q_id, q in queries:
-        qv = np.asarray(q, dtype=np.float64)
-        lut = [
-            [
-                float(((qv[j * dsub : (j + 1) * dsub] - np.asarray(c)) ** 2).sum())
-                for c in codebooks[j]
-            ]
-            for j in range(m)
-        ]
-        rows.append((q_id, lut))
-    luts = corpus.sparkSession.createDataFrame(
-        rows, f"q_id long, lut array<array<double>>"
-    )
-
-    adc = F.aggregate(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        F.lit(0.0),
-        lambda acc, j: acc
-        + F.element_at(
-            F.element_at("lut", j + 1), F.element_at("_codes", j + 1) + 1
-        ),
-    )
-    scored = coded.join(F.broadcast(luts)).select(
-        "q_id", id_col, F.round(-adc, 6).alias("neg_dist")
-    )
-    if refine <= 1:
-        return topk_per_query(scored, k, "q_id", id_col, "neg_dist")
-
-    cands = topk_per_query(scored, k * refine, "q_id", id_col, "neg_dist").select(
-        "q_id", id_col
-    )
-    qdf = corpus.sparkSession.createDataFrame(
-        [(qid, [float(x) for x in qv]) for qid, qv in queries],
-        "q_id long, q_emb array<double>",
-    )
-    exact = (
-        cands.join(corpus.select(id_col, vec_col), id_col)
-        .join(F.broadcast(qdf), "q_id")
-        .select(
-            "q_id",
-            id_col,
-            F.round(
-                -F.aggregate(
-                    F.zip_with(
-                        F.col(vec_col).cast("array<double>"),
-                        "q_emb",
-                        lambda a, b: (a - b) * (a - b),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ),
-                6,
-            ).alias("neg_dist"),
-        )
-    )
-    return topk_per_query(exact, k, "q_id", id_col, "neg_dist")
-
-
-def ivfpq_topk(
-    corpus: DataFrame,
-    queries: list[tuple[int, list[float]]],
-    centroids: list[list[float]],
-    codebooks: list[list[list[float]]],
-    k: int = 10,
-    nprobe: int = 4,
-    refine: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF-PQ: coarse cell pruning, then ADC over codes, then exact
-    refine — the composition Faiss ships as its workhorse index.
-
-    The scan touches only the ``nprobe`` nearest cells per query (at
-    scale: partition pruning on a ``_cell``-partitioned table), scores
-    survivors from m-byte PQ codes via per-query lookup tables, and
-    re-ranks the k×refine ADC winners with exact L2. Each stage reuses
-    the standalone operator (assign_centroid / pq_encode_col / two-phase
-    top-k) — this function is only the composition.
-    """
-    m = len(codebooks)
-    dsub = len(codebooks[0][0])
-    assigned = spread(corpus).withColumn("_cell", assign_centroid_col(vec_col, centroids))
-    coded = assigned.select(
-        id_col, "_cell", pq_encode_col(vec_col, codebooks).alias("_codes")
-    )
-
-    cents = np.asarray(centroids, dtype=np.float64)
-    rows = []
-    for q_id, q in queries:
-        qv = np.asarray(q, dtype=np.float64)
-        cells = np.argsort(((cents - qv) ** 2).sum(axis=1))[:nprobe]
-        lut = [
-            [
-                float(((qv[j * dsub : (j + 1) * dsub] - np.asarray(c)) ** 2).sum())
-                for c in codebooks[j]
-            ]
-            for j in range(m)
-        ]
-        for cell in cells:
-            rows.append((q_id, int(cell), lut))
-    probes = corpus.sparkSession.createDataFrame(
-        rows, "q_id long, _cell int, lut array<array<double>>"
-    )
-
-    adc = F.aggregate(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        F.lit(0.0),
-        lambda acc, j: acc
-        + F.element_at(F.element_at("lut", j + 1), F.element_at("_codes", j + 1) + 1),
-    )
-    scored = coded.join(F.broadcast(probes), "_cell").select(
-        "q_id", id_col, F.round(-adc, 6).alias("neg_dist")
-    )
-    cands = topk_per_query(scored, k * refine, "q_id", id_col, "neg_dist").select(
-        "q_id", id_col
-    )
-    qdf = corpus.sparkSession.createDataFrame(
-        [(qid, [float(x) for x in qv]) for qid, qv in queries],
-        "q_id long, q_emb array<double>",
-    )
-    exact = (
-        cands.join(corpus.select(id_col, vec_col), id_col)
-        .join(F.broadcast(qdf), "q_id")
-        .select(
-            "q_id",
-            id_col,
-            F.round(
-                -F.aggregate(
-                    F.zip_with(
-                        F.col(vec_col).cast("array<double>"),
-                        "q_emb",
-                        lambda a, b: (a - b) * (a - b),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ),
-                6,
-            ).alias("neg_dist"),
-        )
-    )
-    return topk_per_query(exact, k, "q_id", id_col, "neg_dist")
-
-
-def brute_force_topk_numpy(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    q_id_col: str = "q_id",
-    q_vec_col: str = "q_emb",
-) -> DataFrame:
-    """Exact cosine top-k with a FUSED Arrow scorer: one ``mapInPandas``
-    pass does the dense math (numpy matmul against the in-closure query
-    matrix) AND the phase-1 top-k prune, so only k rows per (partition,
-    query) ever shuffle.
-
-    The JVM path (:func:`brute_force_topk`) evaluates the dot product as
-    an interpreted higher-order-function fold per pair — fine for narrow
-    query sets, but dense linear algebra is where vectorized BLAS wins:
-    one b×d @ d×q matmul per Arrow batch replaces b·q interpreted folds.
-    The query set must be small (it is collected into the closure — the
-    same boundedness assumption F.broadcast makes on the JVM path).
-
-    Scores are rounded to 4dp with id tie-break before ranking — the
-    contract of the oracle-pinned registry query (queries.vector_ops.
-    ann_cosine_topk), so this path is its drop-in accelerated twin. The
-    raw :func:`brute_force_topk` ranks on UNROUNDED scores and may order
-    4dp-ties differently.
-    """
-    q_rows = queries.select(q_id_col, q_vec_col).collect()
-    if not q_rows:
-        return brute_force_topk(corpus, queries, k, id_col, vec_col, q_id_col, q_vec_col)
-    q_ids = np.array([r[0] for r in q_rows])
-    Q = np.asarray([r[1] for r in q_rows], dtype=np.float64)  # nq×d
-    qn = np.linalg.norm(Q, axis=1)
-    qn[qn == 0.0] = np.inf  # zero-norm query scores 0 everywhere
-    Qt = Q.T
-
-    out_schema = f"{q_id_col} long, {id_col} long, cos_sim double"
-
-    def score(batches):
-        best: dict = {}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.asarray(list(pdf[vec_col]), dtype=np.float64)  # b×d
-            vn = np.linalg.norm(V, axis=1)
-            vn[vn == 0.0] = np.inf
-            S = (V @ Qt) / vn[:, None] / qn[None, :]  # b×nq
-            ids = pdf[id_col].to_numpy()
-            for j, qid in enumerate(q_ids):
-                s = np.round(S[:, j], 4)
-                keep = ids != qid  # exclude self-match
-                grp = pd.DataFrame(
-                    {q_id_col: qid, id_col: ids[keep], "cos_sim": s[keep]}
-                )
-                cur = best.get(qid)
-                merged = (
-                    grp
-                    if cur is None
-                    else pd.concat((cur, grp), ignore_index=True)
-                )
-                merged = merged.sort_values(
-                    ["cos_sim", id_col], ascending=[False, True], kind="mergesort"
-                )
-                best[qid] = merged.head(k)
-        if best:
-            yield pd.concat(best.values(), ignore_index=True)
-
-    pruned = spread(corpus.select(id_col, vec_col)).mapInPandas(score, out_schema)
-    w = Window.partitionBy(q_id_col).orderBy(
-        F.desc_nulls_last("cos_sim"), F.asc(id_col)
-    )
-    return pruned.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
 def self_nearest_neighbor(

@@ -155,7 +155,7 @@ N_STATE_BUCKETS = 64
 # range shuffle into one all-bucket file (which would defeat the manifest
 # pruning); each file then covers ~N_STATE_BUCKETS/8 buckets. Production
 # tunes this toward one file per bucket as state grows — the maintenance
-# compactor and zorder rewrite keep file counts bounded either way.
+# compactor keeps file counts bounded either way.
 _CLUSTER_FILES = 8
 _LIVE_COLS = (*_DOC_COLS, "_fp", "_fpb")
 
@@ -411,8 +411,8 @@ def _merge_parts(
     clean: DataFrame,
 ) -> dict[str, DataFrame]:
     """The FULL-STATE construction — the semantic spec the delta
-    decomposition must equal (used by :func:`merge_corpus_state`, whose
-    outputs tests compare against the executed delta path). No I/O."""
+    decomposition must equal (the body of :func:`merge_corpus_state`).
+    No I/O."""
     # 1) exact-dedup merge: min-id keeper per fingerprint over old ∪ new —
     #    associative, so the merged keeper set equals the one-shot's
     live = (
@@ -435,8 +435,8 @@ def _merge_parts(
     #    Both frames have TWO consumers (the index output and the
     #    candidate join) — checkpoint so the expensive shingle+minhash of
     #    the new docs runs once, not twice
-    compacted = dedup.compact_band_index(
-        old_index, live.select("doc_id")
+    compacted = old_index.join(
+        live.select("doc_id"), "doc_id", "left_semi"
     ).localCheckpoint(eager=False)
     new_rows = dedup.minhash_band_rows(
         newly_live, assume_wide=True  # downstream of the merge groupBy
@@ -478,7 +478,7 @@ def merge_corpus_state(
     """The pure full-state merge plan: (old_live, old_index, old_pairs) × a
     CLEANED batch → (live, band_index, pairs). No I/O — this is the
     SEMANTIC spec the executed delta commit must equal; tests audit these
-    plans and compare their results against the delta path."""
+    plans for scale hazards."""
     m = _merge_parts(old_live, old_index, old_pairs, clean)
     band_index = m["compacted"].unionByName(m["new_rows"])
     # join-on-id_b reorders columns; normalize before the union/write
@@ -857,8 +857,8 @@ def takedown_state_plan(
     live = _with_fp(old_live).join(td_fps, "_fp", "left_anti").select(
         *[c for c in old_live.columns]
     )
-    band_index = dedup.compact_band_index(old_index, live.select("doc_id"))
     live_ids = live.select("doc_id")
+    band_index = old_index.join(live_ids, "doc_id", "left_semi")
     pairs = (
         old_pairs.join(
             live_ids.withColumnRenamed("doc_id", "id_a"), "id_a", "left_semi"

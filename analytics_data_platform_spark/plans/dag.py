@@ -67,25 +67,15 @@ def expression(name: str, expr: str) -> DataTest:
 
 class Refs:
     """Resolver passed to model build functions: ``ref(name)`` and
-    ``source(schema, table)`` return DataFrames.
-
-    For ``materialized='incremental'`` models the runner also binds dbt's
-    incremental context: :meth:`is_incremental` is True when the target
-    table already exists (and the run is not a full refresh), ``this`` is
-    the existing target, and :meth:`high_water` is the scalar
-    ``max(col)`` of the target — the same watermark-discovery the ELT
-    runner performs (SURVEY A5), so a build fn can write the canonical
-    dbt pattern ``src.where(col > refs.high_water(col))``."""
+    ``source(schema, table)`` return DataFrames."""
 
     def __init__(
         self,
         built: dict[str, DataFrame],
         sources: dict[tuple[str, str], DataFrame],
-        this: DataFrame | None = None,
     ):
         self._built = built
         self._sources = sources
-        self._this = this
 
     def ref(self, name: str) -> DataFrame:
         if name not in self._built:
@@ -98,22 +88,6 @@ class Refs:
             raise KeyError(f"source {schema}.{table} not provided")
         return self._sources[key]
 
-    def is_incremental(self) -> bool:
-        return self._this is not None
-
-    @property
-    def this(self) -> DataFrame:
-        if self._this is None:
-            raise ValueError("this is only bound on incremental runs")
-        return self._this
-
-    def high_water(self, col: str):
-        """``max(col)`` of the existing target, or None on the first /
-        full-refresh run (one scalar aggregate — never a row collect)."""
-        if self._this is None:
-            return None
-        return self._this.agg(F.max(col).alias("w")).collect()[0]["w"]
-
 
 @dataclass
 class Model:
@@ -121,17 +95,10 @@ class Model:
     build: Callable[[SparkSession, Refs], DataFrame]
     deps: tuple[str, ...] = ()
     sources: tuple[tuple[str, str], ...] = ()
-    materialization: str = "view"  # view | table | incremental
+    materialization: str = "view"  # view | table (dbt_project.yml:33-42)
     partition: dict[str, str] | None = None
     sort: list[str] | None = None
     tests: list[DataTest] = field(default_factory=list)
-    # incremental only: merge keys (dbt unique_key). With keys the delta
-    # MERGEs into the target (row-level provider or staged rewrite —
-    # TableIO routes); without, it appends. The reference's transform
-    # layer rebuilds every table per run (dbt_project.yml:33-42 view |
-    # table) — fine on its single-node warehouse, a full-fact rewrite at
-    # 100 TB; incremental is the Spark-first scale materialization.
-    unique_key: tuple[str, ...] | None = None
 
 
 @dataclass
@@ -205,21 +172,13 @@ class TransformDag:
         target_namespace: str | None = None,
         io: TableIO | None = None,
         run_tests: bool = True,
-        full_refresh: bool = False,
     ) -> dict[str, DataFrame]:
         """Build models in dependency order; returns name → DataFrame.
 
         ``overrides`` short-circuits a model with a fixture DataFrame (dbt
         unit-test semantics). With ``target_namespace``, table-materialized
         models are written through TableIO (replace semantics, partition +
-        write-sort specs) and downstream models read the written table;
-        incremental models get dbt semantics — first (or
-        ``full_refresh=True``) run replaces, subsequent runs bind
-        ``refs.is_incremental()/this/high_water`` and append the built
-        delta, or MERGE it when the model declares ``unique_key``.
-        Without a target namespace an incremental model degrades to a
-        per-run full build (is_incremental() stays False) — dbt's own
-        ephemeral/unit-test behavior.
+        write-sort specs) and downstream models read the written table.
         """
         built: dict[str, DataFrame] = dict(overrides or {})
         io = io or (TableIO(spark) if target_namespace else None)
@@ -231,43 +190,9 @@ class TransformDag:
             if name in built:
                 continue
             model = self.models[name]
-            incremental = (
-                model.materialization == "incremental"
-                and target_namespace is not None
-                and io is not None
-            )
-            table = f"{target_namespace}.{name}" if target_namespace else None
-            this = (
-                io.read(table)
-                if incremental and not full_refresh and io.table_exists(table)
-                else None
-            )
-            refs = Refs(built, sources or {}, this=this)
-            df = model.build(spark, refs)
-            if incremental:
-                if this is None:
-                    io.write_table(
-                        df, table, mode="replace",
-                        partition_spec=model.partition, sort_spec=model.sort,
-                    )
-                elif model.unique_key:
-                    io.write_table(
-                        df, table, mode="merge",
-                        merge_on=list(model.unique_key),
-                        partition_spec=model.partition, sort_spec=model.sort,
-                    )
-                else:
-                    io.write_table(
-                        df, table, mode="append",
-                        partition_spec=model.partition, sort_spec=model.sort,
-                    )
-                # catalog TableIO needs a reader-cache refresh after the
-                # in-place merge rewrite; SnapshotTableIO (duck-typed —
-                # manifest commits are new files) has no such cache
-                if hasattr(io, "invalidate_caches"):
-                    io.invalidate_caches(table)
-                df = io.read(table)
-            elif model.materialization == "table" and target_namespace and io:
+            df = model.build(spark, Refs(built, sources or {}))
+            if model.materialization == "table" and target_namespace and io:
+                table = f"{target_namespace}.{name}"
                 io.write_table(
                     df,
                     table,
@@ -289,19 +214,6 @@ class TransformDag:
             for name in self.order(select)
             for src in self.models[name].sources
         }
-
-    def catalog_sources(
-        self, spark: SparkSession, select: list[str] | None = None
-    ) -> dict[tuple[str, str], DataFrame]:
-        """Bind every required source to its landing catalog table
-        ``{schema}.{table}`` (the ``{domain}_{job}`` namespaces the elt
-        runner writes — SURVEY §1.1). Missing landing tables are skipped so
-        a partial warehouse can still run its available subgraph."""
-        out: dict[tuple[str, str], DataFrame] = {}
-        for schema, table in self.required_sources(select):
-            if spark.catalog.tableExists(f"{schema}.{table}"):
-                out[(schema, table)] = spark.table(f"{schema}.{table}")
-        return out
 
     def _test_model(
         self, model: Model, df: DataFrame, built: dict[str, DataFrame] | None = None

@@ -206,7 +206,7 @@ register(
         kmeans_embeddings,
         _kmeans_sql(),
         doc="distributed Lloyd's k-means (3 iterations, integer-exact) on embeddings",
-        cites="iterative-ML family; operators/similarity.py trains codebooks the same way",
+        cites="iterative-ML family; queries/vector_ops.py pq_adc_topk trains codebooks the same way",
         tags=("ml", "iterative", "vector"),
     )
 )

@@ -14,9 +14,9 @@ and verify everything the Spark side computes about them:
 - ``multimodal_frame_sample`` drives the JVM ``sample_frames`` explode
   and verifies the sampled-frame counts/timestamps.
 
-The codec-requiring stages (decode_media/resize_media) stay env-gated
-pytest with injected fakes — no image/audio libraries in this container
-(reference analogue: the binary file handling of S7/S10).
+Codec-requiring stages (decode/resize) are not implemented — no
+image/audio libraries in this container (reference analogue: the binary
+file handling of S7/S10).
 """
 
 from __future__ import annotations

@@ -217,7 +217,7 @@ register(
         incremental_pipeline_refresh,
         _pipeline_sql(),
         doc="streaming incremental corpus refresh (2 foreachBatch ticks: dedup-state merge, band-index compaction, incremental LSH); provably equals the one-shot pipeline SQL",
-        cites="pipelines/incremental.py; operators/dedup.py incremental_minhash_candidates+compact_band_index; ref elt-common/src/elt_common/runner.py:67-107 incremental watermark machinery",
+        cites="pipelines/incremental.py; operators/dedup.py incremental_minhash_candidates; ref elt-common/src/elt_common/runner.py:67-107 incremental watermark machinery",
         tags=("training", "pipeline", "dedup", "streaming", "scale", "multi_tick"),
         internal_plan=_refresh_internal_plans,
     )

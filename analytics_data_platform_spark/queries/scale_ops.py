@@ -460,7 +460,7 @@ register(
         ivf_index_incremental_topk,
         _ivf_sql(),
         doc="incremental IVF index maintenance: pinned-centroid batch assignment + partition-wise append; provably equals the one-shot build (oracle = ann_ivf_topk SQL)",
-        cites="operators/similarity.py write_ivf_table/ivf_table_topk; ref elt-common/src/elt_common/runner.py:67-107 incremental append machinery",
+        cites="operators/similarity.py ivf_table_topk; ref elt-common/src/elt_common/runner.py:67-107 incremental append machinery",
         tags=("vector", "approx", "incremental", "scale", "multi_tick"),
         internal_plan=_ivf_incremental_internal,
     )

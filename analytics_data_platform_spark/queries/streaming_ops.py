@@ -28,9 +28,8 @@ batch registry:
   incremental result provably equal the oracle's one-shot collapse.
 
 If the streaming engine dropped, duplicated, or mis-windowed anything,
-the value hash against the batch oracle catches it. (Multi-drain replay
-semantics beyond these, exactly-once sinks and state eviction details
-stay in tests/test_streaming.py.)
+the value hash against the batch oracle catches it. (Stream-stream join
+state eviction and outer-join emission stay in tests/test_streaming.py.)
 """
 
 from __future__ import annotations
@@ -163,7 +162,7 @@ register(
         streaming_hourly_type_counts,
         STREAM_HOURLY_SQL,
         doc="hourly event counts computed by Structured Streaming (availableNow), batch-oracle hash-verified",
-        cites="streaming/streams.py windowed aggregation; SURVEY §2.10 streaming family",
+        cites="streaming_hourly_type_counts: watermarked tumbling-window aggregation; SURVEY §2.10 streaming family",
         tags=("streaming",),
     )
 )
@@ -267,7 +266,7 @@ register(
         streaming_watermark_dedup_counts,
         STREAM_DEDUP_SQL,
         doc="append-mode watermarked streaming dedup across two checkpointed drains, batch-oracle hash-verified",
-        cites="streaming/streams.py watermark path; SURVEY §2.10 out-of-order/replay family",
+        cites="streaming_watermark_dedup_counts: dropDuplicatesWithinWatermark; SURVEY §2.10 out-of-order/replay family",
         tags=("streaming",),
     )
 )
@@ -399,7 +398,7 @@ register(
         streaming_session_windows,
         STREAM_SESSION_SQL,
         doc="streaming session_window aggregation (append mode + watermark closure), batch-oracle hash-verified",
-        cites="streaming/streams.py sessionize_stream; SURVEY §2.10 streaming family",
+        cites="streaming_session_windows: session_window gap semantics; batch twin queries/relational.py sessionize_events; SURVEY §2.10 streaming family",
         tags=("streaming",),
     )
 )
@@ -523,10 +522,9 @@ def streaming_stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataF
     ``applyInPandasWithState`` per-user running totals (explicit state
     tuple per key, update-mode emission) across TWO availableNow drains
     sharing one checkpoint — the semantics class the built-in windowed /
-    session aggregations cannot express (SURVEY §2.10 escape hatch;
-    streaming/streams.py::user_running_totals_stateful is the shared
-    operator, re-derived here with integer-cent accumulation so the
-    state arithmetic is exact and hash-stable).
+    session aggregations cannot express (SURVEY §2.10 escape hatch),
+    with integer-cent accumulation so the state arithmetic is exact and
+    hash-stable.
 
     Drain 2 replays the whole file. Unlike dropDuplicates / windowed
     aggregations, ARBITRARY stateful operators receive late rows too —
@@ -652,7 +650,7 @@ register(
         streaming_stateful_running_totals,
         STREAM_STATEFUL_SQL,
         doc="applyInPandasWithState running totals across two checkpointed drains (2x replay proves state resume), oracle-verified",
-        cites="streaming/streams.py user_running_totals_stateful; SURVEY §2.10 custom-stateful escape hatch",
+        cites="streaming_stateful_running_totals: applyInPandasWithState; SURVEY §2.10 custom-stateful escape hatch",
         tags=("streaming", "stateful"),
     )
 )

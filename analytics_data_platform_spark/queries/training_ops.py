@@ -35,8 +35,8 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Token counting is a JVM expression; only (source, doc_id, n_tokens)
     crosses the Arrow boundary into the per-group packer. Parallelism =
-    #groups — at 100 TB, pack by (source, shard) via
-    operators.packing.with_shard to bound group size.
+    #groups — at 100 TB, pack by (source, shard) with a hashed shard
+    column to bound group size.
     """
     d = load_table(spark, sf_dir, "documents").where(F.length(F.trim("text")) > 0)
     slim = d.select("source", "doc_id", F.size(_tokens()).alias("n_tokens"))

@@ -922,9 +922,7 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     m-byte codes, score queries by asymmetric distance (ADC — m table
     lookups per candidate, no vector math), select top-k two-phase.
 
-    This is the ORACLE-VERIFIED twin of operators/similarity.py's PQ path
-    (which trains on a driver sample with float numpy, the Faiss layout):
-    here every stage — subspace k-means (deterministic first-k init, the
+    Every stage — subspace k-means (deterministic first-k init, the
     kmeans_embeddings recipe extended with a subspace key), code
     assignment, the ≤ nq·m·k ADC lookup table, and the final ranking —
     runs in quantized integer arithmetic, so DuckDB re-derives the exact
@@ -1023,7 +1021,7 @@ register(
         pq_adc_topk,
         _pq_adc_sql(),
         doc="product-quantization ADC top-k, codebooks trained in-engine (integer-exact)",
-        cites="training-data ops: PQ ANN (Jégou et al. 2011); operators/similarity.py PQ path",
+        cites="training-data ops: PQ ANN (Jégou et al. 2011), integer-exact in-engine codebooks",
         tags=("vector", "ann", "iterative"),
     )
 )
@@ -1179,8 +1177,8 @@ def ivf_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Simplification vs Faiss IVF-PQ (documented): codes quantize RAW
     vectors, not per-cell residuals — one shared codebook table instead of
     nlist of them; recall at equal bytes is lower, the plumbing and scale
-    shape are identical (operators/similarity.py:586+ carries the
-    cell-partitioned write + DPP pruning variant of the same design).
+    shape are identical (operators/similarity.py::ivf_table_topk carries
+    the cell-partitioned DPP-pruned serving variant of the same design).
 
     Scale shape: coarse assignment is one broadcast fan-out over NLIST
     full-vector centroids (zip_with fold, no explode); the probe table is
@@ -1299,7 +1297,7 @@ register(
         ivf_pq_adc_topk,
         _ivf_pq_sql(),
         doc="IVF-PQ: coarse-cell probe restricts the PQ ADC scan to ~nprobe/nlist of the corpus",
-        cites="training-data ops: IVF-PQ serving path (Jégou et al. 2011); operators/similarity.py:586 IVF layout",
+        cites="training-data ops: IVF-PQ serving path (Jégou et al. 2011); operators/similarity.py ivf_table_topk cell layout",
         tags=("vector", "ann", "iterative", "topk"),
     )
 )

@@ -209,29 +209,3 @@ def read_excel_table(
     if renames:
         df = df.rename(columns=renames)
     return df
-
-
-def read_jsonl(
-    spark: SparkSession,
-    path_glob: str,
-    schema: str | None = None,
-    corrupt_col: str = "_corrupt_record",
-) -> DataFrame:
-    """JSON-lines source with an explicit-schema contract.
-
-    At 100 TB, schema inference is a full extra pass over the data —
-    callers must pass the DDL schema. Malformed lines are captured in
-    ``corrupt_col`` (PERMISSIVE mode) instead of failing the scan, the
-    lakehouse-landing behavior: quarantine bad records, never drop or
-    abort. Pass ``schema=None`` ONLY for interactive exploration — it
-    triggers inference and logs no contract.
-    """
-    reader = spark.read.option("mode", "PERMISSIVE").option(
-        "columnNameOfCorruptRecord", corrupt_col
-    )
-    if schema is not None:
-        full = schema.rstrip()
-        if corrupt_col not in full:
-            full = f"{full}, {corrupt_col} string"
-        reader = reader.schema(full)
-    return reader.json(path_glob)

@@ -8,9 +8,7 @@ legacy dlt (normalizes nested JSON into parent/child tables with
 Here: an injectable ``fetcher`` (defaults to requests.get) pulls records,
 and :func:`normalize_nested` reproduces the dlt parent/child split with
 **deterministic** lineage ids (md5 of canonical parent JSON) so re-runs and
-the transform layer's parent/child join (J3) behave identically. When the
-downstream is our own DAG the flatter :func:`flatten_exploded` (explode the
-nested list in place) is preferred — one table, no join needed.
+the transform layer's parent/child join (J3) behave identically.
 """
 
 from __future__ import annotations
@@ -19,7 +17,6 @@ import hashlib
 import json
 from collections.abc import Callable
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -70,20 +67,3 @@ def normalize_nested(
     for name, rows in children.items():
         out[name] = spark.createDataFrame(rows)
     return out
-
-
-def flatten_exploded(
-    spark: SparkSession, records: list[dict], list_key: str
-) -> DataFrame:
-    """Spark-native alternative to J3: explode the nested list in place —
-    the parent/child join disappears from every downstream query."""
-    # via the JSON reader so nested dicts infer as structs (createDataFrame
-    # would infer MapType and lose per-field schemas)
-    lines = [json.dumps(r, default=str) for r in records]
-    df = spark.read.json(spark.sparkContext.parallelize(lines))
-    exploded = df.withColumn("_child", F.explode_outer(list_key)).drop(list_key)
-    child_fields = [f for f in exploded.schema["_child"].dataType.fieldNames()]
-    return exploded.select(
-        *[c for c in exploded.columns if c != "_child"],
-        *[F.col(f"_child.{f}").alias(f) for f in child_fields],
-    )

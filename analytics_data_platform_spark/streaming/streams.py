@@ -1,20 +1,14 @@
 """Streaming operators over an events stream.
 
-Each builder takes a streaming DataFrame (``spark.readStream`` source) and
-returns the transformed streaming DataFrame; callers attach the sink. All
-are late-data-safe via event-time watermarks. Tested with file sources +
-``trigger(availableNow=True)`` so the same code path that would run against
-Kafka runs deterministically in CI.
-
-Design notes (cluster behavior):
-- windowed_event_counts / windowed_value_sums: incremental state per
-  (window, key) in the state store; watermark bounds state size.
-- sessionize_stream: ``session_window`` — Spark merges overlapping
-  session fragments in the state store; the batch analogue is
-  queries/relational.py::sessionize_events (same 30-min gap semantics).
-- streaming_dedup: dropDuplicates WITH watermark — state truncates to the
-  watermark horizon; without it state grows unboundedly (the classic
-  production footgun).
+``join_purchases_with_clicks`` takes two streaming DataFrames
+(``spark.readStream`` sources) and returns the joined streaming
+DataFrame; callers attach the sink. Event-time watermarks on both sides
+make it late-data-safe and bound its state. The registry's other
+streaming queries (windowed counts, watermark dedup, session windows,
+arbitrary stateful totals) build their streams inline in
+queries/streaming_ops.py, each oracle-gated over a file source +
+``trigger(availableNow=True)`` so the same code path that would run
+against Kafka runs deterministically in CI.
 """
 
 from __future__ import annotations
@@ -22,155 +16,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-EVENTS_SCHEMA = (
-    "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-)
-
 
 def with_watermark(events: DataFrame, delay: str = "10 minutes") -> DataFrame:
     return events.withWatermark("ts", delay)
-
-
-def windowed_event_counts(
-    events: DataFrame, window: str = "5 minutes", delay: str = "10 minutes"
-) -> DataFrame:
-    """Tumbling-window counts per event_type with late-data watermark."""
-    return (
-        with_watermark(events, delay)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(F.count("*").alias("n_events"), F.sum("value").alias("value_sum"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "event_type",
-            "n_events",
-            "value_sum",
-        )
-    )
-
-
-def sliding_event_counts(
-    events: DataFrame,
-    window: str = "10 minutes",
-    slide: str = "5 minutes",
-    delay: str = "10 minutes",
-) -> DataFrame:
-    """Sliding-window counts per event_type: each event lands in
-    window/slide overlapping windows (bounded row expansion, exactly the
-    batch contribution-explode trick — Spark plans it natively here).
-    State per key is bounded by the watermark horizon."""
-    return (
-        with_watermark(events, delay)
-        .groupBy(F.window("ts", window, slide).alias("w"), "event_type")
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "event_type",
-            "n_events",
-        )
-    )
-
-
-def sessionize_stream(
-    events: DataFrame, gap: str = "30 minutes", delay: str = "10 minutes"
-) -> DataFrame:
-    """Native session windows (gap-close semantics match the batch
-    sessionize_events operator)."""
-    return (
-        with_watermark(events, delay)
-        .groupBy(F.session_window("ts", gap).alias("s"), "user_id")
-        .agg(F.count("*").alias("n_events"), F.sum("value").alias("session_value"))
-        .select(
-            "user_id",
-            F.col("s.start").alias("session_start"),
-            F.col("s.end").alias("session_end"),
-            "n_events",
-            "session_value",
-        )
-    )
-
-
-def streaming_dedup(events: DataFrame, delay: str = "10 minutes") -> DataFrame:
-    """Exactly-once-per-event_id within the watermark horizon."""
-    return with_watermark(events, delay).dropDuplicatesWithinWatermark(["event_id"])
-
-
-def run_available_now(stream_df: DataFrame, checkpoint: str, out_path: str) -> None:
-    """Drain everything currently available to parquet and stop — the
-    incremental-batch execution mode (the streaming twin of the reference's
-    cron ticks: each invocation processes exactly the new data, exactly
-    once, via the checkpoint)."""
-    (
-        stream_df.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .outputMode("append")
-        .start()
-        .awaitTermination()
-    )
-
-
-def run_available_now_update(stream_df: DataFrame, checkpoint: str, out_path: str) -> None:
-    """availableNow drain for UPDATE-mode outputs (stateful operators).
-
-    The parquet file sink only supports append, so updated rows land via
-    foreachBatch — each micro-batch's emissions are appended; readers take
-    the latest row per key (an upsert sink like sinks.upsert_sink is the
-    production variant)."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out_path)
-
-    (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .outputMode("update")
-        .start()
-        .awaitTermination()
-    )
-
-
-def user_running_totals_stateful(events: DataFrame, delay: str = "10 minutes") -> DataFrame:
-    """Custom stateful operator via ``applyInPandasWithState``: per-user
-    running event count and value total held in an explicit state store.
-
-    This is the escape hatch for semantics the built-in windowed/session
-    aggregations cannot express (cross-batch running counters, custom
-    eviction, model state). State is one tiny tuple per user_id key —
-    partitioned by the grouping key across executors, checkpointed with
-    the query, resumed on restart; the watermark bounds replay, not state
-    size (NoTimeout — counters are meant to live forever). Emits the
-    updated running totals for every user seen in the batch
-    (``outputMode="update"``).
-    """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    def update(key, pdfs, state):
-        import pandas as pd
-
-        n, total = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf["value"].fillna(0.0).sum())
-        state.update((n, total))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "value_total": [total]}
-        )
-
-    return (
-        with_watermark(events, delay)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            update,
-            outputStructType="user_id long, n_events long, value_total double",
-            stateStructType="n long, total double",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
 
 
 def join_purchases_with_clicks(
@@ -213,93 +61,4 @@ def join_purchases_with_clicks(
     )
     return p.join(c, cond, how).select(
         "user_id", "purchase_id", "purchase_ts", "purchase_value", "click_id", "click_ts"
-    )
-
-
-def transform_with_state_available() -> bool:
-    """The Spark 4 transformWithState protocol serializes state through
-    protobuf; absent from this container, so the operator is environment-
-    gated the same way as the Excel/HDF5 engines (real logic, gated run)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def user_profile_transform_with_state(events: DataFrame, delay: str = "10 minutes") -> DataFrame:
-    """Per-user activity profile via ``transformWithStateInPandas`` — the
-    Spark 4 arbitrary-state API (successor to ``applyInPandasWithState``).
-
-    Requires protobuf on driver and workers (``transform_with_state_
-    available``); on clusters without it, ``user_running_totals_stateful``
-    is the applyInPandasWithState fallback with the same checkpoint/resume
-    contract.
-
-    Demonstrates the parts the old API cannot express: MULTIPLE typed
-    state variables per key — a ValueState holding the running
-    (n_events, value_total) pair plus a MapState of per-event-type counts
-    — managed through a StatefulProcessorHandle and checkpointed/resumed
-    with the query. Emits one profile row per user per batch with the
-    dominant event type (ties break lexicographically so output is
-    deterministic). State lives in the state store partitioned by
-    user_id; ``timeMode="None"`` keeps counters forever (the watermark
-    bounds replay only).
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class ProfileProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.totals = handle.getValueState("totals", "n LONG, total DOUBLE")
-            self.by_type = handle.getMapState(
-                "by_type", "event_type STRING", "c LONG"
-            )
-
-        def handleInputRows(self, key, rows, timer_values):
-            import pandas as pd
-
-            n, total = self.totals.get() if self.totals.exists() else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].fillna(0.0).sum())
-                for et, c in pdf.groupby("event_type").size().items():
-                    prev = (
-                        self.by_type.getValue((et,))[0]
-                        if self.by_type.containsKey((et,))
-                        else 0
-                    )
-                    self.by_type.updateValue((et,), (prev + int(c),))
-            self.totals.update((n, float(total)))
-            counts = {k[0]: v[0] for k, v in self.by_type.iterator()}
-            # dominant type: max count, lexicographic tie-break
-            top = min(counts, key=lambda t: (-counts[t], t))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "value_total": [total],
-                    "n_types": [len(counts)],
-                    "top_type": [top],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        with_watermark(events, delay)
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            ProfileProcessor(),
-            outputStructType=(
-                "user_id long, n_events long, value_total double,"
-                " n_types int, top_type string"
-            ),
-            outputMode="Update",
-            timeMode="None",
-        )
     )

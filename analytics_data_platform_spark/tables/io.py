@@ -91,19 +91,12 @@ class StageSwapError(RuntimeError):
         self.stage = stage
 
 
-FILE_FORMATS = ("parquet", "orc")
-
-
 class TableIO:
-    def __init__(self, spark: SparkSession, file_format: str = "parquet"):
-        """``file_format`` selects the storage codec for tables this
-        instance creates (both columnar; parquet is the lakehouse default,
-        ORC offered for parity with Hive-heritage warehouses). Appends to
-        EXISTING tables always follow the table's own format."""
-        if file_format not in FILE_FORMATS:
-            raise ValueError(f"file_format {file_format!r} not in {FILE_FORMATS}")
+    """Creates parquet tables; appends to EXISTING tables follow the
+    table's own provider (e.g. an Iceberg table on a real catalog)."""
+
+    def __init__(self, spark: SparkSession):
         self.spark = spark
-        self.file_format = file_format
 
     # -- namespace lifecycle (S16; reference io.py:35-39) ------------------
 
@@ -145,7 +138,6 @@ class TableIO:
         merge_on: list[str] | None = None,
         partition_spec: dict[str, str] | None = None,
         sort_spec: list[str] | None = None,
-        zorder: list[str] | None = None,
         properties: dict[str, str] | None = None,
         known_rows: int | None = None,
     ) -> WriteResult:
@@ -179,9 +171,6 @@ class TableIO:
                 "observed-stats writes require a single-action mode; merge "
                 "evaluates the source more than once — use the persist path"
             )
-        if zorder and sort_spec:
-            raise ValueError("zorder and sort_spec are mutually exclusive layouts")
-
         self_persisted = known_rows is None
         if self_persisted:
             df = df.persist()
@@ -199,24 +188,21 @@ class TableIO:
 
             if created:
                 out, pcols = apply_partitioning(df, pfields)
-                out = self._apply_layout(out, sfields, zorder)
-                writer = out.write.format(self.file_format)
+                writer = apply_sort(out, sfields).write.format("parquet")
                 if pcols:
                     writer = writer.partitionBy(*pcols)
                 writer.saveAsTable(table)
             elif mode == "replace":
                 out, pcols = apply_partitioning(df, pfields)
-                out = self._apply_layout(out, sfields, zorder)
-                writer = out.write.format(self.file_format).mode("overwrite")
+                writer = apply_sort(out, sfields).write.format("parquet").mode("overwrite")
                 if pcols:
                     writer = writer.partitionBy(*pcols)
                 writer.saveAsTable(table)
             elif mode == "append":
                 aligned = self._evolve_and_align(df, table, pfields)
-                # follow the EXISTING table's format: saveAsTable defaults to
-                # spark.sql.sources.default (parquet) and refuses to append
-                # to e.g. an ORC table rather than adopting its format
-                fmt = self.table_provider(table) or self.file_format
+                # follow the EXISTING table's provider: saveAsTable refuses
+                # to append to a table of another format rather than adopt it
+                fmt = self.table_provider(table) or "parquet"
                 apply_sort(aligned, sfields).write.format(fmt).mode("append").saveAsTable(table)
             else:  # merge
                 self._merge(df, table, merge_on or [], pfields, sfields)
@@ -227,19 +213,6 @@ class TableIO:
         if properties:
             self.set_properties(table, properties)
         return WriteResult(table, mode, rows, created)
-
-    def _apply_layout(self, out: DataFrame, sfields, zorder: list[str] | None) -> DataFrame:
-        """Write layout: either the sort-spec write-sort, or z-order
-        clustering (tables/zorder.py) — each output range partition covers
-        a tight Morton range so footer min/max prune on EVERY z column."""
-        if not zorder:
-            return apply_sort(out, sfields)
-        from analytics_data_platform_spark.tables.zorder import Z_COL, with_zorder_key
-
-        keyed = with_zorder_key(out, zorder)
-        return (
-            keyed.repartitionByRange(Z_COL).sortWithinPartitions(Z_COL).drop(Z_COL)
-        )
 
     def _evolve_and_align(self, df: DataFrame, table: str, pfields) -> DataFrame:
         """Additive evolution + column alignment for by-name appends.
@@ -321,7 +294,7 @@ class TableIO:
         # cache coherent — a rename-swap leaves clones of the session (e.g.
         # streaming foreachBatch) holding dead file listings.
         stage = table + "__stage"
-        merged.write.format(self.file_format).mode("overwrite").saveAsTable(stage)
+        merged.write.format("parquet").mode("overwrite").saveAsTable(stage)
         self.swap_stage(stage, table)
 
     def swap_stage(self, stage: str, table: str) -> None:
@@ -353,29 +326,6 @@ class TableIO:
         if not self.table_exists(stage):
             raise ValueError(f"no stage table {stage!r} to restore {table!r} from")
         self.swap_stage(stage, table)
-
-    def write_bucketed(
-        self,
-        df: DataFrame,
-        table: str,
-        bucket_cols: list[str],
-        n_buckets: int,
-        sort_cols: list[str] | None = None,
-        mode: str = "overwrite",
-    ) -> None:
-        """Write a bucketed (+optionally sorted) table.
-
-        Joins/aggregations between tables bucketed on the same keys with
-        the same bucket count execute WITHOUT a shuffle — the physical
-        twin of Iceberg's ``bucket[n]`` partition transform for join
-        co-location (SURVEY §1.4). At 100 TB, bucketing the fact tables
-        on their join key turns every fact⋈fact join from a full network
-        shuffle into a local zip of pre-hashed files.
-        """
-        writer = df.write.format(self.file_format).mode(mode).bucketBy(n_buckets, *bucket_cols)
-        if sort_cols:
-            writer = writer.sortBy(*sort_cols)
-        writer.saveAsTable(table)
 
     # -- watermark state (reference extract.py:22-60, runner.py:112-122) ---
 

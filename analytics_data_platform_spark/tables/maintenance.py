@@ -13,6 +13,7 @@ compaction, implemented as a size-aware rewrite.
 from __future__ import annotations
 
 import os
+import re
 
 import pyspark.sql.functions as F
 from pyspark.sql import SparkSession
@@ -93,62 +94,6 @@ def compact_table(
     return f"{table}: compacted {n_files} files -> {parts}"
 
 
-def compact_band_index_table(
-    spark: SparkSession,
-    index_table: str,
-    live_table: str,
-    id_col: str = "doc_id",
-    version_col: str | None = None,
-) -> str:
-    """Nightly LSH band-index expiry (operators/dedup.py::
-    compact_band_index): rewrite ``index_table`` keeping only live-id
-    rows (and, given ``version_col``, only each id's latest version),
-    via the same crash-safe stage + INSERT OVERWRITE swap file
-    compaction uses. Keeps the incremental dedup index at O(live docs)
-    under re-ingest. No-op (reported) when nothing is dead."""
-    from analytics_data_platform_spark.operators.dedup import compact_band_index
-
-    io = TableIO(spark)
-    idx = spark.table(index_table)
-    before = idx.count()
-    kept = compact_band_index(idx, spark.table(live_table), id_col, version_col)
-    after = kept.count()
-    if after == before:
-        return f"{index_table}: band index clean ({before} rows)"
-    stage = index_table + "__compact"
-    kept.write.format("parquet").mode("overwrite").saveAsTable(stage)
-    io.swap_stage(stage, index_table)
-    return f"{index_table}: band index {before} -> {after} rows"
-
-
-def expire_incremental_state(
-    state_dir: str, keep_last: int = 2, spark: SparkSession | None = None
-) -> str:
-    """Nightly expiry of incremental-pipeline state versions
-    (pipelines/incremental.py::expire_state_versions) — the
-    expire_snapshots (M3) analog for the copy-on-write refresh state.
-    Delta commits share files across versions (reference-counted expiry
-    keeps later reads safe); keep_last >= 2 preserves both a rollback
-    target and the latest batch's replay predecessor. With a session,
-    also compacts accumulated merge-on-read delete files (the
-    apply_deletes analog — keeps state reads O(data))."""
-    from analytics_data_platform_spark.pipelines.incremental import (
-        compact_state_deletes,
-        expire_state_versions,
-    )
-
-    removed = expire_state_versions(state_dir, keep_last=keep_last, spark=spark)
-    compacted = compact_state_deletes(spark, state_dir) if spark is not None else []
-    notes = []
-    if removed:
-        notes.append(f"expired {len(removed)} state version(s)")
-    if compacted:
-        notes.append(f"compacted deletes in {len(compacted)} part(s)")
-    if not notes:
-        return f"{state_dir}: state clean (<= {keep_last} versions)"
-    return f"{state_dir}: " + ", ".join(notes)
-
-
 def run_maintenance(
     spark: SparkSession,
     namespaces: list[str] | None = None,
@@ -164,43 +109,6 @@ def run_maintenance(
         except Exception as exc:  # noqa: BLE001 — keep the loop running
             results.append(f"{table}: ERROR {exc}")
     return results
-
-
-def row_count_stats(spark: SparkSession, namespaces: list[str] | None = None):
-    """Per-table row counts (the reference's post-maintenance report)."""
-    rows = []
-    for table in list_all_tables(spark, namespaces):
-        rows.append((table, spark.table(table).count()))
-    return spark.createDataFrame(rows, "table string, n_rows long").orderBy(F.col("table"))
-
-
-def analyze_table(
-    spark: SparkSession, table: str, columns: list[str] | None = None
-) -> dict[str, str]:
-    """ANALYZE TABLE: collect table (and optionally per-column) statistics
-    into the catalog so the cost-based optimizer can pick join orders and
-    broadcast candidates from real sizes instead of file-size guesses.
-
-    The Trino/Iceberg side of the reference gets NDV/size stats from
-    Iceberg metadata + ANALYZE; this is the Spark-catalog equivalent. Run
-    it from the maintenance loop after compaction — stats become stale as
-    appends accumulate. Enable ``spark.sql.cbo.enabled`` to consume them.
-
-    Returns the catalog statistics recorded for the table.
-    """
-    spark.sql(f"ANALYZE TABLE {table} COMPUTE STATISTICS")
-    if columns:
-        cols = ", ".join(f"`{c}`" for c in columns)
-        spark.sql(f"ANALYZE TABLE {table} COMPUTE STATISTICS FOR COLUMNS {cols}")
-    out: dict[str, str] = {}
-    for r in spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect():
-        if r.col_name == "Statistics":
-            out["table"] = r.data_type
-    if columns:
-        for c in columns:
-            desc = spark.sql(f"DESCRIBE EXTENDED {table} `{c}`").collect()
-            out[c] = "; ".join(f"{r['info_name']}={r['info_value']}" for r in desc)
-    return out
 
 
 def recover_posting_compaction(idx_dir: str, prefix: str = "bucket=") -> list[str]:
@@ -237,7 +145,6 @@ def compact_posting_buckets(
     spark: SparkSession,
     idx_dir: str,
     min_files: int = 2,
-    target_files: int = 1,
     prefix: str = "bucket=",
 ) -> list[str]:
     """Per-bucket small-file compaction for a term-partitioned posting
@@ -246,7 +153,7 @@ def compact_posting_buckets(
     directory — exactly the small-file debt merge-on-read deletes
     accumulate on the state tables (``compact_state_deletes``), applied
     to the index family. Each oversized bucket is rewritten to
-    ``target_files`` and swapped in with two atomic renames
+    one file and swapped in with two atomic renames
     (stage → retire resident as ``_old.bucket=N`` → install → drop);
     :func:`recover_posting_compaction` (run first) heals any torn swap,
     and serving hashes are pinned unchanged across compaction by
@@ -281,92 +188,68 @@ def compact_posting_buckets(
             continue
         bucket_dir = os.path.join(idx_dir, name)
         files = [f for f in os.listdir(bucket_dir) if f.endswith(".parquet")]
-        if len(files) < max(min_files, target_files + 1):
+        if len(files) < max(min_files, 2):
             continue
         oversized.append((name, len(files)))
     if not oversized:
         return []
     done: list[str] = []
-    if target_files == 1:
-        import re as _re
-
-        import pyspark.sql.functions as _F
-
-        part_col = prefix[:-1]
-        raw_vals = [n[len(prefix):] for n, _ in oversized]
-        all_int = all(v.lstrip("-").isdigit() for v in raw_vals)
-        # ONE multi-root read (bucket dirs are ROOT paths, exempt from the
-        # hidden-path filter that hides e.g. ``_cell=`` from discovery);
-        # the partition value is recovered from the file path — a per-dir
-        # read-and-union would pay one driver-side schema inference per
-        # bucket, which dominated the job on wide fleets
-        val = _F.regexp_extract(
-            _F.input_file_name(), _re.escape(prefix) + "([^/]+)/", 1
-        )
-        frame = spark.read.parquet(
-            *[os.path.join(idx_dir, n) for n, _ in oversized]
-        ).withColumn(part_col, val.cast("int") if all_int else val)
-        # underscore prefix keeps the stage invisible to partition
-        # discovery even if this process dies mid-write
-        staged_root = tempfile.mkdtemp(prefix="_stage.", dir=idx_dir)
-        (
-            # one partition per bucket value -> exactly one staged file per
-            # bucket dir (a hash collision merely puts two buckets in one
-            # task; each still writes its own single file)
-            frame.repartition(len(oversized), part_col)
-            .write.mode("overwrite")
-            .partitionBy(part_col)
-            .parquet(staged_root)
-        )
-        for name, n_files in oversized:
-            staged = os.path.join(staged_root, name)
-            if not os.path.isdir(staged):
-                # zero-row bucket (partitionBy writes no dir for it):
-                # still owes its file-count debt — rewrite the N empty
-                # resident files to ONE empty file with the same footer
-                # schema, driver-side (no Spark job), so a fleet of
-                # many-file empty buckets cannot dodge compaction forever
-                import pyarrow.parquet as _pq
-
-                bucket_dir = os.path.join(idx_dir, name)
-                first = next(
-                    f
-                    for f in sorted(os.listdir(bucket_dir))
-                    if f.endswith(".parquet")
-                )
-                os.makedirs(staged, exist_ok=True)
-                _pq.write_table(
-                    _pq.read_schema(os.path.join(bucket_dir, first)).empty_table(),
-                    os.path.join(staged, "part-00000-compacted-empty.parquet"),
-                )
-            for extra in os.listdir(staged):  # _SUCCESS etc. stay out
-                if not extra.endswith(".parquet"):
-                    os.remove(os.path.join(staged, extra))
-            old = os.path.join(idx_dir, f"_old.{name}")
-            os.rename(os.path.join(idx_dir, name), old)
-            os.rename(staged, os.path.join(idx_dir, name))
-            shutil.rmtree(old)
-            done.append(f"{name}: {n_files} -> {target_files} file(s)")
-        shutil.rmtree(staged_root)
-        return done
-    # target_files > 1: per-bucket coalesce rewrites (rarely used; kept as
-    # the simple sequential loop)
+    part_col = prefix[:-1]
+    raw_vals = [n[len(prefix):] for n, _ in oversized]
+    all_int = all(v.lstrip("-").isdigit() for v in raw_vals)
+    # ONE multi-root read (bucket dirs are ROOT paths, exempt from the
+    # hidden-path filter that hides e.g. ``_cell=`` from discovery);
+    # the partition value is recovered from the file path — a per-dir
+    # read-and-union would pay one driver-side schema inference per
+    # bucket, which dominated the job on wide fleets
+    val = F.regexp_extract(
+        F.input_file_name(), re.escape(prefix) + "([^/]+)/", 1
+    )
+    frame = spark.read.parquet(
+        *[os.path.join(idx_dir, n) for n, _ in oversized]
+    ).withColumn(part_col, val.cast("int") if all_int else val)
+    # underscore prefix keeps the stage invisible to partition
+    # discovery even if this process dies mid-write
+    staged_root = tempfile.mkdtemp(prefix="_stage.", dir=idx_dir)
+    (
+        # one partition per bucket value -> exactly one staged file per
+        # bucket dir (a hash collision merely puts two buckets in one
+        # task; each still writes its own single file)
+        frame.repartition(len(oversized), part_col)
+        .write.mode("overwrite")
+        .partitionBy(part_col)
+        .parquet(staged_root)
+    )
     for name, n_files in oversized:
-        bucket_dir = os.path.join(idx_dir, name)
-        staged = tempfile.mkdtemp(prefix="_stage.", dir=idx_dir)
-        # reading the bucket dir directly yields the non-partition columns
-        # only — the same schema resident files carry
-        spark.read.parquet(bucket_dir).coalesce(target_files).write.mode(
-            "overwrite"
-        ).parquet(staged)
-        for extra in os.listdir(staged):  # _SUCCESS etc. stay out of the index
+        staged = os.path.join(staged_root, name)
+        if not os.path.isdir(staged):
+            # zero-row bucket (partitionBy writes no dir for it):
+            # still owes its file-count debt — rewrite the N empty
+            # resident files to ONE empty file with the same footer
+            # schema, driver-side (no Spark job), so a fleet of
+            # many-file empty buckets cannot dodge compaction forever
+            import pyarrow.parquet as _pq
+
+            bucket_dir = os.path.join(idx_dir, name)
+            first = next(
+                f
+                for f in sorted(os.listdir(bucket_dir))
+                if f.endswith(".parquet")
+            )
+            os.makedirs(staged, exist_ok=True)
+            _pq.write_table(
+                _pq.read_schema(os.path.join(bucket_dir, first)).empty_table(),
+                os.path.join(staged, "part-00000-compacted-empty.parquet"),
+            )
+        for extra in os.listdir(staged):  # _SUCCESS etc. stay out
             if not extra.endswith(".parquet"):
                 os.remove(os.path.join(staged, extra))
         old = os.path.join(idx_dir, f"_old.{name}")
-        os.rename(bucket_dir, old)
-        os.rename(staged, bucket_dir)
+        os.rename(os.path.join(idx_dir, name), old)
+        os.rename(staged, os.path.join(idx_dir, name))
         shutil.rmtree(old)
-        done.append(f"{name}: {n_files} -> {target_files} file(s)")
+        done.append(f"{name}: {n_files} -> 1 file(s)")
+    shutil.rmtree(staged_root)
     return done
 
 

@@ -30,10 +30,6 @@ class SchemaDelta:
     added: list[StructField] = field(default_factory=list)
     missing: list[str] = field(default_factory=list)  # in table, absent from batch → nulls
 
-    @property
-    def changes_table(self) -> bool:
-        return bool(self.added)
-
 
 def diff_schemas(table_schema: StructType, batch_schema: StructType) -> SchemaDelta:
     """Validate batch vs table schema under the additive-only policy.

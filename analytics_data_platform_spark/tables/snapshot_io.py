@@ -25,7 +25,6 @@ from __future__ import annotations
 import datetime as dt
 import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -47,12 +46,6 @@ class SnapshotTableIO:
 
     def ensure_namespace(self, namespace: str) -> None:
         os.makedirs(os.path.join(self.warehouse, namespace), exist_ok=True)
-
-    def drop_namespace(self, namespace: str) -> None:
-        shutil.rmtree(os.path.join(self.warehouse, namespace), ignore_errors=True)
-        self._tables = {
-            k: v for k, v in self._tables.items() if not k.startswith(namespace + ".")
-        }
 
     def table(self, table: str) -> SnapshotTable:
         if table not in self._tables:

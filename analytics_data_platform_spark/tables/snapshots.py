@@ -18,9 +18,9 @@ any table size:
 
 - **O(batch) append** — new manifest = parent's file list + the new files;
   nothing is rewritten, commit cost is independent of table size.
-- **Copy-on-write merge / delete that SKIPS files** — only files whose
-  stats range intersects the update keys / delete predicate are rewritten;
-  the rest carry over by reference. A 1 GB merge into a 100 TB table
+- **Copy-on-write merge that SKIPS files** — only files whose stats
+  range intersects the update keys are rewritten; the rest carry over
+  by reference. A 1 GB merge into a 100 TB table
   touches the overlapping files, not the table (Iceberg CoW MERGE's file
   skipping, realized with the same min/max pruning).
 - **Stats-based scan pruning** — `scan()` drops files whose min/max
@@ -118,8 +118,7 @@ class Snapshot:
 
 class SnapshotTable:
     def __init__(self, spark: SparkSession, root: str, stats_cols: list[str] | None = None,
-                 cluster_by: list[str] | None = None, cluster_files: int | None = None,
-                 zorder_by: list[str] | None = None):
+                 cluster_by: list[str] | None = None, cluster_files: int | None = None):
         """``stats_cols`` limits per-file stats collection (None = every
         orderable leaf column). Stats collection is ONE extra aggregation
         over the freshly written batch — per-file, map-side, grouped by
@@ -130,23 +129,15 @@ class SnapshotTable:
         what makes the manifest min/max stats actually prune (on unsorted
         data every file spans the whole domain and ``scan``/CoW skipping
         degrade to full scans — same reason Iceberg pairs its metadata
-        with a write sort order). Multi-dimensional layouts use
-        ``TableIO.write_table(zorder=...)``'s Morton keys instead.
-        ``cluster_files`` pins the range-partition count per batch (AQE
-        otherwise coalesces small batches to one file, defeating the
-        layout at test scale; at production scale leave it None).
-        ``zorder_by`` range-partitions on a Morton interleave of the
-        given columns instead (tables/zorder.py): every file covers a
-        tight hyper-rectangle, so manifest stats prune on EVERY z column
-        — the multi-dimensional layout ``cluster_by`` cannot give."""
+        with a write sort order). ``cluster_files`` pins the
+        range-partition count per batch (AQE otherwise coalesces small
+        batches to one file, defeating the layout at test scale; at
+        production scale leave it None)."""
         self.spark = spark
         self.root = root
         self.stats_cols = stats_cols
         self.cluster_by = cluster_by
         self.cluster_files = cluster_files
-        self.zorder_by = zorder_by
-        if cluster_by and zorder_by:
-            raise ValueError("cluster_by and zorder_by are mutually exclusive layouts")
         os.makedirs(os.path.join(root, "data"), exist_ok=True)
         os.makedirs(os.path.join(root, "manifests"), exist_ok=True)
 
@@ -298,16 +289,6 @@ class SnapshotTable:
             df = df.repartitionByRange(*parts, *self.cluster_by).sortWithinPartitions(
                 *self.cluster_by
             )
-        elif self.zorder_by:
-            from analytics_data_platform_spark.tables.zorder import Z_COL, with_zorder_key
-
-            parts = [self.cluster_files] if self.cluster_files else []
-            keyed = with_zorder_key(df, self.zorder_by)
-            df = (
-                keyed.repartitionByRange(*parts, Z_COL)
-                .sortWithinPartitions(Z_COL)
-                .drop(Z_COL)
-            )
         if not self._try_local_write(df, d):
             df.write.mode("errorifexists").parquet(d)
         fields = {f.name: f.dataType.simpleString() for f in df.schema.fields}
@@ -363,7 +344,7 @@ class SnapshotTable:
         path costs a full Spark job (task launch + commit protocol) to
         produce one tiny file; pyarrow writes the same file in-process.
         Scalar types only; anything else (and any non-local plan, which
-        includes every cluster_by/zorder_by write — repartition makes the
+        includes every cluster_by write — repartition makes the
         frame non-local) takes the normal executor write. The footer/scan
         stats enumeration downstream reads the file identically."""
         try:
@@ -519,24 +500,6 @@ class SnapshotTable:
         finally:
             updates.unpersist()
 
-    def delete_where(self, predicate_sql: str, prune_col: str | None = None,
-                     lo=None, hi=None) -> int:
-        """Copy-on-write row-level DELETE. With ``prune_col``+[lo, hi]
-        bounds, files that cannot contain matching rows carry over by
-        reference; only candidates are rewritten with ``NOT predicate``."""
-        self._require_no_pending_deletes("delete_where")
-        files = self.snapshot().files
-        if prune_col is not None:
-            touched = [f for f in files if f.may_contain(prune_col, lo, hi)]
-            kept = [f for f in files if not f.may_contain(prune_col, lo, hi)]
-        else:
-            touched, kept = files, []
-        if not touched:
-            return self._commit(kept, "delete")
-        cand = self._read_files([f.path for f in touched])
-        rewritten = self._write_files(cand.where(f"NOT ({predicate_sql})"))
-        return self._commit(kept + rewritten, "delete")
-
     def _require_no_pending_deletes(self, op: str) -> None:
         if self.current_version() is not None and self.snapshot().delete_files:
             raise ValueError(
@@ -550,8 +513,8 @@ class SnapshotTable:
         self, keys: DataFrame, key_cols: list[str], distinct: bool = True
     ) -> int:
         """Merge-on-read DELETE: write the key tuples as an equality-delete
-        file and commit — O(|keys|), NO data file is rewritten (the CoW
-        ``delete_where`` rewrites every candidate file; at 100 TB a
+        file and commit — O(|keys|), NO data file is rewritten (a
+        copy-on-write delete would rewrite every candidate file; at 100 TB a
         trickle of row deletes cannot afford that). Readers anti-join the
         delete file against the data files it applies to.
 
@@ -612,7 +575,7 @@ class SnapshotTable:
         """Materialize pending equality deletes (the read-side anti-joins)
         into rewritten data files and clear the delete list — the
         compaction step that keeps merge-on-read read costs bounded. A
-        table built with ``cluster_by``/``zorder_by`` keeps its layout
+        table built with ``cluster_by`` keeps its layout
         through the rewrite (``_write_files`` clusters every batch), so
         stats-pruned reads survive compaction."""
         s = self.snapshot()
@@ -631,44 +594,14 @@ class SnapshotTable:
             df = df.join(F.broadcast(keys), entry["key_cols"], "left_anti")
         return df
 
-    def update_where(self, set_exprs: dict[str, str], predicate_sql: str,
-                     prune_col: str | None = None, lo=None, hi=None) -> int:
-        """Copy-on-write row-level UPDATE: files that cannot contain
-        matching rows (by ``prune_col`` stats bounds) carry over by
-        reference; candidate files are rewritten with each ``set_exprs``
-        column applied under ``CASE WHEN predicate``. Together with
-        ``delete_where``/``merge`` this completes the DML surface the
-        reference gets from Iceberg row-level operations."""
-        self._require_no_pending_deletes("update_where")
-        files = self.snapshot().files
-        if prune_col is not None:
-            touched = [f for f in files if f.may_contain(prune_col, lo, hi)]
-            kept = [f for f in files if not f.may_contain(prune_col, lo, hi)]
-        else:
-            touched, kept = files, []
-        if not touched:
-            return self._commit(kept, "update")
-        cand = self._read_files([f.path for f in touched])
-        updated = cand.select(
-            *[
-                F.expr(
-                    f"CASE WHEN ({predicate_sql}) THEN ({set_exprs[c]}) ELSE `{c}` END"
-                ).cast(cand.schema[c].dataType).alias(c)
-                if c in set_exprs
-                else F.col(c)
-                for c in cand.columns
-            ]
-        )
-        return self._commit(kept + self._write_files(updated), "update")
-
     # -- reads ---------------------------------------------------------------
 
-    def _read_files(self, paths: list[str]) -> DataFrame:
-        """Read specific data files projected to the LIVE table schema
-        (post-evolution files and pre-evolution files align; missing
-        columns surface as NULL)."""
+    def _read_files(self, paths: list[str], version: int | None = None) -> DataFrame:
+        """Read specific data files projected to the table schema of
+        ``version`` (default live): post-evolution and pre-evolution files
+        align, missing columns surface as NULL."""
         reader = self.spark.read
-        schema = self._read_schema()
+        schema = self._read_schema(version)
         if schema is not None:
             reader = reader.schema(schema)
         return reader.parquet(*paths)
@@ -728,19 +661,6 @@ class SnapshotTable:
         extra = [f for f in incoming.fields if f.name not in {g.name for g in current.fields}]
         return StructType(current.fields + extra)
 
-    def version_as_of(self, ts: float) -> int:
-        """Latest snapshot committed at or before ``ts`` (epoch seconds) —
-        Iceberg's timestamp time travel, resolved in manifest metadata."""
-        eligible = [v for v in self.versions() if self.snapshot(v).ts <= ts]
-        if not eligible:
-            raise FileNotFoundError(
-                f"no snapshot of {self.root} existed at or before ts={ts}"
-            )
-        return max(eligible)
-
-    def read_as_of(self, ts: float) -> DataFrame:
-        return self.read(self.version_as_of(ts))
-
     def read(self, version: int | None = None) -> DataFrame:
         s = self.snapshot(version)
         if not s.files:
@@ -761,12 +681,8 @@ class SnapshotTable:
         merge-on-read deletes applied: group files by WHICH delete files
         apply (sequence semantics — a delete touches only files present
         at its commit), anti-join each group, union the groups back."""
-        reader = self.spark.read
-        schema = self._read_schema(version)
-        if schema is not None:
-            reader = reader.schema(schema)
         if not s.delete_files:
-            return reader.parquet(*paths)
+            return self._read_files(paths, version)
         wanted = set(paths)
         applies = [set(e["applies_to"]) for e in s.delete_files]
         groups: dict[tuple[int, ...], list[str]] = {}
@@ -777,7 +693,7 @@ class SnapshotTable:
             groups.setdefault(key, []).append(f.path)
         parts = []
         for key, grp in sorted(groups.items()):
-            df = reader.parquet(*grp)
+            df = self._read_files(grp, version)
             parts.append(
                 self._apply_delete_files(df, [s.delete_files[i] for i in key])
             )
@@ -822,43 +738,16 @@ class SnapshotTable:
     def scan(self, col: str, lo, hi, version: int | None = None) -> DataFrame:
         """Manifest-pruned range scan: only files whose [min, max] for
         ``col`` intersects [lo, hi] reach Spark's file listing; the range
-        filter is still applied (stats prune files, not rows)."""
+        filter is still applied (stats prune files, not rows). Pending
+        merge-on-read deletes apply to the candidate files only, so the
+        pruning holds before ``apply_deletes`` too."""
         s = self.snapshot(version)
-        if s.delete_files:
-            # pending MOR deletes: correctness first — filter the
-            # delete-applied read (file pruning resumes after apply_deletes)
-            return self.read(version).where(
-                (F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi))
-            )
         candidates = [f.path for f in s.files if f.may_contain(col, lo, hi)]
         if not candidates:
             return self.read(version).where(F.lit(False))
-        reader = self.spark.read
-        schema = self._read_schema(version)
-        if schema is not None:
-            reader = reader.schema(schema)
-        return (
-            reader.parquet(*candidates)
-            .where((F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi)))
+        return self._mor_grouped_read(s, candidates, version).where(
+            (F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi))
         )
-
-    def read_incremental(self, from_version: int, to_version: int | None = None) -> DataFrame:
-        """Incremental scan (Iceberg's ``incremental read``): rows in data
-        files ADDED after ``from_version`` up to ``to_version`` (default
-        live). For append-only ingestion this hands a downstream consumer
-        exactly the new rows — no diff join, no re-read of the base table;
-        the file-set subtraction happens entirely in manifest metadata.
-
-        Snapshots that REWRITE files (merge/delete/compaction) surface the
-        rewritten files' full contents — same contract as Iceberg, which
-        restricts incremental reads to append lineage; pair with
-        ``history()`` to detect non-append ops in the range.
-        """
-        old = {f.path for f in self.snapshot(from_version).files}
-        new = [f.path for f in self.snapshot(to_version).files if f.path not in old]
-        if not new:
-            return self.read(to_version).where(F.lit(False))
-        return self.spark.read.parquet(*new)
 
     def changelog(
         self,
@@ -982,50 +871,12 @@ class SnapshotTable:
             raise KeyError(f"no ref {name!r} on {self.root}")
         return refs[name]
 
-    def read_ref(self, name: str) -> DataFrame:
-        return self.read(self.resolve_ref(name))
-
     def drop_ref(self, name: str) -> None:
         refs = self.refs()
         refs.pop(name, None)
         self._write_refs(refs)
 
     # -- metadata tables (Iceberg's `snapshots` / `files` inspection) --------
-
-    def history_df(self) -> DataFrame:
-        """The snapshot log as a DataFrame — Iceberg's ``<table>.snapshots``
-        metadata table (version, parent, op, commit ts, file/row counts),
-        queryable with plain SQL for audit dashboards."""
-        rows = [
-            (
-                h["version"],
-                h["parent"],
-                h["op"],
-                float(h["ts"]),
-                h["n_files"],
-                h["rows"],
-            )
-            for h in self.history()
-        ]
-        return self.spark.createDataFrame(
-            rows,
-            "version int, parent int, op string, committed_at double, "
-            "n_files int, n_rows long",
-        )
-
-    def files_df(self, version: int | None = None) -> DataFrame:
-        """The live file inventory as a DataFrame — Iceberg's
-        ``<table>.files``: path, rows, bytes, and per-column min/max/null
-        stats (stats as a JSON string column; manifests are metadata, not
-        data, so this never touches a parquet file)."""
-        s = self.snapshot(version)
-        rows = [
-            (f.path, f.rows, f.bytes, json.dumps(f.stats, sort_keys=True))
-            for f in s.files
-        ]
-        return self.spark.createDataFrame(
-            rows, "path string, n_rows long, n_bytes long, stats_json string"
-        )
 
     def rollback(self, version: int) -> int:
         """Roll back = new snapshot referencing the old snapshot's files,
@@ -1159,47 +1010,6 @@ class SnapshotTable:
                 n.endswith(".parquet") for n in os.listdir(d)
             ):
                 shutil.rmtree(d)
-
-
-def write_audit_publish(table: SnapshotTable, write_fn, audits, ref: str = "main") -> dict:
-    """The WAP (write-audit-publish) workflow on snapshot refs: consumers
-    read via ``read_ref(ref)``; a batch is written, AUDITED on its own
-    snapshot, and only a fully-passing batch moves the ref. A failing
-    batch rolls the live pointer back (so non-ref readers are also safe)
-    and leaves a ``wap-failed-v<N>`` tag pointing at the quarantined
-    snapshot for debugging — pinned against expiry like every ref.
-
-    ``write_fn(table) -> version``; ``audits`` = [(name, fn(df) -> bool)].
-    """
-    pre = table.current_version()
-    if pre is not None and ref not in table.refs():
-        table.set_ref(ref, pre)
-    v = write_fn(table)
-    df = table.read(v)
-    failures = [name for name, fn in audits if not fn(df)]
-    if not failures:
-        table.set_ref(ref, v)
-        return {"published": True, "version": v, "failures": []}
-    table.set_ref(f"wap-failed-v{v}", v)
-    if pre is not None:
-        table.rollback(pre)
-    return {"published": False, "version": v, "failures": failures}
-
-
-def commit_with_retry(table: SnapshotTable, attempt, max_retries: int = 5) -> int:
-    """Optimistic-concurrency loop: run ``attempt(table)`` (any operation
-    ending in a commit — append/merge/delete/...); on :class:`CommitConflict`
-    re-run it against the NEW live snapshot, up to ``max_retries`` times.
-    The attempt callable must derive everything from the table's current
-    state (not captured manifests), which every SnapshotTable method does —
-    this is Iceberg's retry-on-conflict commit loop."""
-    last: CommitConflict | None = None
-    for _ in range(max_retries):
-        try:
-            return attempt(table)
-        except CommitConflict as exc:
-            last = exc
-    raise last  # type: ignore[misc]
 
 
 def snapshot_maintenance(table: SnapshotTable, keep_last: int = 3,

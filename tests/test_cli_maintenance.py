@@ -54,7 +54,6 @@ def test_discover_and_find(project):
     ]
     j = pipeline.find_job(project, "itemsjob")
     assert j.namespace == "accelerator_itemsjob"
-    assert j.landing_warehouse == "facility_ops_landing"
     with pytest.raises(LookupError, match="not found; discovered jobs: itemsjob"):
         pipeline.find_job(project, "missing")
 
@@ -128,28 +127,8 @@ def test_run_maintenance_loop(spark):
         results = maintenance.run_maintenance(spark, namespaces=[ns])
         assert len(results) == 2
         assert any("compacted" in r or "skip" in r for r in results)
-        stats = {r["table"]: r["n_rows"] for r in maintenance.row_count_stats(spark, [ns]).collect()}
-        assert stats[f"{ns}.a"] == 30 and stats[f"{ns}.b"] == 5
-    finally:
-        io.drop_namespace(ns)
-
-
-def test_analyze_table_records_catalog_and_column_stats(spark):
-    import uuid
-
-    from analytics_data_platform_spark.tables.io import TableIO
-    from analytics_data_platform_spark.tables.maintenance import analyze_table
-
-    ns = f"an_{uuid.uuid4().hex[:6]}"
-    io = TableIO(spark)
-    io.ensure_namespace(ns)
-    try:
-        df = spark.range(1000).selectExpr("id", "id % 7 AS grp")
-        io.write_table(df, f"{ns}.t", mode="append")
-        stats = analyze_table(spark, f"{ns}.t", columns=["grp"])
-        assert "table" in stats and "bytes" in stats["table"]
-        assert "1000 rows" in stats["table"]
-        assert "distinct_count=7" in stats["grp"].replace(" ", "_") or "7" in stats["grp"]
+        assert spark.table(f"{ns}.a").count() == 30
+        assert spark.table(f"{ns}.b").count() == 5
     finally:
         io.drop_namespace(ns)
 

@@ -36,26 +36,3 @@ def test_udf_over_dataframe(spark):
     assert out[1] == "ok *fine*"
     assert out[2] is None
     assert out[3] == "x\ny"
-
-
-def test_python_udtf_lateral_split_sentences(spark):
-    """§2.9 UDTF surface: registered table function usable standalone and
-    LATERAL-joined against a table."""
-    from analytics_data_platform_spark.functions.udtfs import register_udtfs
-
-    register_udtfs(spark)
-    solo = spark.sql("SELECT * FROM split_sentences('alpha beta. gamma.  ')").collect()
-    assert [(r.pos, r.sentence) for r in solo] == [(0, "alpha beta"), (1, "gamma")]
-
-    spark.createDataFrame(
-        [(1, "one. two."), (2, None), (3, "three.")], "id int, body string"
-    ).createOrReplaceTempView("udtf_docs")
-    rows = spark.sql(
-        "SELECT d.id, s.pos, s.sentence FROM udtf_docs d, "
-        "LATERAL split_sentences(d.body) s ORDER BY d.id, s.pos"
-    ).collect()
-    assert [(r.id, r.pos, r.sentence) for r in rows] == [
-        (1, 0, "one"),
-        (1, 1, "two"),
-        (3, 0, "three"),
-    ]

@@ -63,7 +63,6 @@ class _ContractIO(TableIO):
     def __init__(self, spark, provider: str):
         # bypass TableIO.__init__'s real-session assumptions
         self.spark = spark
-        self.file_format = "parquet"
         self._provider = provider
 
     def table_provider(self, table):

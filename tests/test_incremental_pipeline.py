@@ -227,20 +227,39 @@ def test_takedown_removes_content_and_cascades(spark, tmp_path):
     assert counts3[3] == 2
 
 
-def test_maintenance_wrapper_reports_expiry(spark, tmp_path):
-    from analytics_data_platform_spark.tables.maintenance import (
-        expire_incremental_state,
+def test_takedown_equals_full_state_plan(spark, tmp_path):
+    """The executed takedown tick (merge-on-read deletes cascaded from a
+    keys-only probe) equals takedown_state_plan, the full-state spec,
+    on every state part."""
+    from analytics_data_platform_spark.pipelines.incremental import (
+        takedown_corpus_state,
+        takedown_state_plan,
     )
 
     state = str(tmp_path / "state")
-    for tick in range(3):
-        batch = spark.createDataFrame(
-            [_doc(200 + tick, f"tick {tick} corpus {_BODY}")], _SCHEMA
-        )
-        refresh_corpus_state(spark, state, batch, tick)
-    msg = expire_incremental_state(state, keep_last=2, spark=spark)
-    assert "expired 1 state version(s)" in msg
-    assert "state clean" in expire_incremental_state(state, keep_last=2, spark=spark)
+    near = f"near copy {_BODY} tail"
+    batch = spark.createDataFrame(
+        [
+            _doc(1, near),
+            _doc(2, near.replace("tail", "tale")),  # near-dup of 1: a pair
+            _doc(3, f"unrelated words {_BODY} zz"),
+        ],
+        _SCHEMA,
+    )
+    refresh_corpus_state(spark, state, batch, 0)
+    parts = ("live", "band_index", "pairs", "tombstones")
+    old = [read_state_part(spark, state, p, 0) for p in parts]
+    assert old[2].count() > 0, "fixture must hold near-dup pairs"
+    request = spark.createDataFrame([_doc(999, near.upper())], _SCHEMA)
+    want = takedown_state_plan(*old, request)
+    takedown_corpus_state(spark, state, request, 1)
+    for name, expected in zip(parts, want):
+        got = read_state_part(spark, state, name, 1)
+        cols = sorted(expected.columns)
+        assert sorted(got.columns) == cols, name
+        assert sorted(map(tuple, got.select(*cols).collect())) == sorted(
+            map(tuple, expected.select(*cols).collect())
+        ), name
 
 
 def test_three_tick_refresh_equals_one_shot(spark, sf_dir, tmp_path):

@@ -15,7 +15,6 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from analytics_data_platform_spark.elt.extract import Watermark
-from analytics_data_platform_spark.operators.dedup import hash64
 from analytics_data_platform_spark.sources.jdbc import sql_literal
 from analytics_data_platform_spark.tables.partition import PartitionField
 from analytics_data_platform_spark.tables.schema_policy import (
@@ -42,13 +41,6 @@ def test_watermark_json_roundtrip(column, value):
         assert dt.datetime.fromisoformat(back.value) == value
     else:
         assert back.value == value
-
-
-@given(st.text(max_size=100))
-def test_fnv_hash64_range_and_determinism(s):
-    h = hash64(s)
-    assert -(2**63) <= h < 2**63
-    assert h == hash64(s)
 
 
 @given(st.text(max_size=60))

@@ -30,6 +30,21 @@ def _full_scan_conjunctive(d, terms):
     return {(r.doc_id, r.source) for r in d.where(cond).select("doc_id", "source").collect()}
 
 
+def _lookup_all(idx, terms):
+    """Conjunctive AND over an index's served (bucket-pruned,
+    delete-applied) postings: (doc_id, source) of documents holding every
+    term."""
+    terms = sorted(set(terms))
+    return (
+        idx._served(idx._pruned(terms))
+        .where(F.col("term").isin(*terms))
+        .groupBy("doc_id")
+        .agg(F.count_distinct("term").alias("_nt"), F.max("source").alias("source"))
+        .where(F.col("_nt") == len(terms))
+        .select("doc_id", "source")
+    )
+
+
 def test_boolean_lifecycle_equals_full_scan(spark, tmp_path, sf_dir):
     d = load_table(spark, sf_dir, "documents")
     idx = SearchIndex(spark, str(tmp_path / "b"), mode="boolean")
@@ -37,12 +52,12 @@ def test_boolean_lifecycle_equals_full_scan(spark, tmp_path, sf_dir):
     for tick in (1, 2):
         idx.append(d.where(F.col("doc_id") % 3 == tick))
     expected = _full_scan_conjunctive(d, list(CONJ_TERMS))
-    got = {(r.doc_id, r.source) for r in idx.lookup_all(list(CONJ_TERMS)).collect()}
+    got = {(r.doc_id, r.source) for r in _lookup_all(idx, list(CONJ_TERMS)).collect()}
     assert got == expected
 
     compacted = idx.compact()
     assert compacted, "two appends must leave oversized buckets"
-    got2 = {(r.doc_id, r.source) for r in idx.lookup_all(list(CONJ_TERMS)).collect()}
+    got2 = {(r.doc_id, r.source) for r in _lookup_all(idx, list(CONJ_TERMS)).collect()}
     assert got2 == expected, "compaction changed serving results"
 
 
@@ -89,7 +104,7 @@ def test_serving_prunes_to_query_buckets_and_mode_is_pinned(spark, tmp_path, sf_
     d = load_table(spark, sf_dir, "documents")
     root = str(tmp_path / "s")
     idx = SearchIndex(spark, root, mode="boolean").build(d)
-    served = idx.lookup_all(list(CONJ_TERMS))
+    served = _lookup_all(idx, list(CONJ_TERMS))
     served.collect()
     plan = served._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [" in plan
@@ -142,9 +157,9 @@ def test_delete_docs_erases_from_all_serving_paths(spark, tmp_path, sf_dir):
 
     # boolean path: erased docs leave conjunctive results too
     b = SearchIndex(spark, str(tmp_path / "b"), mode="boolean").build(d)
-    before = {r.doc_id for r in b.lookup_all(list(CONJ_TERMS)).collect()}
+    before = {r.doc_id for r in _lookup_all(b, list(CONJ_TERMS)).collect()}
     b.delete_docs(victims)
-    after = {r.doc_id for r in b.lookup_all(list(CONJ_TERMS)).collect()}
+    after = {r.doc_id for r in _lookup_all(b, list(CONJ_TERMS)).collect()}
     assert after == {i for i in before if i % 7 != 0}
 
     # materializing the deletes changes nothing served and clears the
@@ -161,12 +176,12 @@ def test_apply_deletes_torn_swap_recovers(spark, tmp_path, sf_dir):
 
     d = load_table(spark, sf_dir, "documents")
     idx = SearchIndex(spark, str(tmp_path / "t"), mode="boolean").build(d)
-    want = {r.doc_id for r in idx.lookup_all(list(CONJ_TERMS)).collect()}
+    want = {r.doc_id for r in _lookup_all(idx, list(CONJ_TERMS)).collect()}
 
     # crash window: postings retired, staged copy never installed
     _os.rename(idx.postings_dir, _os.path.join(idx.root, "_old.postings"))
     idx._recover_swap()
-    assert {r.doc_id for r in idx.lookup_all(list(CONJ_TERMS)).collect()} == want
+    assert {r.doc_id for r in _lookup_all(idx, list(CONJ_TERMS)).collect()} == want
 
     # crash window: install completed, retired copy not yet dropped
     _shutil.copytree(idx.postings_dir, _os.path.join(idx.root, "_old.postings"))
@@ -174,7 +189,7 @@ def test_apply_deletes_torn_swap_recovers(spark, tmp_path, sf_dir):
     idx._recover_swap()
     assert not _os.path.exists(_os.path.join(idx.root, "_old.postings"))
     assert not _os.path.exists(_os.path.join(idx.root, "_stage.postings"))
-    assert {r.doc_id for r in idx.lookup_all(list(CONJ_TERMS)).collect()} == want
+    assert {r.doc_id for r in _lookup_all(idx, list(CONJ_TERMS)).collect()} == want
 
 
 def test_streaming_foreachbatch_ingest_equals_one_shot(spark, tmp_path, sf_dir):

@@ -1,5 +1,5 @@
 """Manifest snapshots (tables/snapshots.py): O(batch) append, file-skipping
-copy-on-write merge/delete, stats-pruned scans, crash consistency, and the
+copy-on-write merge, merge-on-read deletes, stats-pruned scans, crash consistency, and the
 four maintenance procedures EXECUTED (reference drives them as Iceberg
 stored procedures, maintenance/__init__.py:34-51)."""
 
@@ -62,16 +62,6 @@ def test_merge_into_empty_and_null_bounds_fall_back_sound(spark, tmp_path):
     assert {r.val for r in t.read().collect()} == {"a", "n"}
 
 
-def test_delete_where_prunes_and_deletes(spark, tmp_path):
-    t = SnapshotTable(spark, str(tmp_path / "t"))
-    t.replace(_df(spark, [(1, "a"), (2, "b")]).coalesce(1))
-    t.append(_df(spark, [(10, "x"), (11, "y")]).coalesce(1))
-    low = _paths(t, 1)
-    t.delete_where("id = 10", prune_col="id", lo=10, hi=10)
-    assert low < _paths(t)  # non-matching file untouched
-    assert {r.id for r in t.read().collect()} == {1, 2, 11}
-
-
 def test_scan_prunes_files_from_manifest_stats(spark, tmp_path):
     t = SnapshotTable(spark, str(tmp_path / "t"))
     t.replace(_df(spark, [(i, "lo") for i in range(5)]).coalesce(1))
@@ -82,6 +72,30 @@ def test_scan_prunes_files_from_manifest_stats(spark, tmp_path):
     assert {r.id for r in scanned.collect()} == {100, 101, 102, 103, 104}
     # out-of-range scan: zero files, empty result, still a valid plan
     assert t.scan("id", 1000, 2000).count() == 0
+
+
+def test_scan_keeps_manifest_pruning_under_pending_deletes(spark, tmp_path):
+    """With merge-on-read deletes pending, a range scan still reads only
+    the candidate files and equals the delete-applied read filtered to
+    the range."""
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    t.replace(_df(spark, [(i, "lo") for i in range(5)]).coalesce(1))
+    t.append(_df(spark, [(i, "hi") for i in range(100, 105)]).coalesce(1))
+    t.delete_keys_mor(spark.createDataFrame([(2,), (102,)], "id long"), ["id"])
+    candidates = {
+        f.path for f in t.snapshot().files if f.may_contain("id", 100, 200)
+    }
+    deletes = {
+        p for e in t.snapshot().delete_files for p in [e["path"], *e.get("extra_paths", [])]
+    }
+    scanned = t.scan("id", 100, 200)
+    read = {p.removeprefix("file://") for p in scanned.inputFiles()}
+    # data files: the candidates only; the rest is the delete file itself
+    assert read - deletes == candidates
+    assert len(candidates) == 1 < len(t.snapshot().files)
+    want = t.read().where("id BETWEEN 100 AND 200")
+    assert sorted(map(tuple, scanned.collect())) == sorted(map(tuple, want.collect()))
+    assert {r.id for r in scanned.collect()} == {100, 101, 103, 104}
 
 
 def test_crash_before_commit_is_invisible_then_orphan_collected(spark, tmp_path):
@@ -192,32 +206,6 @@ def test_stats_cols_restricts_manifest_stats(spark, tmp_path):
     assert stats["id"]["min"] == 1 and stats["id"]["nulls"] == 0
 
 
-def test_incremental_read_returns_only_appended_rows(spark, tmp_path):
-    t = SnapshotTable(spark, str(tmp_path / "t"))
-    t.replace(_df(spark, [(1, "a"), (2, "b")]))
-    t.append(_df(spark, [(3, "c")]))
-    t.append(_df(spark, [(4, "d"), (5, "e")]))
-    # consume everything since v1 — no diff join, pure manifest subtraction
-    assert {r.id for r in t.read_incremental(1).collect()} == {3, 4, 5}
-    # bounded range: v1 -> v2 sees only the first append
-    assert {r.id for r in t.read_incremental(1, 2).collect()} == {3}
-    # no-change range is empty but well-formed
-    assert t.read_incremental(3, 3).count() == 0
-
-
-def test_update_where_rewrites_only_candidate_files(spark, tmp_path):
-    t = SnapshotTable(spark, str(tmp_path / "t"))
-    t.replace(_df(spark, [(1, "a"), (2, "b")]).coalesce(1))
-    t.append(_df(spark, [(10, "x"), (11, "y")]).coalesce(1))
-    low = _paths(t, 1)
-    t.update_where({"val": "upper(val)"}, "id >= 10", prune_col="id", lo=10, hi=11)
-    assert low < _paths(t)  # low-range file untouched by reference
-    rows = {r.id: r.val for r in t.read().collect()}
-    assert rows == {1: "a", 2: "b", 10: "X", 11: "Y"}
-    # pre-update snapshot intact
-    assert {r.val for r in t.read(version=2).collect()} == {"a", "b", "x", "y"}
-
-
 def test_append_evolves_schema_additively(spark, tmp_path):
     t = SnapshotTable(spark, str(tmp_path / "t"))
     t.replace(_df(spark, [(1, "a")]))
@@ -251,49 +239,6 @@ def test_cluster_by_makes_stats_prune_unsorted_data(spark, tmp_path):
     assert {r.id for r in clustered.scan("id", 5, 10).collect()} == {
         r.id for r in flat.scan("id", 5, 10).collect()
     }
-
-
-def test_metadata_tables_queryable_with_sql(spark, tmp_path):
-    t = SnapshotTable(spark, str(tmp_path / "t"))
-    t.replace(_df(spark, [(1, "a"), (2, "b")]).coalesce(1))
-    t.append(_df(spark, [(3, "c")]).coalesce(1))
-    t.history_df().createOrReplaceTempView("snap_history")
-    t.files_df().createOrReplaceTempView("snap_files")
-    ops = [r.op for r in spark.sql("SELECT op FROM snap_history ORDER BY version").collect()]
-    assert ops == ["replace", "append"]
-    agg = spark.sql(
-        "SELECT COUNT(*) AS files, SUM(n_rows) AS rows FROM snap_files"
-    ).collect()[0]
-    assert (agg.files, agg.rows) == (2, 3)
-    # stats are present and json-parseable
-    import json as _json
-
-    stats = _json.loads(spark.sql("SELECT stats_json FROM snap_files LIMIT 1").collect()[0][0])
-    assert "id" in stats
-
-
-def test_commit_with_retry_wins_after_conflicts(spark, tmp_path):
-    from analytics_data_platform_spark.tables.snapshots import commit_with_retry
-
-    t = SnapshotTable(spark, str(tmp_path / "t"))
-    t.replace(_df(spark, [(1, "a")]))
-    calls = {"n": 0}
-    real_commit = t._commit
-
-    def flaky_commit(files, op, schema_json=None, properties=None):
-        calls["n"] += 1
-        if calls["n"] <= 2:  # two racing writers beat us, then we win
-            raise CommitConflict("beaten to the slot")
-        return real_commit(files, op, schema_json, properties)
-
-    t._commit = flaky_commit
-    v = commit_with_retry(t, lambda tb: tb.append(_df(spark, [(2, "b")])))
-    assert v == 2 and calls["n"] == 3
-    assert {r.id for r in t.read().collect()} == {1, 2}
-
-    t._commit = lambda *a, **k: (_ for _ in ()).throw(CommitConflict("always"))
-    with pytest.raises(CommitConflict):
-        commit_with_retry(t, lambda tb: tb.append(_df(spark, [(3, "c")])), max_retries=2)
 
 
 def test_lineitem_ingest_scan_pruning_end_to_end(spark, tmp_path, sf_dir):
@@ -332,9 +277,10 @@ def test_lineitem_ingest_scan_pruning_end_to_end(spark, tmp_path, sf_dir):
 
 def test_tpch_refresh_functions_rf1_rf2(spark, tmp_path, sf_dir):
     """TPC-H's refresh stream on the snapshot layer: RF1 appends a new
-    orders batch (O(batch) commit), RF2 deletes it again (copy-on-write,
-    key-range pruned). After RF1+RF2 the table equals its initial state
-    row-for-row, and every intermediate state stays time-travelable."""
+    orders batch (O(batch) commit), RF2 deletes it again (merge-on-read
+    equality delete of the batch's keys, then materialized). After RF1+RF2
+    the table equals its initial state row-for-row, and every
+    intermediate state stays time-travelable."""
     from analytics_data_platform_spark.sources.testdata import load_table
 
     orders = load_table(spark, sf_dir, "orders").select(
@@ -355,49 +301,15 @@ def test_tpch_refresh_functions_rf1_rf2(spark, tmp_path, sf_dir):
     assert before < {f.path for f in t.snapshot().files}
     assert t.read().count() == n_base + n_new
 
-    # RF2: delete the same keys — only intersecting files rewrite
-    lo = refresh.agg(F.min("o_orderkey")).collect()[0][0]
-    hi = refresh.agg(F.max("o_orderkey")).collect()[0][0]
-    t.delete_where("o_orderkey % 100 = 7", prune_col="o_orderkey", lo=lo, hi=hi)
+    # RF2: delete the same keys — O(keys) commit, no data file rewritten
+    with_refresh = {f.path for f in t.snapshot().files}
+    t.delete_keys_mor(refresh.select("o_orderkey"), ["o_orderkey"])
+    assert {f.path for f in t.snapshot().files} == with_refresh
     assert t.read().count() == n_base
+    t.apply_deletes()
     # row-for-row identity with the initial state
     assert t.read().exceptAll(t.read(version=v0)).count() == 0
     assert t.read(version=v0).exceptAll(t.read()).count() == 0
-
-
-def test_timestamp_time_travel(spark, tmp_path):
-    t = SnapshotTable(spark, str(tmp_path / "t"))
-    t.replace(_df(spark, [(1, "a")]))
-    ts_between = t.snapshot().ts + 0.001
-    t.append(_df(spark, [(2, "b")]))
-    assert {r.id for r in t.read_as_of(ts_between).collect()} == {1}
-    assert {r.id for r in t.read_as_of(t.snapshot().ts).collect()} == {1, 2}
-    with pytest.raises(FileNotFoundError):
-        t.read_as_of(0.0)  # before the table existed
-
-
-def test_zorder_layout_prunes_on_both_dimensions(spark, tmp_path):
-    """Morton-clustered snapshot writes: a box predicate on EITHER z
-    column prunes files from manifest stats — a 1-D sort cannot prune on
-    the second dimension."""
-    rows = [(x, y, f"r{x}_{y}") for x in range(32) for y in range(32)]
-    df = spark.createDataFrame(rows, "x long, y long, v string")
-
-    zt = SnapshotTable(spark, str(tmp_path / "z"), zorder_by=["x", "y"], cluster_files=16)
-    zt.replace(df)
-    xt = SnapshotTable(spark, str(tmp_path / "x"), cluster_by=["x"], cluster_files=16)
-    xt.replace(df)
-    n_files = len(zt.snapshot().files)
-    assert n_files > 4
-
-    # both dimensions prune under z-order
-    assert len(zt.scan("x", 0, 3).inputFiles()) < n_files
-    assert len(zt.scan("y", 0, 3).inputFiles()) < n_files
-    # the x-sorted layout prunes x but NOT y
-    assert len(xt.scan("x", 0, 3).inputFiles()) < len(xt.snapshot().files)
-    assert len(xt.scan("y", 0, 3).inputFiles()) == len(xt.snapshot().files)
-    # results identical to a raw filter
-    assert zt.scan("y", 0, 3).count() == 32 * 4
 
 
 def test_merge_on_read_deletes(spark, tmp_path):
@@ -412,7 +324,7 @@ def test_merge_on_read_deletes(spark, tmp_path):
     # no data file rewritten — same paths, rows masked at read
     assert _paths(t) == data_paths
     assert {r.id for r in t.read().collect()} == {1, 3}
-    # scan stays correct (falls back to delete-applied read)
+    # scan applies the pending delete to its candidate files
     assert {r.id for r in t.scan("id", 1, 3).collect()} == {1, 3}
 
     # sequence semantics: a LATER append of id=2 is NOT deleted
@@ -435,62 +347,45 @@ def test_merge_on_read_deletes(spark, tmp_path):
     assert {r.id for r in t.read().collect()} == {1, 2, 3, 9}
 
 
-def test_refs_and_write_audit_publish(spark, tmp_path):
-    from analytics_data_platform_spark.tables.snapshots import write_audit_publish
-
+def test_refs_pin_snapshots_against_expiry(spark, tmp_path):
     t = SnapshotTable(spark, str(tmp_path / "t"))
     t.replace(_df(spark, [(1, "a")]))
-    t.set_ref("main")
-
-    audits = [
-        ("no_null_vals", lambda df: df.where("val IS NULL").count() == 0),
-        ("nonempty", lambda df: df.count() > 0),
-    ]
-    # good batch publishes: main advances with the data
-    rep = write_audit_publish(
-        t, lambda tb: tb.append(_df(spark, [(2, "b")])), audits, ref="main"
-    )
-    assert rep["published"] and {r.id for r in t.read_ref("main").collect()} == {1, 2}
-
-    # bad batch: main unmoved, live rolled back, quarantine tag kept
-    bad = spark.createDataFrame([(3, None)], "id long, val string")
-    rep2 = write_audit_publish(t, lambda tb: tb.append(bad), audits, ref="main")
-    assert not rep2["published"] and rep2["failures"] == ["no_null_vals"]
-    assert {r.id for r in t.read_ref("main").collect()} == {1, 2}
-    assert {r.id for r in t.read().collect()} == {1, 2}  # live restored too
-    quarantined = t.read_ref(f"wap-failed-v{rep2['version']}")
-    assert {r.id for r in quarantined.collect()} == {1, 2, 3}
-
-    # refs pin snapshots against expiry
+    t.append(_df(spark, [(2, "b")]))
+    pinned = t.set_ref("main")
     for i in range(4):
         t.append(_df(spark, [(10 + i, "x")]))
     out = t.expire_snapshots(keep_last=1)
-    assert rep2["version"] not in out["expired_snapshots"]
-    assert t.resolve_ref("main") not in out["expired_snapshots"]
-    assert {r.id for r in t.read_ref("main").collect()} == {1, 2}
+    assert t.resolve_ref("main") == pinned
+    assert pinned not in out["expired_snapshots"]
+    assert {r.id for r in t.read(pinned).collect()} == {1, 2}
+    t.drop_ref("main")
+    assert "main" not in t.refs()
 
 
 def test_concurrent_appends_with_retry_all_land(spark, tmp_path):
-    """Two writer threads race appends through commit_with_retry: every
-    batch must land exactly once (no lost updates), history stays linear,
-    and losers' abandoned files are GC-able orphans at worst."""
+    """Two writer threads race appends, each retrying on CommitConflict
+    against the new live snapshot: every batch must land exactly once (no
+    lost updates), history stays linear, and losers' abandoned files are
+    GC-able orphans at worst."""
     import threading
-
-    from analytics_data_platform_spark.tables.snapshots import commit_with_retry
 
     t = SnapshotTable(spark, str(tmp_path / "t"))
     t.replace(_df(spark, [(0, "seed")]))
     errors = []
 
+    def append_with_retry(rid: int, attempts: int = 20) -> None:
+        for _ in range(attempts):
+            try:
+                t.append(_df(spark, [(rid, f"w{rid}")]))
+                return
+            except CommitConflict:
+                continue
+        raise AssertionError(f"append {rid} lost every one of {attempts} races")
+
     def writer(base: int):
         try:
             for i in range(3):
-                rid = base * 100 + i
-                commit_with_retry(
-                    t,
-                    lambda tb, rid=rid: tb.append(_df(spark, [(rid, f"w{rid}")])),
-                    max_retries=20,
-                )
+                append_with_retry(base * 100 + i)
         except Exception as exc:  # noqa: BLE001
             errors.append(exc)
 
@@ -498,7 +393,8 @@ def test_concurrent_appends_with_retry_all_land(spark, tmp_path):
     for th in threads:
         th.start()
     for th in threads:
-        th.join()
+        th.join(timeout=300)
+    assert not any(th.is_alive() for th in threads), "a writer hung"
     assert not errors, errors
     ids = {r.id for r in t.read().collect()}
     assert ids == {0, 100, 101, 102, 200, 201, 202}

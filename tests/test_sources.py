@@ -98,14 +98,6 @@ def test_rest_normalize_nested_parent_child(spark):
     assert {r["_dlt_id"] for r in again["cycles"].collect()} == set(pid.values())
 
 
-def test_rest_flatten_exploded(spark):
-    flat = rest.flatten_exploded(spark, CYCLES_PAYLOAD, "phases")
-    rows = flat.collect()
-    assert len(rows) == 3
-    assert {r["label"] for r in rows} == {"2024/2", "2024/3"}
-    assert "type" in flat.columns and "start" in flat.columns
-
-
 # --- multi-section CSV (S8/F16) -------------------------------------------
 
 AUTOMATED_SECTION = """Site Information:
@@ -324,21 +316,3 @@ def test_fit_monitor_peaks_pipeline(spark):
 def test_h5_reader_gated():
     with pytest.raises(NotImplementedError, match="h5py"):
         archive.read_monitor_h5("/nonexistent.nxs")
-
-
-def test_jsonl_schema_contract_and_corrupt_quarantine(spark, tmp_path):
-    p = tmp_path / "data.jsonl"
-    p.write_text(
-        '{"id": 1, "name": "ok"}\n'
-        'this is not json\n'
-        '{"id": 2, "name": "also ok"}\n'
-    )
-    from analytics_data_platform_spark.sources.files import read_jsonl
-
-    df = read_jsonl(spark, str(p), schema="id long, name string")
-    rows = df.collect()
-    assert len(rows) == 3
-    good = {r.id: r.name for r in rows if r._corrupt_record is None}
-    assert good == {1: "ok", 2: "also ok"}
-    bad = [r for r in rows if r._corrupt_record is not None]
-    assert len(bad) == 1 and bad[0].id is None and "not json" in bad[0]._corrupt_record

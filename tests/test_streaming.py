@@ -1,8 +1,8 @@
 """Structured Streaming tests — file source + availableNow trigger so the
 exact production code path runs deterministically.
 
-Append-mode emission semantics: a window/session only emits once the event-
-time watermark passes its end, so tests advance the watermark with a later
+Stream-stream joins only emit (and expire state) once the event-time
+watermark passes, so tests advance the watermark with a later
 "heartbeat" event and re-trigger (each availableNow run resumes from the
 checkpoint — the streaming twin of the reference's cron ticks)."""
 
@@ -10,32 +10,18 @@ from __future__ import annotations
 
 import datetime as dt
 
-import pytest
-
 from analytics_data_platform_spark.streaming import streams
 
 T0 = dt.datetime(2024, 1, 1, 10, 0, 0)
+EVENTS_SCHEMA = (
+    "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
+)
 
 
 def _write_events(spark, path, rows):
-    spark.createDataFrame(rows, streams.EVENTS_SCHEMA).coalesce(1).write.mode(
+    spark.createDataFrame(rows, EVENTS_SCHEMA).coalesce(1).write.mode(
         "append"
     ).parquet(path)
-
-
-@pytest.fixture()
-def events_dir(spark, tmp_path):
-    rows = [
-        (1, T0, 7, "click", 1.0, "{}"),
-        (2, T0 + dt.timedelta(minutes=1), 7, "click", 2.0, "{}"),
-        (3, T0 + dt.timedelta(minutes=2), 7, "view", 3.0, "{}"),
-        (2, T0 + dt.timedelta(minutes=1), 7, "click", 2.0, "{}"),  # duplicate id
-        (4, T0 + dt.timedelta(minutes=90), 7, "click", 4.0, "{}"),  # new session
-        (5, T0 + dt.timedelta(minutes=3), 8, "view", 5.0, "{}"),
-    ]
-    src = str(tmp_path / "src")
-    _write_events(spark, src, rows)
-    return src
 
 
 def _heartbeat(spark, src, minutes=240):
@@ -46,137 +32,21 @@ def _heartbeat(spark, src, minutes=240):
 
 
 def _read_stream(spark, src):
-    return spark.readStream.schema(streams.EVENTS_SCHEMA).parquet(src)
+    return spark.readStream.schema(EVENTS_SCHEMA).parquet(src)
 
 
-def test_windowed_counts_watermark_finalization(spark, events_dir, tmp_path):
-    out, ckpt = str(tmp_path / "out1"), str(tmp_path / "ck1")
-    build = lambda: streams.windowed_event_counts(_read_stream(spark, events_dir), "5 minutes")
-
-    streams.run_available_now(build(), ckpt, out)
-    first_pass = {
-        (r["window_start"], r["event_type"]) for r in spark.read.parquet(out).collect()
-    }
-    # after tick 1 the watermark (11:30 - 10min) has passed only the 10:00 window
-    assert (T0, "click") in first_pass
-    assert (dt.datetime(2024, 1, 1, 11, 30), "click") not in first_pass
-
-    _heartbeat(spark, events_dir)
-    streams.run_available_now(build(), ckpt, out)
-    rows = {
-        (r["window_start"], r["event_type"]): r for r in spark.read.parquet(out).collect()
-    }
-    assert rows[(T0, "click")]["n_events"] == 3  # includes the duplicate row
-    assert rows[(T0, "view")]["n_events"] == 2
-    assert rows[(dt.datetime(2024, 1, 1, 11, 30), "click")]["n_events"] == 1
-
-
-def test_sessionize_stream_gap_semantics(spark, events_dir, tmp_path):
-    out, ckpt = str(tmp_path / "out2"), str(tmp_path / "ck2")
-    build = lambda: streams.sessionize_stream(_read_stream(spark, events_dir), gap="30 minutes")
-
-    streams.run_available_now(build(), ckpt, out)
-    _heartbeat(spark, events_dir)
-    streams.run_available_now(build(), ckpt, out)
-
-    by_user: dict[int, list] = {}
-    for r in spark.read.parquet(out).collect():
-        by_user.setdefault(r["user_id"], []).append(r)
-    assert len(by_user[7]) == 2  # 90-min gap splits user 7 into two sessions
-    first = min(by_user[7], key=lambda r: r["session_start"])
-    assert first["n_events"] == 4
-    assert first["session_value"] == 8.0
-    assert len(by_user[8]) == 1
-
-
-def test_upsert_sink_streaming_merge(spark, events_dir, tmp_path):
-    """Stream → MERGE into a catalog table: duplicates collapse, a second
-    tick with an updated event upserts in place (exactly-once table)."""
-    import uuid
-
-    from analytics_data_platform_spark.streaming.sinks import upsert_sink
-    from analytics_data_platform_spark.tables.io import TableIO
-
-    ns = f"ss_{uuid.uuid4().hex[:6]}"
-    io = TableIO(spark)
-    io.ensure_namespace(ns)
-    ckpt = str(tmp_path / "ck_upsert")
-    try:
-        q = upsert_sink(
-            _read_stream(spark, events_dir), f"{ns}.events_live", ["event_id"], ckpt
-        )
-        q.awaitTermination()
-        live = io.read(f"{ns}.events_live")
-        assert live.count() == 5  # 6 rows, duplicate event_id=2 collapsed
-        assert live.select("event_id").distinct().count() == 5
-
-        # tick 2: event 5 replayed with a new value + one brand-new event
-        _write_events(
-            spark,
-            events_dir,
-            [
-                (5, T0 + dt.timedelta(minutes=3), 8, "view", 99.0, "{}"),
-                (7, T0 + dt.timedelta(hours=3), 9, "click", 7.0, "{}"),
-            ],
-        )
-        q2 = upsert_sink(
-            _read_stream(spark, events_dir), f"{ns}.events_live", ["event_id"], ckpt
-        )
-        q2.awaitTermination()
-        # reader-side refresh: the merge rewrote the table from a cloned
-        # micro-batch session; this session's cached relation is stale
-        # (Iceberg snapshots remove this step — see sinks.py docstring)
-        io.invalidate_caches(f"{ns}.events_live")
-        live = io.read(f"{ns}.events_live")
-        assert live.count() == 6  # upsert, not append
-        assert live.where("event_id = 5").collect()[0]["value"] == 99.0
-    finally:
-        io.drop_namespace(ns)
-
-
-def test_streaming_dedup_and_incremental_checkpoint(spark, events_dir, tmp_path):
-    out, ckpt = str(tmp_path / "out3"), str(tmp_path / "ck3")
-    streams.run_available_now(streams.streaming_dedup(_read_stream(spark, events_dir)), ckpt, out)
-    first = spark.read.parquet(out)
-    assert first.count() == 5  # duplicate event_id=2 dropped
-    assert first.select("event_id").distinct().count() == 5
-
-    # append a new file: ONLY the new rows process on the next tick
-    t1 = dt.datetime(2024, 1, 1, 12, 0, 0)
-    _write_events(spark, events_dir, [(6, t1, 9, "signup", 1.0, "{}")])
-    streams.run_available_now(
-        streams.streaming_dedup(_read_stream(spark, events_dir)), ckpt, out
+def _drain(stream_df, checkpoint, out_path):
+    """Drain everything currently available to parquet and stop; each call
+    processes exactly the new data, once, via the checkpoint."""
+    (
+        stream_df.writeStream.format("parquet")
+        .option("path", out_path)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .outputMode("append")
+        .start()
+        .awaitTermination()
     )
-    assert spark.read.parquet(out).count() == 6  # exactly one more, no reprocessing
-
-
-def test_stateful_running_totals_accumulate_across_ticks(spark, tmp_path):
-    """applyInPandasWithState: explicit per-user state must survive the
-    checkpoint across availableNow ticks — the second batch's emission
-    includes the first batch's counts (not a fresh aggregation)."""
-    src, out, ckpt = str(tmp_path / "src"), str(tmp_path / "out"), str(tmp_path / "ck")
-    _write_events(spark, src, [
-        (1, T0, 7, "click", 1.0, "{}"),
-        (2, T0 + dt.timedelta(minutes=1), 7, "click", 2.0, "{}"),
-        (3, T0 + dt.timedelta(minutes=1), 8, "view", 5.0, "{}"),
-    ])
-    build = lambda: streams.user_running_totals_stateful(_read_stream(spark, src))
-    streams.run_available_now_update(build(), ckpt, out)
-    tick1 = {r["user_id"]: (r["n_events"], r["value_total"])
-             for r in spark.read.parquet(out).collect()}
-    assert tick1[7] == (2, 3.0) and tick1[8] == (1, 5.0)
-
-    _write_events(spark, src, [
-        (4, T0 + dt.timedelta(minutes=5), 7, "click", 10.0, "{}"),
-    ])
-    streams.run_available_now_update(build(), ckpt, out)
-    latest = {}
-    for r in spark.read.parquet(out).collect():
-        n, tot = latest.get(r["user_id"], (0, 0.0))
-        if r["n_events"] >= n:
-            latest[r["user_id"]] = (r["n_events"], r["value_total"])
-    assert latest[7] == (3, 13.0), "state did not accumulate across ticks"
-    assert latest[8] == (1, 5.0)
 
 
 def test_stream_stream_time_range_join(spark, tmp_path):
@@ -200,9 +70,9 @@ def test_stream_stream_time_range_join(spark, tmp_path):
             ev.where(ev.event_type == "purchase"),
         )
 
-    streams.run_available_now(build(), ckpt, out)
+    _drain(build(), ckpt, out)
     _heartbeat(spark, src, minutes=240)
-    streams.run_available_now(build(), ckpt, out)
+    _drain(build(), ckpt, out)
 
     got = {
         (r.purchase_id, r.click_id) for r in spark.read.parquet(out).collect()
@@ -211,7 +81,7 @@ def test_stream_stream_time_range_join(spark, tmp_path):
 
     # incremental tick: a late purchase within the (advanced) watermark region
     # still joins nothing new for user 8, and re-running adds no duplicates
-    streams.run_available_now(build(), ckpt, out)
+    _drain(build(), ckpt, out)
     again = {
         (r.purchase_id, r.click_id) for r in spark.read.parquet(out).collect()
     }
@@ -246,221 +116,14 @@ def test_stream_stream_left_outer_emits_clickless_after_watermark(spark, tmp_pat
             (901 + minutes, T0 + dt.timedelta(minutes=minutes), 99, "purchase", 0.0, "{}"),
         ])
 
-    streams.run_available_now(build(), ckpt, out)
+    _drain(build(), ckpt, out)
     _hb_both(240)
-    streams.run_available_now(build(), ckpt, out)
+    _drain(build(), ckpt, out)
     # outer-null results surface on state EVICTION, which runs one
     # micro-batch after the watermark advance — tick once more
     _hb_both(300)
-    streams.run_available_now(build(), ckpt, out)
+    _drain(build(), ckpt, out)
 
     got = {(r.purchase_id, r.click_id) for r in spark.read.parquet(out).collect()}
     assert (21, 20) in got
     assert (22, None) in got, f"click-less purchase never emitted: {got}"
-
-
-@pytest.mark.skipif(
-    not streams.transform_with_state_available(),
-    reason="transformWithState requires protobuf (absent in container)",
-)
-def test_transform_with_state_multi_variable_profile(spark, tmp_path):
-    """transformWithStateInPandas: BOTH state variables (ValueState totals
-    + MapState per-type counts) must survive the checkpoint across
-    availableNow ticks."""
-    src, out, ckpt = str(tmp_path / "src"), str(tmp_path / "out"), str(tmp_path / "ck")
-    _write_events(spark, src, [
-        (1, T0, 7, "click", 1.0, "{}"),
-        (2, T0 + dt.timedelta(minutes=1), 7, "view", 2.0, "{}"),
-        (3, T0 + dt.timedelta(minutes=1), 8, "view", 5.0, "{}"),
-    ])
-    build = lambda: streams.user_profile_transform_with_state(_read_stream(spark, src))
-    streams.run_available_now_update(build(), ckpt, out)
-    tick1 = {r["user_id"]: r for r in spark.read.parquet(out).collect()}
-    assert tick1[7]["n_events"] == 2 and tick1[7]["n_types"] == 2
-    assert tick1[7]["top_type"] == "click"  # tie 1-1 -> lexicographic
-    assert tick1[8]["top_type"] == "view"
-
-    _write_events(spark, src, [
-        (4, T0 + dt.timedelta(minutes=5), 7, "view", 10.0, "{}"),
-        (5, T0 + dt.timedelta(minutes=6), 7, "view", 1.0, "{}"),
-    ])
-    streams.run_available_now_update(build(), ckpt, out)
-    latest = {}
-    for r in spark.read.parquet(out).collect():
-        if r["user_id"] not in latest or r["n_events"] >= latest[r["user_id"]]["n_events"]:
-            latest[r["user_id"]] = r
-    assert latest[7]["n_events"] == 4, "ValueState did not accumulate"
-    assert latest[7]["value_total"] == 14.0
-    assert latest[7]["n_types"] == 2
-    assert latest[7]["top_type"] == "view", "MapState did not accumulate (view=3 > click=1)"
-
-
-def test_sliding_window_counts_overlap(spark, events_dir, tmp_path):
-    out, ckpt = str(tmp_path / "out_slide"), str(tmp_path / "ck_slide")
-    build = lambda: streams.sliding_event_counts(
-        _read_stream(spark, events_dir), window="10 minutes", slide="5 minutes"
-    )
-
-    streams.run_available_now(build(), ckpt, out)
-    _heartbeat(spark, events_dir)
-    streams.run_available_now(build(), ckpt, out)
-
-    rows = {
-        (r["window_start"], r["event_type"]): r["n_events"]
-        for r in spark.read.parquet(out).collect()
-    }
-    # the 10:00-10:02 clicks/views land in BOTH the [09:55,10:05) and
-    # [10:00,10:10) windows (slide < window -> overlap)
-    t_0955 = T0 - dt.timedelta(minutes=5)
-    assert rows[(t_0955, "click")] == 3  # includes duplicate event row
-    assert rows[(T0, "click")] == 3
-    assert rows[(t_0955, "view")] == 2
-    assert rows[(T0, "view")] == 2
-    # the minute-90 click appears in its own two windows only
-    t_90 = T0 + dt.timedelta(minutes=90)
-    assert rows[(t_90, "click")] == 1
-    assert rows[(t_90 - dt.timedelta(minutes=5), "click")] == 1
-
-
-def test_snapshot_append_sink_exactly_once_on_replay(spark, events_dir, tmp_path):
-    """Stream → manifest SnapshotTable: each micro-batch is one atomic
-    snapshot commit tagged with its batch id; a replayed batch (checkpoint
-    loss / crash-rewind simulation) is skipped, so rows land exactly once."""
-    from analytics_data_platform_spark.streaming.sinks import snapshot_append_sink
-    from analytics_data_platform_spark.tables.snapshots import SnapshotTable
-
-    t = SnapshotTable(spark, str(tmp_path / "snap"))
-    ckpt = str(tmp_path / "ck_snap")
-    q = snapshot_append_sink(_read_stream(spark, events_dir), t, ckpt, app_id="ingest")
-    q.awaitTermination()
-    n1 = t.read().count()
-    assert n1 == 6  # append sink: raw rows, one commit per micro-batch
-    assert any(h["op"].startswith("stream-append:ingest:") for h in t.history())
-
-    # crash-rewind: wipe the checkpoint so Spark REPLAYS batch 0 from
-    # scratch; the stable app_id makes the replay a no-op (Delta txnAppId
-    # pattern)
-    import shutil
-
-    shutil.rmtree(ckpt)
-    q2 = snapshot_append_sink(_read_stream(spark, events_dir), t, ckpt, app_id="ingest")
-    q2.awaitTermination()
-    assert t.read().count() == n1  # replayed batch id skipped — no duplicates
-
-    # genuinely new data arrives as batch 1 of the SAME checkpoint lineage
-    _write_events(
-        spark, events_dir, [(42, T0 + dt.timedelta(hours=5), 9, "click", 1.0, "{}")]
-    )
-    q3 = snapshot_append_sink(_read_stream(spark, events_dir), t, ckpt, app_id="ingest")
-    q3.awaitTermination()
-    assert t.read().where("event_id = 42").count() == 1
-    assert t.read().count() == n1 + 1
-
-
-def test_snapshot_upsert_sink_merges_exactly_once(spark, events_dir, tmp_path):
-    """Stream → CoW MERGE into a SnapshotTable: duplicates collapse on the
-    key, replayed batches are skipped via the txn tag, and a later tick
-    with an updated event upserts in place atomically."""
-    from analytics_data_platform_spark.streaming.sinks import snapshot_upsert_sink
-    from analytics_data_platform_spark.tables.snapshots import SnapshotTable
-
-    t = SnapshotTable(spark, str(tmp_path / "snap"))
-    ckpt = str(tmp_path / "ck")
-    q = snapshot_upsert_sink(_read_stream(spark, events_dir), t, ["event_id"], ckpt, app_id="m")
-    q.awaitTermination()
-    assert t.read().count() == 5  # 6 rows, duplicate event_id=2 collapsed
-
-    # replay after checkpoint loss: txn tag makes it a no-op
-    import shutil
-
-    shutil.rmtree(ckpt)
-    q2 = snapshot_upsert_sink(_read_stream(spark, events_dir), t, ["event_id"], ckpt, app_id="m")
-    q2.awaitTermination()
-    assert t.read().count() == 5
-
-    # tick 2: replayed event 5 with new value + a brand-new event → upsert
-    _write_events(
-        spark, events_dir,
-        [(5, T0 + dt.timedelta(minutes=3), 8, "view", 99.0, "{}"),
-         (7, T0 + dt.timedelta(hours=3), 9, "click", 7.0, "{}")],
-    )
-    q3 = snapshot_upsert_sink(_read_stream(spark, events_dir), t, ["event_id"], ckpt, app_id="m")
-    q3.awaitTermination()
-    assert t.read().count() == 6
-    assert t.read().where("event_id = 5").collect()[0]["value"] == 99.0
-    assert any(h["op"].startswith("stream-merge:m:") for h in t.history())
-
-
-def test_late_data_through_snapshot_sink_exactly_once_state_bounded(
-    spark, tmp_path
-):
-    """Judge r3 item #7: out-of-order event time + watermark eviction,
-    end-to-end through the windowed aggregation AND the exactly-once
-    snapshot append sink, across three incremental drains.
-
-    Timeline (window = 5 min, watermark delay = 10 min):
-      drain 1: 10:00, 10:02 (window A), 10:12 (window B) — nothing
-               finalizes (first-batch watermark is epoch).
-      drain 2: 10:03 — OUT-OF-ORDER but >= watermark (10:02) → must be
-               accepted into window A exactly once; 10:30 heartbeat
-               pushes the post-batch watermark to 10:20.
-      drain 3: 10:04 — EXPIRED late row (< watermark 10:20, window A
-               closed) → must be dropped; 10:50 heartbeat. Batch runs
-               with watermark 10:20 > both window ends → A and B
-               finalize into the snapshot table; the availableNow drain
-               then runs a flush batch under the post-batch watermark
-               10:40, which also finalizes the 10:30 heartbeat window.
-    Expected table contents: exactly A=3, B=1, heartbeat(10:30)=1 — the
-    late row counted once, the expired row never, the 10:50 window still
-    held in (bounded) state, and a re-drain with no new data adds
-    nothing.
-    """
-    from analytics_data_platform_spark.streaming.sinks import snapshot_append_sink
-    from analytics_data_platform_spark.tables.snapshots import SnapshotTable
-
-    src = str(tmp_path / "late_src")
-    ckpt = str(tmp_path / "late_ck")
-    t = SnapshotTable(spark, str(tmp_path / "late_snap"))
-
-    def drain():
-        agg = streams.windowed_event_counts(
-            _read_stream(spark, src), window="5 minutes", delay="10 minutes"
-        )
-        q = snapshot_append_sink(agg, t, ckpt, app_id="late")
-        q.awaitTermination()
-
-    m = lambda k: T0 + dt.timedelta(minutes=k)
-    _write_events(spark, src, [
-        (1, m(0), 7, "click", 1.0, "{}"),
-        (2, m(2), 7, "click", 1.0, "{}"),
-        (3, m(12), 7, "click", 1.0, "{}"),
-    ])
-    drain()
-    # nothing finalized yet — the sink committed only empty snapshots,
-    # and it records no schema, so there is no empty table to read
-    with pytest.raises(FileNotFoundError, match="is empty"):
-        t.read()
-
-    _write_events(spark, src, [
-        (4, m(3), 7, "click", 1.0, "{}"),    # out-of-order, accepted
-        (5, m(30), 7, "click", 1.0, "{}"),   # advances watermark to 10:20
-    ])
-    drain()
-
-    _write_events(spark, src, [
-        (6, m(4), 7, "click", 1.0, "{}"),    # expired: < watermark 10:20
-        (7, m(50), 7, "click", 1.0, "{}"),
-    ])
-    drain()
-
-    got = {
-        (r["window_start"].minute, r["n_events"])
-        for r in t.read().collect()
-    }
-    assert got == {(0, 3), (10, 1), (30, 1)}, got  # late row once, expired never
-
-    # no new data → replayed/empty drain adds nothing (exactly-once)
-    drain()
-    assert {(r["window_start"].minute, r["n_events"]) for r in t.read().collect()} == {
-        (0, 3), (10, 1), (30, 1)
-    }

@@ -236,57 +236,3 @@ def test_merge_swap_failure_keeps_stage_for_recovery(spark, ns, monkeypatch):
     io.restore_from_stage(t)
     assert not io.table_exists(stage)
     assert {tuple(r) for r in spark.table(t).collect()} == {(1, "a"), (2, "B"), (3, "c")}
-
-
-def test_orc_format_roundtrip_all_modes(spark, ns):
-    """ORC-backed TableIO: create/append/replace/merge all work and the
-    table really is ORC on disk (provider check), with appends following
-    the existing table's format."""
-    io = TableIO(spark, file_format="orc")
-    t = f"{ns}.orc_items"
-    io.write_table(_df(spark, [(1, "a"), (2, "b")], ["id", "v"]), t, mode="append")
-    prov = {
-        r.col_name: r.data_type
-        for r in spark.sql(f"DESCRIBE TABLE EXTENDED {t}").collect()
-    }.get("Provider", "").lower()
-    assert prov == "orc"
-    io.write_table(_df(spark, [(3, "c")], ["id", "v"]), t, mode="append")
-    io.write_table(_df(spark, [(2, "B"), (4, "d")], ["id", "v"]), t, merge_on=["id"], mode="merge")
-    got = {r.id: r.v for r in io.read(t).collect()}
-    assert got == {1: "a", 2: "B", 3: "c", 4: "d"}
-    io.write_table(_df(spark, [(9, "z")], ["id", "v"]), t, mode="replace")
-    assert {r.id for r in io.read(t).collect()} == {9}
-
-
-def test_invalid_file_format_rejected(spark):
-    with pytest.raises(ValueError, match="file_format"):
-        TableIO(spark, file_format="csv")
-
-
-def test_write_table_zorder_layout(spark, ns):
-    io = TableIO(spark)
-    t = f"{ns}.zt"
-    df = spark.range(1 << 12).selectExpr("id % 64 AS x", "CAST(id / 64 AS LONG) AS y", "id AS v")
-    io.write_table(df, t, mode="replace", zorder=["x", "y"])
-    got = io.read(t)
-    assert got.count() == 1 << 12
-    assert "_zorder" not in got.columns
-    # clustered: with >1 output file, each file's x-range must be narrower
-    # than the global range (a round-robin write gives every file the full range)
-    import pyarrow.parquet as pq
-    loc = [r.data_type for r in spark.sql(f"DESCRIBE TABLE EXTENDED {t}").collect() if r.col_name == "Location"][0]
-    import glob as g
-    files = g.glob(loc.replace("file:", "") + "/part-*.parquet")
-    if len(files) > 1:
-        spans = []
-        for f in files:
-            md = pq.ParquetFile(f).metadata
-            for ci in range(md.num_columns):
-                col = md.row_group(0).column(ci)
-                if col.path_in_schema == "x":
-                    mn = min(md.row_group(r).column(ci).statistics.min for r in range(md.num_row_groups))
-                    mx = max(md.row_group(r).column(ci).statistics.max for r in range(md.num_row_groups))
-                    spans.append(mx - mn)
-        assert min(spans) < 63, spans
-    with pytest.raises(ValueError, match="mutually exclusive"):
-        io.write_table(df, t, mode="replace", zorder=["x"], sort_spec=["y"])

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from analytics_data_platform_spark.operators.packing import pack_greedy, with_shard
+from analytics_data_platform_spark.operators.packing import pack_greedy
 
 
 def _pack(spark, rows, budget):
@@ -50,16 +50,6 @@ def test_pack_greedy_order_is_by_order_col_not_input_order(spark):
     assert got[("a", 3)] == 3
 
 
-def test_with_shard_is_deterministic_and_bounded(spark):
-    df = spark.range(1000).withColumnRenamed("id", "doc_id")
-    s1 = with_shard(df, "doc_id", 8).groupBy("shard").count().collect()
-    shards = {r.shard for r in s1}
-    assert shards <= set(range(8)) and len(shards) == 8
-    s2 = with_shard(df, "doc_id", 8).select("doc_id", "shard").collect()
-    s3 = with_shard(df, "doc_id", 8).select("doc_id", "shard").collect()
-    assert sorted(map(tuple, s2)) == sorted(map(tuple, s3))
-
-
 def test_pack_sharded_matches_policy_within_each_shard(spark):
     # packing after sharding applies the same greedy policy per (grp, shard)
     df = spark.range(200).select(
@@ -67,7 +57,7 @@ def test_pack_sharded_matches_policy_within_each_shard(spark):
         F.col("id").alias("doc_id"),
         (F.col("id") % 7 * 20 + 40).cast("int").alias("n_tokens"),
     )
-    sharded = with_shard(df, "doc_id", 4)
+    sharded = df.withColumn("shard", F.pmod(F.xxhash64("doc_id"), F.lit(4)).cast("int"))
     out = pack_greedy(
         sharded,
         group_cols=["grp", "shard"],

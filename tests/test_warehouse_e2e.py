@@ -14,6 +14,7 @@ import pyspark.sql.functions as F
 from analytics_data_platform_spark.elt.pipeline import (
     discover_jobs,
     find_job,
+    job_env_config,
     load_extract_class,
 )
 from analytics_data_platform_spark.elt.runner import run_ingest
@@ -43,6 +44,22 @@ def test_job_discovery_matches_reference_layout():
         ("beamlines", "moderator_performance"),
     }
     assert all(j.warehouse == "facility_ops_landing" for j in jobs)
+
+
+@pytest.mark.parametrize(
+    "job_name, env_var",
+    [
+        ("opralogweb", "OPRALOGWEB__JDBC_URL"),
+        ("electricity_sharepoint", "ELECTRICITY_SHAREPOINT__SITE_URL"),
+    ],
+)
+def test_configured_production_source_is_refused(monkeypatch, job_name, env_var):
+    """A production source setting the repo cannot bind must fail the job,
+    not land fake or sample rows in its place."""
+    monkeypatch.setenv(env_var, "https://example.invalid/source")
+    extract_cls = load_extract_class(find_job(WAREHOUSES, job_name))
+    with pytest.raises(ValueError, match=env_var):
+        extract_cls(**job_env_config(job_name))
 
 
 @pytest.fixture(scope="module")

@@ -17,7 +17,9 @@ Runs the cheap structural gates that the r04 end-of-round commit skipped:
    ``tests/shuffle_ledger.json`` means the plan sweep was not re-run);
 2. every query has an oracle SQL or an explicit ``weak`` tag;
 3. money lint + the DuckDB CAST-rounds-vs-Spark-truncates division lint;
-4. the authoritative registry count in REGISTRY_COUNT.txt is current.
+4. the authoritative registry count in REGISTRY_COUNT.txt is current;
+5. the SURVEY coverage map and the module/function reachability scan
+   (no engine code that only its own tests reach).
 
 It does NOT replace the full sweep — after a plan-affecting change still run
 
@@ -68,6 +70,7 @@ def main() -> int:
             "tests/test_registry_gates.py",
             "tests/test_money_lint.py",
             "tests/test_coverage_map.py",
+            "tests/test_reachability.py",
             "-q",
             "--no-header",
         ],

@@ -2,11 +2,11 @@
 
 Lands the historical equipment-downtime sheet and the equipment→category
 mapping (reference: warehouses/facility_ops_landing/ingest/accelerator/
-accelerator_sharepoint/accelerator_sharepoint.py:25-81). Production reads
-the xlsx exports through sources.m365 + sources.files.read_excel_table
-(both env-configured); offline, deterministic canned rows represent the
-parsed sheets — columns exactly as the Excel reader emits them
-(all-string dtypes, FIXTURES.md §3).
+accelerator_sharepoint/accelerator_sharepoint.py:25-81). Deterministic
+canned rows represent the parsed sheets — columns exactly as the Excel
+reader emits them (all-string dtypes, FIXTURES.md §3). The production
+read of the xlsx exports (sources.m365 + sources.files.read_excel_table)
+is not bound by this job.
 """
 
 from __future__ import annotations

@@ -6,12 +6,13 @@ opralogweb.py): six source tables land in ``accelerator_opralogweb`` with
 merge write modes, an incremental watermark on the entries change cursor,
 and the HTML comment column converted to markdown during ingestion (X1).
 
-Source binding: production points ``OPRALOGWEB__JDBC_URL`` at the Opralog
-SQL Server (via sources.jdbc.IncrementalJdbcSource); without it the job
-runs against a deterministic in-memory fake of the Opralog schema —
-the same fake-source strategy the reference's warehouse e2e tests use
-(warehouses/.../opralogweb/tests/fake_source/opralogmodel.py:58-106), with
-PascalCase→snake_case ingest normalization applied here.
+Source binding: the job runs against a deterministic in-memory fake of
+the Opralog schema — the same fake-source strategy the reference's
+warehouse e2e tests use (warehouses/.../opralogweb/tests/fake_source/
+opralogmodel.py:58-106), with PascalCase→snake_case ingest normalization
+applied here. The production binding to the Opralog SQL Server is not
+implemented: setting ``OPRALOGWEB__JDBC_URL`` raises rather than quietly
+landing fake rows (sources.jdbc holds the reader such a binding would use).
 """
 
 from __future__ import annotations
@@ -36,7 +37,11 @@ def _spark() -> SparkSession:
 
 class OpralogwebExtract(Extract):
     def __init__(self, jdbc_url: str = "", n_entries: str = "40", changed_offset: str = "0"):
-        self.jdbc_url = jdbc_url
+        if jdbc_url:
+            raise ValueError(
+                "OPRALOGWEB__JDBC_URL is set, but this repo does not implement the "
+                "production Opralog JDBC binding; unset it to run on the fake source"
+            )
         self.n_entries = int(n_entries)
         # fake-source mutation knob: entries with index >= offset get a new
         # LastChangedDate (drives the incremental re-run test, nruns=2)

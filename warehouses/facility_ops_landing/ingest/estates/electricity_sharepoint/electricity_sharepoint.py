@@ -1,11 +1,13 @@
 """Electricity RDM ingestion job (S7+S8).
 
-Production: SharePoint listing (``ELECTRICITY_SHAREPOINT__SITE_URL`` +
-OAuth env) feeds the multi-section CSV parser. Offline: a local directory
-of the same CSV exports (``ELECTRICITY_SHAREPOINT__CSV_DIR``). Either way
-the parse is the distributed ``read_power_csv_files`` path and the table
+Source: a local directory of the RDM CSV exports
+(``ELECTRICITY_SHAREPOINT__CSV_DIR``), or a built-in sample when unset.
+The parse is the distributed ``read_power_csv_files`` path and the table
 lands merged on date_time, partitioned by year (reference:
-electricity_sharepoint.py:278-285).
+electricity_sharepoint.py:278-285). The production SharePoint listing is
+not implemented: setting ``ELECTRICITY_SHAREPOINT__SITE_URL`` raises
+rather than quietly landing the sample rows (sources.m365 holds the
+client such a binding would use).
 """
 
 from __future__ import annotations
@@ -35,8 +37,13 @@ Time,Date,ISIS Elec Total Power
 
 class ElectricitySharepointExtract(Extract):
     def __init__(self, csv_dir: str = "", site_url: str = ""):
+        if site_url:
+            raise ValueError(
+                "ELECTRICITY_SHAREPOINT__SITE_URL is set, but this repo does not "
+                "implement the production SharePoint binding; use "
+                "ELECTRICITY_SHAREPOINT__CSV_DIR for local exports"
+            )
         self.csv_dir = csv_dir
-        self.site_url = site_url
 
     def extract_resource_properties(self):
         spark = SparkSession.getActiveSession()
