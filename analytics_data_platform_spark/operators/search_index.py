@@ -14,24 +14,27 @@ full lifecycle —
     idx.compact()              # per-bucket small-file rewrite (atomic
                                # swaps, crash-recovered)
     idx.bm25(queries, k=10)    # ranked top-k reading ONLY query buckets
-    idx.phrase(a, b)           # positional adjacency (mode="positional")
 
-Modes fix the posting layout at build time:
-- "boolean":    (term, doc_id, source)            — membership queries
-- "positional": (term, doc_id, source, pos)       — phrase/proximity
-- "scored":     (term, doc_id, tf, dl)            — ranked BM25, plus a
-  corpus-stats sidecar (n_docs, total_dl as exact integers; avgdl is
-  derived at serve) updated associatively on append, so the ranked cut
-  provably equals a one-shot build at every point in the ingest history
-  (the property queries/search_ops.py::inverted_index_bm25_incremental
-  gates against the full-scan oracle).
+The posting layout is (term, doc_id, tf, dl) under ``bucket=N``
+directories — ranked BM25 — plus a corpus-stats sidecar in
+``_meta.json`` (n_docs, total_dl as exact integers; avgdl is derived at
+serve) updated associatively on append, so the ranked cut provably
+equals a one-shot build at every point in the ingest history (the
+property queries/search_ops.py::inverted_index_bm25_incremental gates
+against the full-scan oracle). ``mode`` names that layout; "scored" is
+the only one, and the sidecar pins it so a handle cannot mis-read an
+index another version laid out differently.
 
 Scale shape: the build/append passes are the only corpus-sized work;
-serving cost is O(posting lists of the query terms) — static partition
-pruning (plan-guarded in tests) keeps 100 TB corpora out of the read
-path entirely. Reference analogue: the reference exposes retrieval only
-as full-scan SQL over Trino (dbt marts); this is the Lucene-shaped
-serving layer a training-data platform needs at scale.
+serving cost is O(posting lists of the query terms). A request routes
+its terms to buckets on the driver (a port of Spark's string hash),
+reads only those buckets' directories with the schema taken from a
+parquet footer, and runs as one Spark query plus its collect: no job
+for routing, schema inference or literal frames, so 100 TB corpora stay
+out of the read path entirely. Reference analogue: the reference
+exposes retrieval only as full-scan SQL over Trino (dbt marts); this is
+the Lucene-shaped serving layer a training-data platform needs at
+scale.
 """
 
 from __future__ import annotations
@@ -39,19 +42,76 @@ from __future__ import annotations
 import json
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import IntegerType, StructType
 
 from analytics_data_platform_spark.functions.concurrency import await_all
 from analytics_data_platform_spark.queries.search_ops import (
     INDEX_BUCKETS,
     _bm25_index_serve,
-    _posting_rows,
-    _positional_posting_rows,
+    _query_frame,
     _scored_posting_rows,
+    term_buckets,
 )
 
-_MODES = ("boolean", "positional", "scored")
+_MODES = ("scored",)
+_SPARK_ROW_META = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _visible(name: str) -> bool:
+    """Spark's reader skips ``_``/``.`` names (staging dirs, markers,
+    checksums); every driver-side listing here must skip the same."""
+    return not name.startswith(("_", "."))
+
+
+def _data_files(root: str):
+    """Relative paths of the parquet data files under ``root``, walked in
+    sorted order, pruning what Spark's reader would not see."""
+    for walk_dir, dirs, files in os.walk(root):
+        dirs[:] = sorted(x for x in dirs if _visible(x))
+        rel = os.path.relpath(walk_dir, root)
+        for f in sorted(files):
+            if f.endswith(".parquet") and _visible(f):
+                yield os.path.join(rel, f)
+
+
+def footer_schema(root: str) -> StructType:
+    """The Spark schema of the first data file under ``root``, read from
+    the row metadata Spark writes into every parquet footer. Handing it
+    to the reader spares each read the schema-inference job a
+    schema-less ``spark.read.parquet`` runs."""
+    for f in _data_files(root):
+        meta = pq.read_metadata(os.path.join(root, f)).metadata
+        return StructType.fromJson(json.loads(meta[_SPARK_ROW_META]))
+    raise FileNotFoundError(f"no parquet data file under {root}")
+
+
+def delete_ids_literal(
+    spark: SparkSession, root: str, cached: tuple | None
+) -> tuple[tuple, DataFrame] | None:
+    """``(listing, frame)`` of every id in a merge-on-read delete sidecar
+    (one subdirectory per delete call, merged segments' nested under
+    theirs), or None when it holds no file. The sidecar is bounded by
+    design (O(deleted) ids) and immutable per file, so the files are read
+    on the driver and served as ONE literal frame: an Arrow table plans
+    as a ``LocalTableScan`` — no scan, inference or RDD job per serve or
+    mutate, and the anti-join broadcast builds from a local relation.
+    ``cached`` (an earlier return value) is returned as is while the file
+    listing is unchanged; any writer (delete, apply, merge — this process
+    or another) changes the listing and invalidates it. Shared by
+    SearchIndex and VectorIndex."""
+    if not os.path.isdir(root):
+        return None
+    listing = tuple(_data_files(root))
+    if not listing:
+        return None
+    if cached is not None and cached[0] == listing:
+        return cached
+    table = pa.concat_tables([pq.read_table(os.path.join(root, f)) for f in listing])
+    return listing, spark.createDataFrame(table)
 
 
 def adopt_parquet_tree(src: str, dst: str, tag: str) -> None:
@@ -93,7 +153,7 @@ class SearchIndex:
         self,
         spark: SparkSession,
         root: str,
-        mode: str = "boolean",
+        mode: str = "scored",
         buckets: int = INDEX_BUCKETS,
     ) -> None:
         if mode not in _MODES:
@@ -112,6 +172,7 @@ class SearchIndex:
                 )
         self.mode = mode
         self.buckets = int(buckets)
+        self._dels_cache = None
 
     # -- metadata (atomic tmp+rename; underscore name is invisible to
     #    Spark's partition discovery) ------------------------------------
@@ -187,22 +248,14 @@ class SearchIndex:
     # -- build / ingest ---------------------------------------------------
 
     def _posting_frame(self, docs: DataFrame) -> DataFrame:
-        if self.mode == "scored":
-            postings, _ = _scored_posting_rows(docs)
-            # dl rides the explode/aggregation as an int (narrower shuffle
-            # bytes, guide §2.3) but PERSISTS as long: indexes built before
-            # the dl-carry change wrote dl = sum(tf) (LongType), and durable
-            # roots append across engine versions — a mixed int/long dl
-            # parquet tree can fail to read without mergeSchema. The cast
-            # sits above the aggregation, so no shuffle widens.
-            postings = postings.withColumn("dl", F.col("dl").cast("long"))
-        else:
-            builder = (
-                _positional_posting_rows
-                if self.mode == "positional"
-                else _posting_rows
-            )
-            postings = builder(docs)
+        postings, _ = _scored_posting_rows(docs)
+        # dl rides the explode/aggregation as an int (narrower shuffle
+        # bytes, guide §2.3) but PERSISTS as long: indexes built before
+        # the dl-carry change wrote dl = sum(tf) (LongType), and durable
+        # roots append across engine versions — a mixed int/long dl
+        # parquet tree can fail to read without mergeSchema. The cast
+        # sits above the aggregation, so no shuffle widens.
+        postings = postings.withColumn("dl", F.col("dl").cast("long"))
         if self.buckets != INDEX_BUCKETS:
             postings = postings.withColumn(
                 "bucket", F.pmod(F.hash("term"), F.lit(self.buckets))
@@ -210,7 +263,7 @@ class SearchIndex:
         return postings
 
     def _batch_totals(self, docs: DataFrame) -> dict:
-        """Exact scored-mode stats totals, computed from the DOCS frame,
+        """Exact stats totals, computed from the DOCS frame,
         not the posting rows: n_docs = distinct ids, total_dl = Σ per-doc
         token count — identical by construction to
         (count_distinct(doc_id), sum(tf)) over the postings (dl is the
@@ -220,8 +273,6 @@ class SearchIndex:
         compute things twice). Null-text docs produce no posting rows
         (explode drops null arrays) — excluded here too so both
         formulations agree."""
-        if self.mode != "scored":
-            return {}
         agg = docs.where(F.col("text").isNotNull()).agg(
             F.count_distinct("doc_id").alias("n_docs"),
             F.coalesce(
@@ -262,8 +313,8 @@ class SearchIndex:
         self, docs: DataFrame, write_mode: str, docmeta: bool = True
     ) -> tuple[None, dict]:
         """Run the batch's independent ingest jobs concurrently (guide
-        §2.6): the posting write, the docmeta sidecar write, and (scored
-        mode) the batch-totals agg. Nothing is shared downstream until
+        §2.6): the posting write, the docmeta sidecar write, and the
+        batch-totals agg. Nothing is shared downstream until
         every job finished, and a failure in any job propagates before
         any metadata commits."""
         from concurrent.futures import ThreadPoolExecutor
@@ -292,7 +343,7 @@ class SearchIndex:
     def append(self, docs: DataFrame) -> "SearchIndex":
         """Partition-wise O(batch) posting append. The bucket is a pure
         per-row function of the term, so the appended index provably
-        equals the one-shot build over the union; for the scored mode the
+        equals the one-shot build over the union; the
         corpus stats update associatively from the BATCH alone (doc_ids
         must be disjoint from the resident corpus — the same stable-id
         precondition the incremental pipeline enforces)."""
@@ -544,41 +595,38 @@ class SearchIndex:
     # -- serving (every read prunes to the query terms' buckets) ----------
 
     def _bucket_of(self, terms: list[str]) -> list[int]:
-        rows = (
-            self.spark.createDataFrame([(t,) for t in sorted(set(terms))], "term string")
-            .select(F.pmod(F.hash("term"), F.lit(self.buckets)).alias("b"))
-            .collect()
-        )
-        return sorted({r["b"] for r in rows})
+        """The terms' buckets under the CURRENT layout: callers run
+        ``stats()`` first, which refreshes the bucket count from the
+        sidecar (a handle that predates a reshard routes correctly)."""
+        return term_buckets(terms, self.buckets)
+
+    def _postings_reader(self):
+        """A reader of this index's postings with the schema given — the
+        footer's data columns plus the ``bucket`` partition column."""
+        schema = footer_schema(self.postings_dir).add("bucket", IntegerType())
+        return self.spark.read.schema(schema).option("basePath", self.postings_dir)
 
     def _pruned(self, terms: list[str]) -> DataFrame:
-        self.stats()  # existence check
-        want = self._bucket_of(terms)
-        return self.spark.read.parquet(self.postings_dir).where(
-            F.col("bucket").isin(*want)
-        )
-
-    def phrase(self, first: str, second: str) -> DataFrame:
-        """Exact-phrase occurrences via posting-list adjacency
-        (``p2.pos = p1.pos + 1``): (doc_id, source, n_occurrences)."""
-        if self.mode != "positional":
-            raise ValueError("phrase() needs mode='positional'")
-        pruned = self._served(self._pruned([first, second]))
-        p1 = pruned.where(F.col("term") == first).select(
-            "doc_id", "source", F.col("pos").alias("p1")
-        )
-        p2 = pruned.where(F.col("term") == second).select(
-            "doc_id", F.col("pos").alias("p2")
-        )
-        return (
-            p1.join(p2, "doc_id")
-            .where(F.col("p2") == F.col("p1") + 1)
-            .groupBy("doc_id")
-            .agg(
-                F.max("source").alias("source"),
-                F.count(F.lit(1)).alias("n_occurrences"),
+        """The postings of ``terms``' buckets, reading only those bucket
+        directories. A bucket no posting hashed to has no directory and is
+        skipped; when none exists the read is an empty relation."""
+        self.stats()  # existence check + bucket-count refresh
+        dirs = [
+            p
+            for p in (
+                os.path.join(self.postings_dir, f"bucket={b}")
+                for b in self._bucket_of(terms)
             )
-        )
+            if os.path.isdir(p)
+        ]
+        return self._postings_reader().parquet(*dirs)
+
+    def _serve_stats(self) -> dict:
+        """The corpus statistics a request scores with, as driver-side
+        literals: n_docs and avgdl from the sidecar's exact totals."""
+        meta = self.stats()
+        n_docs = int(meta["n_docs"])
+        return {"n_docs": n_docs, "avgdl": meta["total_dl"] / n_docs if n_docs else 0.0}
 
     def bm25(
         self, queries: dict[int, list[str]], k: int = 10, where: str | None = None
@@ -587,7 +635,8 @@ class SearchIndex:
         Robertson idf (search_ops K1/B constants), df counted from the query terms'
         own (bucket-complete) posting lists, n_docs/avgdl from the
         sidecar. Identical scoring to the full-scan formulation the
-        oracle gate verifies.
+        oracle gate verifies. One request is one Spark query
+        (``search_ops._bm25_index_serve``) plus its collect.
 
         ``where`` is a SQL predicate over the doc-metadata sidecar
         columns (e.g. ``"lang = 'en'"``) — filtered search with Lucene
@@ -597,18 +646,8 @@ class SearchIndex:
         (pending merge-on-read deletes) are anti-joined out BEFORE the
         candidate semi-join, so a stale docmeta row for a deleted doc is
         harmless."""
-        if self.mode != "scored":
-            raise ValueError("bm25() needs mode='scored'")
         meta = self.stats()
-        stats = self.spark.createDataFrame(
-            [(int(meta["n_docs"]), meta["total_dl"] / meta["n_docs"])],
-            "n_docs long, avgdl double",
-        )
-        terms = [t for ts in queries.values() for t in ts]
-        q = self.spark.createDataFrame(
-            [(qid, t) for qid, ts in queries.items() for t in ts],
-            "q_id int, term string",
-        )
+        terms = sorted({t for ts in queries.values() for t in ts})
         candidates = None
         if where is not None:
             # a crash between compact()'s two docmeta renames leaves the
@@ -622,12 +661,18 @@ class SearchIndex:
                     "silently drop resident docs)"
                 )
             candidates = (
-                self.spark.read.parquet(self.docmeta_dir)
+                self.spark.read.schema(footer_schema(self.docmeta_dir))
+                .parquet(self.docmeta_dir)
                 .where(where)
                 .select("doc_id")
             )
         return _bm25_index_serve(
-            self._served(self._pruned(terms)), stats, q, k=k, candidates=candidates
+            self._served(self._pruned(terms)),
+            _query_frame(self.spark, queries),
+            terms,
+            **self._serve_stats(),
+            k=k,
+            candidates=candidates,
         )
 
     # -- erasure (merge-on-read deletes, the snapshot layer's equality-
@@ -641,36 +686,10 @@ class SearchIndex:
         return os.path.join(self.root, "_deletes")
 
     def _delete_ids(self) -> DataFrame | None:
-        d = self._deletes_dir
-        if not os.path.isdir(d):
-            return None
-        listing = tuple(
-            sorted(
-                os.path.join(os.path.relpath(walk_dir, d), f)
-                for walk_dir, _, files in os.walk(d)
-                for f in files
-                if f.endswith(".parquet")
-            )
+        self._dels_cache = delete_ids_literal(
+            self.spark, self._deletes_dir, self._dels_cache
         )
-        if not listing:
-            return None
-        # the sidecar is bounded by design (O(deleted) ids) and immutable
-        # per file (uuid-named dirs): collect it ONCE and serve every
-        # consumer a literal frame keyed on the file listing — repeated
-        # serve/mutate calls in one sync tick stop paying a DataSource
-        # resolution + sidecar scan job per action (guide §1.2), and the
-        # anti-join broadcast builds from a local relation. Any writer
-        # (delete_docs/apply_deletes/merge_from, this process or another)
-        # changes the listing and invalidates.
-        cached = getattr(self, "_dels_cache", None)
-        if cached is not None and cached[0] == listing:
-            return cached[1]
-        # each delete call writes its own subdirectory — recursive lookup
-        # flattens them (no partition inference over non-k=v dirs)
-        frame = self.spark.read.option("recursiveFileLookup", "true").parquet(d)
-        lit = self.spark.createDataFrame(frame.collect(), frame.schema)
-        self._dels_cache = (listing, lit)
-        return lit
+        return None if self._dels_cache is None else self._dels_cache[1]
 
     def _served(self, pruned: DataFrame) -> DataFrame:
         dels = self._delete_ids()
@@ -681,7 +700,7 @@ class SearchIndex:
     def delete_docs(self, doc_ids) -> int:
         """Erase documents from serving (GDPR takedown / corpus eviction):
         records the ids as a merge-on-read delete file — O(deleted) write,
-        no posting rewritten — and, for the scored mode, decrements the
+        no posting rewritten — and decrements the
         corpus stats by the deleted docs' EXACT contribution (one keys-only
         index scan finds their (doc_id, dl) rows), so BM25 keeps equality
         with a one-shot build over the surviving corpus. Idempotent:
@@ -698,7 +717,7 @@ class SearchIndex:
         if prior is not None:
             ids = ids.join(F.broadcast(prior), "doc_id", "left_anti")
         meta = self._check_no_pending_merge()
-        postings = self.spark.read.parquet(self.postings_dir)
+        postings = self._postings_reader().parquet(self.postings_dir)
         # ONE keys-only scan of the index: semi-join BEFORE distinct (the
         # index streams map-side against the broadcast id set; distinct
         # runs over <= |ids| survivors), then the bounded present set is
@@ -706,22 +725,18 @@ class SearchIndex:
         # write — previously two separate full scans (guide §1.2).
         # dl is denormalized per doc, so distinct (doc_id, dl) is one row
         # per present doc.
-        cols = ["doc_id", "dl"] if self.mode == "scored" else ["doc_id"]
         present = (
-            postings.select(*cols)
+            postings.select("doc_id", "dl")
             .join(F.broadcast(ids), "doc_id", "left_semi")
             .distinct()
             .persist()
         )
         try:
-            if self.mode == "scored":
-                hit = present.agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.coalesce(F.sum("dl"), F.lit(0)).alias("dl"),
-                ).collect()[0]
-                n_present, dl_present = int(hit["n"]), int(hit["dl"])
-            else:
-                n_present, dl_present = present.count(), 0
+            hit = present.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.coalesce(F.sum("dl"), F.lit(0)).alias("dl"),
+            ).collect()[0]
+            n_present, dl_present = int(hit["n"]), int(hit["dl"])
             if n_present == 0:
                 return 0
             os.makedirs(self._deletes_dir, exist_ok=True)
@@ -730,10 +745,8 @@ class SearchIndex:
             )
         finally:
             present.unpersist()
-        # nested dirs: read the sidecar recursively
-        if self.mode == "scored":
-            meta["n_docs"] = int(meta["n_docs"]) - n_present
-            meta["total_dl"] = int(meta["total_dl"]) - dl_present
+        meta["n_docs"] = int(meta["n_docs"]) - n_present
+        meta["total_dl"] = int(meta["total_dl"]) - dl_present
         meta["deletes"] = int(meta.get("deletes", 0)) + n_present
         self._write_meta(meta)
         return n_present
@@ -757,7 +770,8 @@ class SearchIndex:
         if os.path.isdir(staged):
             shutil.rmtree(staged)
         (
-            self.spark.read.parquet(self.postings_dir)
+            self._postings_reader()
+            .parquet(self.postings_dir)
             .join(F.broadcast(dels), "doc_id", "left_anti")
             .write.partitionBy("bucket")
             .parquet(staged)

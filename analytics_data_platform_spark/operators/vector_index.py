@@ -42,6 +42,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from analytics_data_platform_spark.operators import similarity
+from analytics_data_platform_spark.operators.search_index import delete_ids_literal
 
 _CELL_PREFIX = "_cell="
 
@@ -67,6 +68,7 @@ class VectorIndex:
         self.id_col = id_col
         self.vec_col = vec_col
         self.storage = storage
+        self._dels_cache = None
         meta = self._read_meta()
         if meta:
             self.nlist = len(meta["centroids"])
@@ -430,30 +432,10 @@ class VectorIndex:
         return os.path.join(self.root, "_deletes")
 
     def _delete_ids(self) -> DataFrame | None:
-        d = self._deletes_dir
-        if not os.path.isdir(d):
-            return None
-        listing = tuple(
-            sorted(
-                os.path.join(os.path.relpath(walk_dir, d), f)
-                for walk_dir, _, files in os.walk(d)
-                for f in files
-                if f.endswith(".parquet")
-            )
+        self._dels_cache = delete_ids_literal(
+            self.spark, self._deletes_dir, self._dels_cache
         )
-        if not listing:
-            return None
-        # bounded O(deleted) sidecar, immutable per file: collect once and
-        # serve a literal frame keyed on the file listing (see
-        # SearchIndex._delete_ids) — repeated probe/mutate calls stop
-        # paying a DataSource resolution + sidecar scan job per action
-        cached = getattr(self, "_dels_cache", None)
-        if cached is not None and cached[0] == listing:
-            return cached[1]
-        frame = self.spark.read.option("recursiveFileLookup", "true").parquet(d)
-        lit = self.spark.createDataFrame(frame.collect(), frame.schema)
-        self._dels_cache = (listing, lit)
-        return lit
+        return None if self._dels_cache is None else self._dels_cache[1]
 
     def delete_vecs(self, ids) -> int:
         """Erase vectors from serving: O(deleted) id sidecar, anti-joined

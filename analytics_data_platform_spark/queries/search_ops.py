@@ -429,6 +429,47 @@ INDEX_BUCKETS = 64
 CONJ_TERMS = ("table", "hash", "merge")
 
 
+def _mix(h1: int, k1: int) -> int:
+    """One Murmur3_x86_32 round (mixK1 then mixH1) on unsigned 32-bit ints."""
+    k1 = (k1 * 0xCC9E2D51) & 0xFFFFFFFF
+    k1 = ((k1 << 15) | (k1 >> 17)) & 0xFFFFFFFF
+    k1 = (k1 * 0x1B873593) & 0xFFFFFFFF
+    h1 ^= k1
+    h1 = ((h1 << 13) | (h1 >> 19)) & 0xFFFFFFFF
+    return (h1 * 5 + 0xE6546B64) & 0xFFFFFFFF
+
+
+def spark_string_hash(s: str) -> int:
+    """``F.hash(<string column>)`` on the driver, bit for bit: Spark's
+    ``Murmur3_x86_32.hashUnsafeBytes`` over the UTF-8 bytes with the
+    ``Murmur3Hash`` expression's seed, 42. Spark's form
+    differs from reference Murmur3 in the tail: each of the last
+    ``len % 4`` bytes is sign-extended and mixed as a full round.
+    Pinned against ``F.hash`` by tests/test_spark_hash.py."""
+    data = s.encode("utf-8")
+    n = len(data)
+    aligned = n - n % 4
+    h1 = 42
+    for i in range(0, aligned, 4):
+        h1 = _mix(h1, int.from_bytes(data[i : i + 4], "little"))
+    for b in data[aligned:]:
+        h1 = _mix(h1, (b - 256 if b > 127 else b) & 0xFFFFFFFF)
+    h1 ^= n
+    h1 ^= h1 >> 16
+    h1 = (h1 * 0x85EBCA6B) & 0xFFFFFFFF
+    h1 ^= h1 >> 13
+    h1 = (h1 * 0xC2B2AE35) & 0xFFFFFFFF
+    h1 ^= h1 >> 16
+    return h1 - (1 << 32) if h1 & 0x80000000 else h1
+
+
+def term_buckets(terms, buckets: int = INDEX_BUCKETS) -> list[int]:
+    """Sorted distinct index buckets of ``terms``: the driver-side form of
+    the build's ``pmod(hash(term), buckets)`` (Python ``%`` is pmod for a
+    positive modulus), so routing a lookup runs no Spark job."""
+    return sorted({spark_string_hash(t) % buckets for t in set(terms)})
+
+
 def _posting_rows(d: DataFrame) -> DataFrame:
     """(bucket, term, doc_id, source) posting rows; bucket is the index's
     partition key (murmur3 of the term — an implementation detail the
@@ -482,14 +523,7 @@ def inverted_index_conjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
         _posting_rows(d).write.mode("overwrite").partitionBy("bucket").parquet(idx_dir)
         index = spark.read.parquet(idx_dir)
         # the query's buckets, computed with the SAME hash the build used
-        want = [
-            r["bucket"]
-            for r in spark.createDataFrame(
-                [(t,) for t in CONJ_TERMS], "term string"
-            )
-            .select(F.pmod(F.hash("term"), F.lit(INDEX_BUCKETS)).alias("bucket"))
-            .collect()
-        ]
+        want = term_buckets(CONJ_TERMS)
         served = _conjunctive_serve(index.where(F.col("bucket").isin(*want)))
         rows = [(r["source"], r["n_docs"]) for r in served.collect()]
     finally:
@@ -562,12 +596,7 @@ def inverted_index_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             idx_dir
         )
         index = spark.read.parquet(idx_dir)
-        want = [
-            r["bucket"]
-            for r in spark.createDataFrame([(t,) for t in INCR_TERMS], "term string")
-            .select(F.pmod(F.hash("term"), F.lit(INDEX_BUCKETS)).alias("bucket"))
-            .collect()
-        ]
+        want = term_buckets(INCR_TERMS)
         hits = (
             index.where(F.col("bucket").isin(*want))
             .where(F.col("term").isin(*INCR_TERMS))
@@ -665,12 +694,7 @@ def inverted_index_phrase(spark: SparkSession, sf_dir: str) -> DataFrame:
             "bucket"
         ).parquet(idx_dir)
         index = spark.read.parquet(idx_dir)
-        want = [
-            r["bucket"]
-            for r in spark.createDataFrame([(t,) for t in PHRASE], "term string")
-            .select(F.pmod(F.hash("term"), F.lit(INDEX_BUCKETS)).alias("bucket"))
-            .collect()
-        ]
+        want = term_buckets(PHRASE)
         pruned = index.where(F.col("bucket").isin(*want))
         p1 = pruned.where(F.col("term") == PHRASE[0]).select(
             "doc_id", "source", F.col("pos").alias("p1")
@@ -791,20 +815,49 @@ def _scored_posting_rows(d: DataFrame) -> tuple[DataFrame, DataFrame]:
     return postings, stats
 
 
+def _query_frame(
+    spark: SparkSession, queries: dict[int, list[str]] = QUERY_TERMS
+) -> DataFrame:
+    """(q_id int, term string) rows of a request as a literal frame. Built
+    from an Arrow table, it plans as a ``LocalTableScan`` (a Python list
+    would plan as ``Scan ExistingRDD``, an RDD job per broadcast)."""
+    import pyarrow as pa
+
+    pairs = [(qid, t) for qid, ts in queries.items() for t in ts]
+    return spark.createDataFrame(
+        pa.table(
+            {
+                "q_id": pa.array([p[0] for p in pairs], pa.int32()),
+                "term": pa.array([p[1] for p in pairs], pa.string()),
+            }
+        )
+    )
+
+
+_ALL_TERMS = sorted({t for ts in QUERY_TERMS.values() for t in ts})
+
+
 def _bm25_index_serve(
     postings: DataFrame,
-    stats: DataFrame,
     q: DataFrame,
+    terms: list[str],
+    n_docs: int,
+    avgdl: float,
     k: int = TOPK,
     candidates: DataFrame | None = None,
     exclude_q_doc: bool = False,
 ) -> DataFrame:
-    """Top-k BM25 from pruned posting lists: df for the query terms is
-    counted from THEIR posting lists (all of a term's postings live in its
-    bucket, so the pruned read sees every one), n_docs/avgdl come from the
-    broadcast stats sidecar, and the per-(q, doc) sum + two-phase top-k
-    never touch a non-matching document. Identical scoring expression to
-    the full-scan ``_bm25_scores`` — the oracle is the same BM25 SQL.
+    """Top-k BM25 from pruned posting lists, as one query: ``terms`` (the
+    distinct terms of ``q``) filter the postings as a literal ``isin``;
+    df for those terms is a grouped aggregate over the same filtered scan
+    (all of a term's postings live in its bucket, so the pruned read sees
+    every one; the map-side partial keeps a common term's list off one
+    task), broadcast back; ``n_docs``/``avgdl`` enter the score as
+    literals; the per-(q, doc) sum is cut to the top ``k`` by
+    ``row_number() <= k`` over ``q_id``, which plans as a partial and a
+    final ``WindowGroupLimit`` around the one exchange. Nothing collected
+    grows with the corpus. Identical scoring expression to the full-scan
+    ``_bm25_scores`` — the oracle is the same BM25 SQL.
 
     ``candidates`` (doc_id frame) restricts the RANKED docs without
     touching the statistics — Lucene filtered-search semantics: idf and
@@ -812,36 +865,37 @@ def _bm25_index_serve(
     lists), only the candidate set narrows. ``exclude_q_doc`` drops the
     query document itself from its own ranking (document-as-query /
     more-like-this retrieval)."""
-    terms = q.select("term").distinct()
-    pruned = postings.join(F.broadcast(terms), "term", "left_semi")
+    pruned = postings.where(F.col("term").isin(*terms))
     dfq = pruned.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     matched = pruned
     if candidates is not None:
         # semi-join the tf rows, NOT the df count above — the filter gates
         # candidates, never the corpus statistics
-        matched = matched.join(
-            candidates.select("doc_id").distinct(), "doc_id", "left_semi"
-        )
+        matched = matched.join(candidates.select("doc_id"), "doc_id", "left_semi")
     idf = F.log(
         F.lit(1.0)
-        + (F.col("n_docs") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
+        + (F.lit(n_docs) - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
     )
     w = idf * (
         (F.col("tf") * F.lit(K1 + 1.0))
-        / (F.col("tf") + F.lit(K1) * (F.lit(1.0 - B) + F.lit(B) * F.col("dl") / F.col("avgdl")))
+        / (F.col("tf") + F.lit(K1) * (F.lit(1.0 - B) + F.lit(B) * F.col("dl") / F.lit(avgdl)))
     )
     scored = (
         matched.join(F.broadcast(q), "term")
         .join(F.broadcast(dfq), "term")
-        .crossJoin(F.broadcast(stats))
         .select("q_id", "doc_id", w.alias("w"))
         .groupBy("q_id", "doc_id")
         .agg(F.round(F.sum("w"), 4).alias("score"))
     )
     if exclude_q_doc:
         scored = scored.where(F.col("doc_id") != F.col("q_id"))
-    return topk_per_query(scored, k, "q_id", "doc_id", "score").select(
-        "q_id", "doc_id", "score", "rank"
+    order = Window.partitionBy("q_id").orderBy(
+        F.desc_nulls_last("score"), F.asc("doc_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(order))
+        .where(F.col("rank") <= k)
+        .select("q_id", "doc_id", "score", "rank")
     )
 
 
@@ -864,6 +918,8 @@ def inverted_index_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil as _shutil
     import tempfile as _tempfile
 
+    import pyarrow.parquet as pq
+
     d = load_table(spark, sf_dir, "documents")
     idx_dir = _tempfile.mkdtemp(prefix="adps-invidx-bm25-")
     stats_dir = _tempfile.mkdtemp(prefix="adps-invidx-bm25-stats-")
@@ -872,21 +928,13 @@ def inverted_index_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         postings.write.mode("overwrite").partitionBy("bucket").parquet(idx_dir)
         stats.coalesce(1).write.mode("overwrite").parquet(stats_dir)
         index = spark.read.parquet(idx_dir)
-        all_terms = sorted({t for ts in QUERY_TERMS.values() for t in ts})
-        want = [
-            r["bucket"]
-            for r in spark.createDataFrame([(t,) for t in all_terms], "term string")
-            .select(F.pmod(F.hash("term"), F.lit(INDEX_BUCKETS)).alias("bucket"))
-            .collect()
-        ]
-        q = spark.createDataFrame(
-            [(qid, t) for qid, ts in QUERY_TERMS.items() for t in ts],
-            "q_id int, term string",
-        )
+        want = term_buckets(_ALL_TERMS)
+        # the one-row sidecar is read on the driver, not joined
         served = _bm25_index_serve(
             index.where(F.col("bucket").isin(*want)),
-            spark.read.parquet(stats_dir),
-            q,
+            _query_frame(spark),
+            _ALL_TERMS,
+            **pq.read_table(stats_dir).to_pylist()[0],
         )
         schema = served.schema
         rows = [tuple(r) for r in served.collect()]
@@ -899,11 +947,10 @@ def inverted_index_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _bm25_index_internal_plans(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
     postings, stats = _scored_posting_rows(d)
-    q = spark.createDataFrame(
-        [(qid, t) for qid, ts in QUERY_TERMS.items() for t in ts],
-        "q_id int, term string",
+    serve = _bm25_index_serve(
+        postings, _query_frame(spark), _ALL_TERMS, **stats.first().asDict()
     )
-    return [("serve", _bm25_index_serve(postings, stats, q))]
+    return [("serve", serve)]
 
 
 register(
@@ -963,12 +1010,7 @@ def inverted_index_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
                 assert n == 1, f"{name}: {n} files after compaction"
         index = spark.read.parquet(idx_dir)
-        want = [
-            r["bucket"]
-            for r in spark.createDataFrame([(t,) for t in CONJ_TERMS], "term string")
-            .select(F.pmod(F.hash("term"), F.lit(INDEX_BUCKETS)).alias("bucket"))
-            .collect()
-        ]
+        want = term_buckets(CONJ_TERMS)
         served = _conjunctive_serve(index.where(F.col("bucket").isin(*want)))
         rows = [(r["source"], r["n_docs"]) for r in served.collect()]
     finally:
@@ -1035,22 +1077,15 @@ def inverted_index_bm25_incremental(spark: SparkSession, sf_dir: str) -> DataFra
         ).collect()[0]
         n_docs = int(s0["n_docs"]) + int(s1["n_docs"])
         avgdl = (int(s0["total_dl"]) + int(s1["total_dl"])) / n_docs
-        stats = spark.createDataFrame([(n_docs, avgdl)], "n_docs long, avgdl double")
 
         index = spark.read.parquet(idx_dir)
-        all_terms = sorted({t for ts in QUERY_TERMS.values() for t in ts})
-        want = [
-            r["bucket"]
-            for r in spark.createDataFrame([(t,) for t in all_terms], "term string")
-            .select(F.pmod(F.hash("term"), F.lit(INDEX_BUCKETS)).alias("bucket"))
-            .collect()
-        ]
-        q = spark.createDataFrame(
-            [(qid, t) for qid, ts in QUERY_TERMS.items() for t in ts],
-            "q_id int, term string",
-        )
+        want = term_buckets(_ALL_TERMS)
         served = _bm25_index_serve(
-            index.where(F.col("bucket").isin(*want)), F.broadcast(stats), q
+            index.where(F.col("bucket").isin(*want)),
+            _query_frame(spark),
+            _ALL_TERMS,
+            n_docs,
+            avgdl,
         )
         schema = served.schema
         rows = [tuple(r) for r in served.collect()]
@@ -1065,14 +1100,13 @@ def _bm25_incr_internal_plans(spark, sf_dir):
         d.where(F.col("doc_id") % 2 == 1)
     )
     postings, stats = _scored_posting_rows(d)
-    q = spark.createDataFrame(
-        [(qid, t) for qid, ts in QUERY_TERMS.items() for t in ts],
-        "q_id int, term string",
+    serve = _bm25_index_serve(
+        postings, _query_frame(spark), _ALL_TERMS, **stats.first().asDict()
     )
     return [
         ("ingest", batch_postings),
         ("ingest_stats", batch_stats),
-        ("serve", _bm25_index_serve(postings, stats, q)),
+        ("serve", serve),
     ]
 
 
@@ -1131,11 +1165,10 @@ def inverted_index_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _erasure_internal_plans(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
     postings, stats = _scored_posting_rows(d.where(F.col("doc_id") % 97 != 0))
-    q = spark.createDataFrame(
-        [(qid, t) for qid, ts in QUERY_TERMS.items() for t in ts],
-        "q_id int, term string",
+    serve = _bm25_index_serve(
+        postings, _query_frame(spark), _ALL_TERMS, **stats.first().asDict()
     )
-    return [("serve", _bm25_index_serve(postings, stats, q))]
+    return [("serve", serve)]
 
 
 assert BM25_SQL.count("FROM documents") == 1, "BM25 oracle shape changed"

@@ -56,6 +56,7 @@ from concurrent.futures import ThreadPoolExecutor
 from functools import partial
 from typing import Callable, NamedTuple
 
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
@@ -79,8 +80,8 @@ from analytics_data_platform_spark.queries.scale_ops import (
     _ivf_sql,
 )
 from analytics_data_platform_spark.queries.search_ops import (
+    _ALL_TERMS,
     BM25_SQL,
-    INDEX_BUCKETS,
     LIST_K,
     N_QUERY_DOCS,
     QUERY_TERMS,
@@ -89,16 +90,11 @@ from analytics_data_platform_spark.queries.search_ops import (
     _bm25_index_serve,
     _bm25_scored_sql,
     _Q_VALUES,
+    _query_frame,
     _scored_posting_rows,
+    term_buckets,
 )
 from analytics_data_platform_spark.sources.testdata import load_table
-
-
-def _query_frame(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        [(qid, t) for qid, ts in QUERY_TERMS.items() for t in ts],
-        "q_id int, term string",
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -157,7 +153,10 @@ def inverted_index_segment_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _segment_merge_internal_plans(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
     postings, stats = _scored_posting_rows(d.where(~_merge_seg_pred()))
-    return [("serve", _bm25_index_serve(postings, stats, _query_frame(spark)))]
+    serve = _bm25_index_serve(
+        postings, _query_frame(spark), _ALL_TERMS, **stats.first().asDict()
+    )
+    return [("serve", serve)]
 
 
 assert BM25_SQL.count("FROM documents") == 1, "BM25 oracle shape changed"
@@ -223,7 +222,11 @@ def _filtered_internal_plans(spark, sf_dir):
         (
             "serve",
             _bm25_index_serve(
-                postings, stats, _query_frame(spark), candidates=cand
+                postings,
+                _query_frame(spark),
+                _ALL_TERMS,
+                **stats.first().asDict(),
+                candidates=cand,
             ),
         )
     ]
@@ -296,15 +299,22 @@ def _mlt_query_terms(d: DataFrame) -> DataFrame:
     )
 
 
+def _distinct_terms(q_terms: DataFrame) -> list[str]:
+    """The distinct terms of a (q_id, term) frame, collected: ≤ N_QUERY_DOCS
+    × MLT_TERMS rows, the bounded request the lexical leg routes by."""
+    return sorted(r["term"] for r in q_terms.select("term").distinct().collect())
+
+
 def _hybrid_legs(
     spark: SparkSession,
     d: DataFrame,
     e: DataFrame,
     postings: DataFrame,
-    stats: DataFrame,
+    stats: dict,
     ivf_io,
     cents: list[list[float]],
     q_terms: DataFrame,
+    terms: list[str],
     lex_candidates: DataFrame | None = None,
 ) -> DataFrame:
     """The fused plan, parameterized by where each leg's index rows come
@@ -313,12 +323,14 @@ def _hybrid_legs(
     the lexical terms narrowed to the MoreLikeThis selection and the
     semantic leg swapped to the IVF probe (nprobe cells, pinned
     natural-init centroids — the ann_ivf_topk contract, so the oracle
-    reproduces assignment exactly). ``lex_candidates`` pre-filters the
+    reproduces assignment exactly). ``stats`` is the index's one stats
+    row (n_docs, avgdl) and ``terms`` the distinct terms of ``q_terms``,
+    both on the driver. ``lex_candidates`` pre-filters the
     lexical leg (Lucene filtered semantics: candidates narrow BEFORE the
     rank cut, idf/avgdl stay index-global); the semantic leg filters
     inside ``ivf_io.read`` the same way."""
     bm_top = _bm25_index_serve(
-        postings, stats, q_terms, k=LIST_K, exclude_q_doc=True,
+        postings, q_terms, terms, **stats, k=LIST_K, exclude_q_doc=True,
         candidates=lex_candidates,
     ).select("q_id", "doc_id", F.col("rank").alias("b_rank"))
 
@@ -417,28 +429,21 @@ def index_hybrid_rrf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             f_ivf = pool.submit(_build_ivf)
             q_terms, cents, _ = await_all(f_terms, f_ivf, f_lex)
 
-        terms = [r["term"] for r in q_terms.select("term").distinct().collect()]
-        want = sorted(
-            {
-                r["b"]
-                for r in spark.createDataFrame(
-                    [(t,) for t in sorted(set(terms))], "term string"
-                )
-                .select(F.pmod(F.hash("term"), F.lit(INDEX_BUCKETS)).alias("b"))
-                .collect()
-            }
+        terms = _distinct_terms(q_terms)
+        lex_index = spark.read.parquet(idx_dir).where(
+            F.col("bucket").isin(*term_buckets(terms))
         )
-        lex_index = spark.read.parquet(idx_dir).where(F.col("bucket").isin(*want))
 
         out = _hybrid_legs(
             spark,
             d,
             e,
             lex_index,
-            spark.read.parquet(stats_dir),
+            pq.read_table(stats_dir).to_pylist()[0],
             _DirIvfIndex(spark, ivf_dir),
             cents,
             q_terms,
+            terms,
         )
         schema = out.schema
         rows = [tuple(r) for r in out.collect()]  # bounded: 3 queries × 10
@@ -459,11 +464,13 @@ def _hybrid_internal_plans(spark, sf_dir):
         .collect()
     )
     cents = [[float(x) for x in r["embedding"]] for r in rows_c]
+    q_terms = _mlt_query_terms(d)
     return [
         (
             "fuse",
             _hybrid_legs(
-                spark, d, e, postings, stats, None, cents, _mlt_query_terms(d)
+                spark, d, e, postings, stats.first().asDict(), None, cents,
+                q_terms, _distinct_terms(q_terms),
             ),
         )
     ]
@@ -624,18 +631,10 @@ def index_hybrid_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             f_vx = pool.submit(_build_vx)
             q_terms, (cents, vx), _, _ = await_all(f_terms, f_vx, f_lex, f_meta)
 
-        terms = [r["term"] for r in q_terms.select("term").distinct().collect()]
-        want = sorted(
-            {
-                r["b"]
-                for r in spark.createDataFrame(
-                    [(t,) for t in sorted(set(terms))], "term string"
-                )
-                .select(F.pmod(F.hash("term"), F.lit(INDEX_BUCKETS)).alias("b"))
-                .collect()
-            }
+        terms = _distinct_terms(q_terms)
+        lex_index = spark.read.parquet(lex_dir).where(
+            F.col("bucket").isin(*term_buckets(terms))
         )
-        lex_index = spark.read.parquet(lex_dir).where(F.col("bucket").isin(*want))
         candidates = (
             spark.read.parquet(meta_dir)
             .where(f"lang = '{_HYBRID_FILTER_LANG}'")
@@ -646,10 +645,11 @@ def index_hybrid_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             d,
             e,
             lex_index,
-            spark.read.parquet(stats_dir),
+            pq.read_table(stats_dir).to_pylist()[0],
             VectorIndex._Io(vx, f"lang = '{_HYBRID_FILTER_LANG}'"),
             cents,
             q_terms,
+            terms,
             lex_candidates=candidates,
         )
         schema = out.schema
@@ -680,12 +680,13 @@ def _hybrid_filtered_internal_plans(spark, sf_dir):
             cell = similarity.assign_centroid_col("embedding", cents).cast("int")
             return e_f.withColumn("_cell", cell)
 
+    q_terms = _mlt_query_terms(d)
     return [
         (
             "fuse",
             _hybrid_legs(
-                spark, d, e, postings, stats, _MemIvf(), cents,
-                _mlt_query_terms(d), lex_candidates=cands,
+                spark, d, e, postings, stats.first().asDict(), _MemIvf(), cents,
+                q_terms, _distinct_terms(q_terms), lex_candidates=cands,
             ),
         )
     ]
@@ -1162,7 +1163,6 @@ def streaming_index_corpus_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     import pyarrow.compute as pc
-    import pyarrow.parquet as pq
 
     src = os.path.join(sf_dir, "documents.parquet")
     work = tempfile.mkdtemp(prefix="adps-streamsync-")
@@ -1782,7 +1782,10 @@ def inverted_index_reshard(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _reshard_internal_plans(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
     postings, stats = _scored_posting_rows(d.where(~(F.col("doc_id") % 23 == 5)))
-    return [("serve", _bm25_index_serve(postings, stats, _query_frame(spark)))]
+    serve = _bm25_index_serve(
+        postings, _query_frame(spark), _ALL_TERMS, **stats.first().asDict()
+    )
+    return [("serve", serve)]
 
 
 assert BM25_SQL.count("FROM documents") == 1, "BM25 oracle shape changed"
@@ -1984,21 +1987,17 @@ def serving_hybrid_corpus_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
         # exemplar has no text to select from), then both synced tiers
         live = read_state_part(spark, state, "live", 2)
         q_terms = _mlt_query_terms(live).localCheckpoint()
-        terms = [r["term"] for r in q_terms.select("term").distinct().collect()]
-        meta = idx.stats()
-        stats = spark.createDataFrame(
-            [(int(meta["n_docs"]), meta["total_dl"] / meta["n_docs"])],
-            "n_docs long, avgdl double",
-        )
+        terms = _distinct_terms(q_terms)
         out = _hybrid_legs(
             spark,
             d,
             e,
             idx._served(idx._pruned(terms)),
-            stats,
+            idx._serve_stats(),
             VectorIndex._Io(vx),
             cents,
             q_terms,
+            terms,
         )
         schema = out.schema
         rows = sorted(tuple(r) for r in out.collect())  # bounded: ≤3 q × 10
@@ -2026,12 +2025,13 @@ def _hybrid_sync_internal_plans(spark, sf_dir):
             cell = similarity.assign_centroid_col("embedding", cents).cast("int")
             return e_live.withColumn("_cell", cell)
 
+    q_terms = _mlt_query_terms(live)
     return [
         (
             "fuse",
             _hybrid_legs(
-                spark, d, e, postings, stats, _MemIvf(), cents,
-                _mlt_query_terms(live),
+                spark, d, e, postings, stats.first().asDict(), _MemIvf(), cents,
+                q_terms, _distinct_terms(q_terms),
             ),
         )
     ]

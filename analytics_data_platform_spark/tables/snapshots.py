@@ -280,9 +280,13 @@ class SnapshotTable:
         column's footer bounds are trustworthy-exact (numeric/date/boolean
         — driver-side metadata reads, no second job); otherwise one
         per-file (map-side) aggregation over just-written data — O(batch),
-        not O(table) either way. Strings always take the scan path: the
-        writer may truncate binary footer bounds, and the manifest
-        contract is exact min/max, not merely valid bounds."""
+        not O(table) either way. Strings still take the scan path,
+        although the Parquet 1.16 writer under Spark 4.1.2 does not
+        truncate string footer bounds: values up to ~4 KB keep exact
+        min/max, longer ones drop the bounds (``has_min_max`` false). The
+        manifest contract is exact min/max, so moving strings to the
+        footer path waits for an equality gate of footer vs scan stats
+        over adversarial strings."""
         d = os.path.join(self.root, "data", uuid.uuid4().hex)
         if self.cluster_by:
             parts = [self.cluster_files] if self.cluster_files else []

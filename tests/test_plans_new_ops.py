@@ -179,7 +179,10 @@ def test_bm25_index_serving_prunes_partitions(spark, tmp_path, sf_dir):
         "q_id int, term string",
     )
     served = _bm25_index_serve(
-        index.where(F.col("bucket").isin(*want)), spark.read.parquet(stats_dir), q
+        index.where(F.col("bucket").isin(*want)),
+        q,
+        all_terms,
+        **spark.read.parquet(stats_dir).first().asDict(),
     )
     got = {(r.q_id, r.doc_id): (r.score, r.rank) for r in served.collect()}
 

@@ -13,52 +13,14 @@ import pytest
 
 from analytics_data_platform_spark.operators.search_index import SearchIndex
 from analytics_data_platform_spark.queries import all_queries
-from analytics_data_platform_spark.queries.search_ops import (
-    CONJ_TERMS,
-    PHRASE,
-    QUERY_TERMS,
-)
+from analytics_data_platform_spark.queries.search_ops import QUERY_TERMS
 from analytics_data_platform_spark.sources.testdata import load_table
 
-
-def _full_scan_conjunctive(d, terms):
-    toks = F.split("text", " ")
-    cond = None
-    for t in terms:
-        c = F.array_contains(toks, t)
-        cond = c if cond is None else cond & c
-    return {(r.doc_id, r.source) for r in d.where(cond).select("doc_id", "source").collect()}
+_TERMS = sorted({t for ts in QUERY_TERMS.values() for t in ts})
 
 
-def _lookup_all(idx, terms):
-    """Conjunctive AND over an index's served (bucket-pruned,
-    delete-applied) postings: (doc_id, source) of documents holding every
-    term."""
-    terms = sorted(set(terms))
-    return (
-        idx._served(idx._pruned(terms))
-        .where(F.col("term").isin(*terms))
-        .groupBy("doc_id")
-        .agg(F.count_distinct("term").alias("_nt"), F.max("source").alias("source"))
-        .where(F.col("_nt") == len(terms))
-        .select("doc_id", "source")
-    )
-
-
-def test_boolean_lifecycle_equals_full_scan(spark, tmp_path, sf_dir):
-    d = load_table(spark, sf_dir, "documents")
-    idx = SearchIndex(spark, str(tmp_path / "b"), mode="boolean")
-    idx.build(d.where(F.col("doc_id") % 3 == 0))
-    for tick in (1, 2):
-        idx.append(d.where(F.col("doc_id") % 3 == tick))
-    expected = _full_scan_conjunctive(d, list(CONJ_TERMS))
-    got = {(r.doc_id, r.source) for r in _lookup_all(idx, list(CONJ_TERMS)).collect()}
-    assert got == expected
-
-    compacted = idx.compact()
-    assert compacted, "two appends must leave oversized buckets"
-    got2 = {(r.doc_id, r.source) for r in _lookup_all(idx, list(CONJ_TERMS)).collect()}
-    assert got2 == expected, "compaction changed serving results"
+def _ranked(idx, queries=QUERY_TERMS, where=None):
+    return {tuple(r) for r in idx.bm25(queries, where=where).collect()}
 
 
 def test_scored_append_keeps_bm25_equal_to_one_shot(spark, tmp_path, sf_dir):
@@ -79,44 +41,28 @@ def test_scored_append_keeps_bm25_equal_to_one_shot(spark, tmp_path, sf_dir):
     assert got == full
 
 
-def test_positional_phrase_equals_full_scan(spark, tmp_path, sf_dir):
-    d = load_table(spark, sf_dir, "documents")
-    idx = SearchIndex(spark, str(tmp_path / "p"), mode="positional")
-    idx.build(d.where(F.col("doc_id") % 2 == 0)).append(d.where(F.col("doc_id") % 2 == 1))
-    got = {
-        (r.doc_id, r.source, r.n_occurrences)
-        for r in idx.phrase(*PHRASE).collect()
-    }
-    toks = F.split("text", " ")
-    n = F.expr(
-        f"size(filter(zip_with(slice(split(text,' '),1,greatest(size(split(text,' '))-1,0)),"
-        f" slice(split(text,' '),2,greatest(size(split(text,' '))-1,0)),"
-        f" (a,b) -> a = '{PHRASE[0]}' AND b = '{PHRASE[1]}'), x -> x))"
-    )
-    expected = {
-        (r.doc_id, r.source, r.n)
-        for r in d.select("doc_id", "source", n.alias("n")).where(F.col("n") > 0).collect()
-    }
-    assert got == expected
-
-
 def test_serving_prunes_to_query_buckets_and_mode_is_pinned(spark, tmp_path, sf_dir):
+    """A ranked request reads only its terms' bucket directories: the
+    posting scan is rooted at exactly those directories (no partition
+    discovery over the whole index), and every row it reads comes from
+    one of them."""
     d = load_table(spark, sf_dir, "documents")
     root = str(tmp_path / "s")
-    idx = SearchIndex(spark, root, mode="boolean").build(d)
-    served = _lookup_all(idx, list(CONJ_TERMS))
+    idx = SearchIndex(spark, root, mode="scored").build(d)
+    want = idx._bucket_of(_TERMS)
+    served = idx.bm25(QUERY_TERMS)
     served.collect()
     plan = served._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan
-    assert "bucket" in plan.split("PartitionFilters: [", 1)[1][:120]
+    located = plan.split("Location: InMemoryFileIndex(", 1)[1]
+    assert located.startswith(f"{len(want)} paths)")
     touched = {
         r["f"].split("bucket=")[1].split("/")[0]
-        for r in idx._pruned(list(CONJ_TERMS))
+        for r in idx._pruned(_TERMS)
         .select(F.input_file_name().alias("f"))
         .distinct()
         .collect()
     }
-    assert touched == {str(b) for b in idx._bucket_of(list(CONJ_TERMS))}
+    assert touched == {str(b) for b in want}
     n_dirs = len(
         [x for x in os.listdir(os.path.join(root, "postings")) if x.startswith("bucket=")]
     )
@@ -124,18 +70,15 @@ def test_serving_prunes_to_query_buckets_and_mode_is_pinned(spark, tmp_path, sf_
 
     # reopening with a different layout must refuse, not silently mis-route
     with pytest.raises(ValueError, match="was built as"):
-        SearchIndex(spark, root, mode="scored")
-    with pytest.raises(ValueError, match="was built as"):
-        SearchIndex(spark, root, mode="boolean", buckets=8)
-    # wrong-mode serving is loud
-    with pytest.raises(ValueError, match="positional"):
-        SearchIndex(spark, root, mode="boolean").phrase("a", "b")
+        SearchIndex(spark, root, mode="scored", buckets=8)
+    # the scored layout is the only one
+    with pytest.raises(ValueError, match="mode must be one of"):
+        SearchIndex(spark, root, mode="boolean")
 
 
 def test_delete_docs_erases_from_all_serving_paths(spark, tmp_path, sf_dir):
-    """Merge-on-read index deletes: erased docs vanish from conjunctive,
-    phrase AND ranked serving; for the scored mode the corpus stats are
-    decremented exactly, so BM25 equals a one-shot build over the
+    """Merge-on-read index deletes: erased docs vanish from ranked
+    serving, and the corpus stats are decremented exactly, so BM25 equals a one-shot build over the
     SURVIVING corpus (idf/avgdl included — not just a filtered result)."""
     d = load_table(spark, sf_dir, "documents")
     victims = [r.doc_id for r in d.where(F.col("doc_id") % 7 == 0).select("doc_id").collect()]
@@ -155,13 +98,6 @@ def test_delete_docs_erases_from_all_serving_paths(spark, tmp_path, sf_dir):
     want = {tuple(r) for r in survivors.bm25(QUERY_TERMS).collect()}
     assert got == want, "deleted docs must not influence the ranked cut"
 
-    # boolean path: erased docs leave conjunctive results too
-    b = SearchIndex(spark, str(tmp_path / "b"), mode="boolean").build(d)
-    before = {r.doc_id for r in _lookup_all(b, list(CONJ_TERMS)).collect()}
-    b.delete_docs(victims)
-    after = {r.doc_id for r in _lookup_all(b, list(CONJ_TERMS)).collect()}
-    assert after == {i for i in before if i % 7 != 0}
-
     # materializing the deletes changes nothing served and clears the
     # sidecar; a second apply is a no-op
     assert idx.apply_deletes() is True
@@ -175,13 +111,13 @@ def test_apply_deletes_torn_swap_recovers(spark, tmp_path, sf_dir):
     import shutil as _shutil
 
     d = load_table(spark, sf_dir, "documents")
-    idx = SearchIndex(spark, str(tmp_path / "t"), mode="boolean").build(d)
-    want = {r.doc_id for r in _lookup_all(idx, list(CONJ_TERMS)).collect()}
+    idx = SearchIndex(spark, str(tmp_path / "t"), mode="scored").build(d)
+    want = _ranked(idx)
 
     # crash window: postings retired, staged copy never installed
     _os.rename(idx.postings_dir, _os.path.join(idx.root, "_old.postings"))
     idx._recover_swap()
-    assert {r.doc_id for r in _lookup_all(idx, list(CONJ_TERMS)).collect()} == want
+    assert _ranked(idx) == want
 
     # crash window: install completed, retired copy not yet dropped
     _shutil.copytree(idx.postings_dir, _os.path.join(idx.root, "_old.postings"))
@@ -189,7 +125,7 @@ def test_apply_deletes_torn_swap_recovers(spark, tmp_path, sf_dir):
     idx._recover_swap()
     assert not _os.path.exists(_os.path.join(idx.root, "_old.postings"))
     assert not _os.path.exists(_os.path.join(idx.root, "_stage.postings"))
-    assert {r.doc_id for r in _lookup_all(idx, list(CONJ_TERMS)).collect()} == want
+    assert _ranked(idx) == want
 
 
 def test_streaming_foreachbatch_ingest_equals_one_shot(spark, tmp_path, sf_dir):
@@ -252,7 +188,7 @@ def test_merge_from_equals_one_shot_and_consumes_source(spark, tmp_path, sf_dir)
 
     with pytest.raises(FileNotFoundError):
         b.stats()  # consumed — a stale handle cannot serve
-    c = SearchIndex(spark, str(tmp_path / "c"), mode="boolean").build(d)
+    c = SearchIndex(spark, str(tmp_path / "c"), mode="scored", buckets=8).build(d)
     with pytest.raises(ValueError, match="layout mismatch"):
         a.merge_from(c)
     with pytest.raises(ValueError, match="into itself"):
@@ -324,6 +260,68 @@ def test_filtered_bm25_narrows_candidates_not_stats(spark, tmp_path, sf_dir):
     # every scored mode build carries the sidecar; a non-scored serve
     # path doesn't grow one silently
     assert os.path.isdir(idx.docmeta_dir)
+
+
+def _executed_stages(sc, group: str) -> int:
+    """Stages that ran tasks for the jobs of job group ``group`` — the
+    count Spark's event log reports as completed stages (a stage whose
+    shuffle output an earlier job already wrote is skipped and runs
+    none). Waits for the status store to see every job finish."""
+    import time
+
+    st = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    jobs = st.getJobIdsForGroup(group)
+    while any(st.getJobInfo(j).status != "SUCCEEDED" for j in jobs):
+        assert time.monotonic() < deadline, "jobs did not finish"
+        time.sleep(0.1)
+    stages = {
+        sid
+        for j in jobs
+        for sid in st.getJobInfo(j).stageIds
+        if (info := st.getStageInfo(sid)) is not None and info.numCompletedTasks > 0
+    }
+    return len(stages)
+
+
+def test_bm25_request_is_one_pruned_query(spark, tmp_path, sf_dir):
+    """One ranked request is one pruned Spark query plus its collect: at
+    most 8 executed stages with a filter and pending deletes, the literal
+    frames (query terms, delete ids) plan as LocalTableScan rather than a
+    Python-RDD scan, and the top-k cut is a WindowGroupLimit. A term whose
+    bucket directory does not exist is skipped, a request with no posting
+    at all serves empty, and every answer equals a one-shot build over
+    the surviving docs."""
+    d = load_table(spark, sf_dir, "documents")
+    victims = F.col("doc_id") % 7 == 0
+    # a wide layout leaves buckets that no term hashes to
+    idx = SearchIndex(spark, str(tmp_path / "i"), buckets=1024).build(d)
+    assert idx.delete_docs(d.where(victims).select("doc_id")) > 0
+    one = SearchIndex(spark, str(tmp_path / "one"), buckets=1024).build(d.where(~victims))
+
+    occupied = {
+        int(x.split("=")[1]) for x in os.listdir(idx.postings_dir) if x.startswith("bucket=")
+    }
+    absent = [
+        t for t in (f"absent{i}" for i in range(500)) if idx._bucket_of([t])[0] not in occupied
+    ][:2]
+    assert len(absent) == 2, "fixture must leave empty buckets"
+    mixed = {qid: ts + absent[:1] for qid, ts in QUERY_TERMS.items()}
+    assert _ranked(idx, mixed) == _ranked(one, mixed) == _ranked(one)
+    assert _ranked(idx, {0: absent}) == _ranked(one, {0: absent}) == set()
+
+    sc = spark.sparkContext
+    sc.setJobGroup("bm25-request", "one filtered bm25 request")
+    try:
+        served = idx.bm25(QUERY_TERMS, where="lang = 'en'")
+        got = {tuple(r) for r in served.collect()}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert got == _ranked(one, where="lang = 'en'")
+    assert _executed_stages(sc, "bm25-request") <= 8
+    plan = served._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    assert "WindowGroupLimit" in plan, plan
 
 
 def test_pre_sidecar_index_refuses_filtered_serving(spark, tmp_path, sf_dir):

@@ -74,10 +74,11 @@ def test_hybrid_serves_both_legs_pruned(spark, tmp_path, sf_dir):
         d,
         e,
         lex_index,
-        spark.read.parquet(stats_dir),
+        spark.read.parquet(stats_dir).first().asDict(),
         _DirIvfIndex(spark, ivf_dir),
         cents,
         q_terms,
+        terms,
     )
     rows = out.collect()  # finalize AQE before asserting on the plan
     assert rows and all(r.rank <= 10 for r in rows)
@@ -239,10 +240,11 @@ def test_filtered_hybrid_three_prunings_on_one_plan(spark, tmp_path, sf_dir):
         d,
         e,
         lex_index,
-        spark.read.parquet(stats_dir),
+        spark.read.parquet(stats_dir).first().asDict(),
         VectorIndex._Io(vx, f"lang = '{_HYBRID_FILTER_LANG}'"),
         cents,
         q_terms,
+        terms,
         lex_candidates=candidates,
     )
     rows = out.collect()  # finalize AQE before asserting on the plan

@@ -83,11 +83,12 @@ def test_delete_then_apply_preserves_survivor_semantics(spark, tmp_path, sf_dir)
 
     survivors = e.where(F.col("vec_id") % 5 != 3)
     want = _expected(survivors, _queries(e), vx.centroids)
-    got = {
-        tuple(r)
-        for r in vx.topk(_queries(e)).select("q_id", "vec_id", "cos_sim", "rank").collect()
-    }
+    served = vx.topk(_queries(e))
+    got = {tuple(r) for r in served.select("q_id", "vec_id", "cos_sim", "rank").collect()}
     assert got == want
+    # the pending delete ids join as a local literal, not a Python-RDD frame
+    plan = served._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
 
     assert vx.apply_deletes() is True
     assert vx._delete_ids() is None

@@ -19,7 +19,9 @@ Runs the cheap structural gates that the r04 end-of-round commit skipped:
 3. money lint + the DuckDB CAST-rounds-vs-Spark-truncates division lint;
 4. the authoritative registry count in REGISTRY_COUNT.txt is current;
 5. the SURVEY coverage map and the module/function reachability scan
-   (no engine code that only its own tests reach).
+   (no engine code that only its own tests reach);
+6. the pinned ``F.hash`` vectors of the driver-side string-hash port that
+   routes index lookups to bucket directories.
 
 It does NOT replace the full sweep — after a plan-affecting change still run
 
@@ -71,6 +73,7 @@ def main() -> int:
             "tests/test_money_lint.py",
             "tests/test_coverage_map.py",
             "tests/test_reachability.py",
+            "tests/test_spark_hash.py::test_pinned_vectors",
             "-q",
             "--no-header",
         ],
