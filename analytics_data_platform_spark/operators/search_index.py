@@ -506,7 +506,8 @@ class SearchIndex:
             if n_files >= max(2, min_files):
                 staged = os.path.join(self.root, "_stage.docmeta")
                 (
-                    self.spark.read.parquet(self.docmeta_dir)
+                    self.spark.read.schema(footer_schema(self.docmeta_dir))
+                    .parquet(self.docmeta_dir)
                     .coalesce(1)
                     .write.parquet(staged)
                 )
@@ -557,7 +558,8 @@ class SearchIndex:
         if os.path.isdir(staged):
             shutil.rmtree(staged)
         (
-            self.spark.read.parquet(self.postings_dir)
+            self._postings_reader()
+            .parquet(self.postings_dir)
             .withColumn("bucket", F.pmod(F.hash("term"), F.lit(buckets)))
             .write.partitionBy("bucket")
             .parquet(staged)

@@ -944,13 +944,18 @@ def inverted_index_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(rows, schema)
 
 
-def _bm25_index_internal_plans(spark, sf_dir):
-    d = load_table(spark, sf_dir, "documents")
+def _bm25_index_plans(spark: SparkSession, d: DataFrame):
+    """The internal plan of a query that serves ``SearchIndex.bm25``: the
+    pruned serve over ``d``'s postings (the index's final live set)."""
     postings, stats = _scored_posting_rows(d)
     serve = _bm25_index_serve(
         postings, _query_frame(spark), _ALL_TERMS, **stats.first().asDict()
     )
     return [("serve", serve)]
+
+
+def _bm25_index_internal_plans(spark, sf_dir):
+    return _bm25_index_plans(spark, load_table(spark, sf_dir, "documents"))
 
 
 register(
@@ -1164,11 +1169,7 @@ def inverted_index_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _erasure_internal_plans(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
-    postings, stats = _scored_posting_rows(d.where(F.col("doc_id") % 97 != 0))
-    serve = _bm25_index_serve(
-        postings, _query_frame(spark), _ALL_TERMS, **stats.first().asDict()
-    )
-    return [("serve", serve)]
+    return _bm25_index_plans(spark, d.where(F.col("doc_id") % 97 != 0))
 
 
 assert BM25_SQL.count("FROM documents") == 1, "BM25 oracle shape changed"

@@ -87,6 +87,7 @@ from analytics_data_platform_spark.queries.search_ops import (
     QUERY_TERMS,
     RRF_K,
     TOPK,
+    _bm25_index_plans,
     _bm25_index_serve,
     _bm25_scored_sql,
     _Q_VALUES,
@@ -152,11 +153,7 @@ def inverted_index_segment_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _segment_merge_internal_plans(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
-    postings, stats = _scored_posting_rows(d.where(~_merge_seg_pred()))
-    serve = _bm25_index_serve(
-        postings, _query_frame(spark), _ALL_TERMS, **stats.first().asDict()
-    )
-    return [("serve", serve)]
+    return _bm25_index_plans(spark, d.where(~_merge_seg_pred()))
 
 
 assert BM25_SQL.count("FROM documents") == 1, "BM25 oracle shape changed"
@@ -1088,12 +1085,9 @@ def serving_index_corpus_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sync_internal_plans(spark, sf_dir):
-    """The serve plan over the one-shot live set."""
-    from analytics_data_platform_spark.queries.search_ops import _bm25_scores
-
-    live = _sync_live_set(load_table(spark, sf_dir, "documents"))
-    scored = _bm25_scores(spark, live, _query_frame(spark))
-    return [("serve", topk_per_query(scored, TOPK, "q_id", "doc_id", "score"))]
+    return _bm25_index_plans(
+        spark, _sync_live_set(load_table(spark, sf_dir, "documents"))
+    )
 
 
 def _dd_chain_sql() -> str:
@@ -1781,11 +1775,7 @@ def inverted_index_reshard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _reshard_internal_plans(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
-    postings, stats = _scored_posting_rows(d.where(~(F.col("doc_id") % 23 == 5)))
-    serve = _bm25_index_serve(
-        postings, _query_frame(spark), _ALL_TERMS, **stats.first().asDict()
-    )
-    return [("serve", serve)]
+    return _bm25_index_plans(spark, d.where(~(F.col("doc_id") % 23 == 5)))
 
 
 assert BM25_SQL.count("FROM documents") == 1, "BM25 oracle shape changed"

@@ -37,6 +37,16 @@ NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 OPEN_COST = "spark.sql.files.openCostInBytes"
 _OPEN_COST_DEFAULT = str(128 * 1024)
 
+# Snapshot tables take string min/max from parquet-mr footers
+# (tables/snapshots.py::footer_datafiles), which the manifest records as
+# EXACT bounds. parquet-mr truncates footer string bounds to this many
+# bytes; its default (Integer.MAX_VALUE) truncates nothing, and pinning it
+# keeps a future default from truncating silently. Set as a Hadoop conf
+# (every write of a session built here) and as a runtime SQL conf (which
+# Spark copies into each write's Hadoop conf, for sessions built elsewhere).
+STATS_TRUNCATE = "parquet.statistics.truncate.length"
+_NO_TRUNCATE = str(2**31 - 1)
+
 
 def get_spark(
     app_name: str = "analytics-data-platform-spark",
@@ -74,6 +84,7 @@ def get_spark(
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config(OPEN_COST, os.environ.get("SPARK_GRAFT_OPEN_COST", _OPEN_COST_DEFAULT))
         .config(NANOS_AS_LONG, "true")
+        .config("spark.hadoop." + STATS_TRUNCATE, _NO_TRUNCATE)
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
@@ -109,3 +120,4 @@ def ensure_session_defaults(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     spark.conf.set(OPEN_COST, os.environ.get("SPARK_GRAFT_OPEN_COST", _OPEN_COST_DEFAULT))
+    spark.conf.set(STATS_TRUNCATE, _NO_TRUNCATE)

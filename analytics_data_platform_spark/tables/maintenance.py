@@ -201,13 +201,19 @@ def compact_posting_buckets(
     # hidden-path filter that hides e.g. ``_cell=`` from discovery);
     # the partition value is recovered from the file path — a per-dir
     # read-and-union would pay one driver-side schema inference per
-    # bucket, which dominated the job on wide fleets
+    # bucket, which dominated the job on wide fleets. The schema comes
+    # from a footer, so the read runs no inference job at all.
+    from analytics_data_platform_spark.operators.search_index import footer_schema
+
     val = F.regexp_extract(
         F.input_file_name(), re.escape(prefix) + "([^/]+)/", 1
     )
-    frame = spark.read.parquet(
-        *[os.path.join(idx_dir, n) for n, _ in oversized]
-    ).withColumn(part_col, val.cast("int") if all_int else val)
+    roots = [os.path.join(idx_dir, n) for n, _ in oversized]
+    frame = (
+        spark.read.schema(footer_schema(roots[0]))
+        .parquet(*roots)
+        .withColumn(part_col, val.cast("int") if all_int else val)
+    )
     # underscore prefix keeps the stage invisible to partition
     # discovery even if this process dies mid-write
     staged_root = tempfile.mkdtemp(prefix="_stage.", dir=idx_dir)

@@ -120,9 +120,8 @@ class SnapshotTable:
     def __init__(self, spark: SparkSession, root: str, stats_cols: list[str] | None = None,
                  cluster_by: list[str] | None = None, cluster_files: int | None = None):
         """``stats_cols`` limits per-file stats collection (None = every
-        orderable leaf column). Stats collection is ONE extra aggregation
-        over the freshly written batch — per-file, map-side, grouped by
-        ``input_file_name()`` — never over the whole table.
+        orderable leaf column). Stats come from the metadata of the freshly
+        written batch (:meth:`_write_files`) — never from the whole table.
 
         ``cluster_by`` range-partitions each written batch on the given
         columns: every data file then covers a TIGHT value range, which is
@@ -276,17 +275,15 @@ class SnapshotTable:
 
     def _write_files(self, df: DataFrame) -> list[DataFile]:
         """Write ``df`` into a fresh immutable dir and enumerate the files
-        with stats. Stats come from the parquet FOOTERS when every tracked
-        column's footer bounds are trustworthy-exact (numeric/date/boolean
-        — driver-side metadata reads, no second job); otherwise one
-        per-file (map-side) aggregation over just-written data — O(batch),
-        not O(table) either way. Strings still take the scan path,
-        although the Parquet 1.16 writer under Spark 4.1.2 does not
-        truncate string footer bounds: values up to ~4 KB keep exact
-        min/max, longer ones drop the bounds (``has_min_max`` false). The
-        manifest contract is exact min/max, so moving strings to the
-        footer path waits for an equality gate of footer vs scan stats
-        over adversarial strings."""
+        with per-file stats — O(batch), never O(table). The stats come from
+        the parquet footers the write produced, with no second Spark job
+        (:func:`footer_datafiles`; ``session.py`` pins
+        ``parquet.statistics.truncate.length`` so parquet-mr never
+        truncates string bounds). Where a footer holds no exact bound —
+        string min + max of 4 KB or more, a NaN, a missing null count, or
+        string/float bounds of the driver-side (pyarrow) writer — one
+        per-file aggregation over the just-written files, read with
+        ``df``'s schema, takes its place."""
         d = os.path.join(self.root, "data", uuid.uuid4().hex)
         if self.cluster_by:
             parts = [self.cluster_files] if self.cluster_files else []
@@ -295,16 +292,14 @@ class SnapshotTable:
             )
         if not self._try_local_write(df, d):
             df.write.mode("errorifexists").parquet(d)
-        fields = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-        pre_cols = [n for n, t in fields.items() if t in _STATS_TYPES]
-        if self.stats_cols is not None:
-            pre_cols = [c for c in pre_cols if c in self.stats_cols]
-        if all(fields[c] != "string" for c in pre_cols):
-            out = self._footer_datafiles(d, pre_cols)
-            if out is not None:
-                return out
-        written = self.spark.read.parquet(d)
-        cols = self._statable_cols(written)
+        cols = self._statable_cols(df.schema)
+        out = footer_datafiles(d, cols)
+        return out if out is not None else self._scan_datafiles(d, df.schema, cols)
+
+    def _scan_datafiles(self, d: str, schema, cols: list[str]) -> list[DataFile]:
+        """The stats fallback: ONE per-file (map-side) aggregation, grouped
+        by ``input_file_name()``, over the files just written to ``d``."""
+        written = self.spark.read.schema(schema).parquet(d)
         aggs = [F.count(F.lit(1)).alias("__rows")]
         for c in cols:
             aggs += [
@@ -317,10 +312,7 @@ class SnapshotTable:
         )
         by_path = {_strip_scheme(r["__path"]): r for r in per_file}
         out = []
-        for name in sorted(os.listdir(d)):
-            if not name.endswith(".parquet"):
-                continue
-            p = os.path.join(d, name)
+        for p in _parquet_files(d):
             r = by_path.get(p)
             if r is None:
                 continue  # zero-row part file: reference nothing, GC later
@@ -343,8 +335,8 @@ class SnapshotTable:
 
     def _try_local_write(self, df: DataFrame, d: str) -> bool:
         """Driver-side parquet write for LITERAL frames — plans Spark can
-        collect without executors (``createDataFrame`` results, e.g. the
-        per-tick counts row every state commit writes). The executor write
+        collect without executors (``createDataFrame`` of an Arrow table or
+        pandas frame; a Python list plans as an RDD scan). The executor write
         path costs a full Spark job (task launch + commit protocol) to
         produce one tiny file; pyarrow writes the same file in-process.
         Scalar types only; anything else (and any non-local plan, which
@@ -375,55 +367,9 @@ class SnapshotTable:
         pq.write_table(table, os.path.join(d, "part-00000-local.parquet"))
         return True
 
-    def _footer_datafiles(self, d: str, cols: list[str]) -> list[DataFile] | None:
-        """Enumerate just-written files with rows + per-column min/max/nulls
-        read from the parquet footers — metadata-only, no second scan job.
-        Returns ``None`` (caller falls back to the scan path) when any
-        footer lacks a usable bound for a requested column: a row group
-        with non-null values but no min/max (parquet writers omit bounds
-        for NaN-poisoned float chunks), a missing null count, or a column
-        the footer does not expose under its plain name. An all-null
-        column is NOT a fallback: min/max None with a full null count is
-        exactly what the scan path records."""
-        import pyarrow.parquet as pq
-
-        out: list[DataFile] = []
-        for name in sorted(os.listdir(d)):
-            if not name.endswith(".parquet"):
-                continue
-            p = os.path.join(d, name)
-            md = pq.ParquetFile(p).metadata
-            if md.num_rows == 0:
-                continue  # zero-row part file: reference nothing, GC later
-            col_idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-            stats: dict[str, dict] = {}
-            for c in cols:
-                i = col_idx.get(c)
-                if i is None:
-                    return None
-                mn = mx = None
-                nulls = 0
-                for rg in range(md.num_row_groups):
-                    group = md.row_group(rg)
-                    st = group.column(i).statistics
-                    if st is None or not st.has_null_count:
-                        return None
-                    nulls += st.null_count
-                    if group.num_rows == st.null_count:
-                        continue  # all-null row group: no bounds to merge
-                    if not st.has_min_max:
-                        return None
-                    if mn is None or st.min < mn:
-                        mn = st.min
-                    if mx is None or st.max > mx:
-                        mx = st.max
-                stats[c] = {"min": _jsonable(mn), "max": _jsonable(mx), "nulls": nulls}
-            out.append(DataFile(p, md.num_rows, os.path.getsize(p), stats))
-        return out
-
-    def _statable_cols(self, df: DataFrame) -> list[str]:
+    def _statable_cols(self, schema) -> list[str]:
         cols = [
-            f.name for f in df.schema.fields
+            f.name for f in schema.fields
             if f.dataType.simpleString() in _STATS_TYPES
         ]
         if self.stats_cols is not None:
@@ -907,7 +853,12 @@ class SnapshotTable:
         """M1 ``rewrite_data_files`` (binpack): coalesce undersized files
         into ~target-size files; files already at target carry over BY
         REFERENCE. Commits a new snapshot; old files stay for time travel
-        until expired."""
+        until expired.
+
+        The small files are read with the manifest schema (no inference
+        job; after an additive evolution an inferred schema would come from
+        ONE file and drop the columns older files lack) and narrowed with
+        ``coalesce`` (no exchange), so a binpack is one write job."""
         s = self.snapshot()
         if s.delete_files:
             # binpack would resurrect MOR-deleted rows; materialize first
@@ -917,10 +868,10 @@ class SnapshotTable:
         big = [f for f in s.files if f.bytes >= target_file_bytes // 2]
         if len(small) < min_input_files:
             return {"rewritten": 0, "kept": len(s.files), "version": s.version}
-        df = self.spark.read.parquet(*[f.path for f in small])
+        df = self._read_files([f.path for f in small])
         total = sum(f.bytes for f in small)
         parts = max(1, -(-total // target_file_bytes))
-        rewritten = self._write_files(df.repartition(parts))
+        rewritten = self._write_files(df.coalesce(parts))
         v = self._commit(big + rewritten, "rewrite_data_files")
         return {"rewritten": len(small), "kept": len(big), "version": v}
 
@@ -1029,6 +980,71 @@ def snapshot_maintenance(table: SnapshotTable, keep_last: int = 3,
     report["expire_snapshots"] = table.expire_snapshots(keep_last=keep_last)
     report["remove_orphan_files"] = len(table.remove_orphan_files())
     return report
+
+
+def _parquet_files(d: str) -> list[str]:
+    return [os.path.join(d, n) for n in sorted(os.listdir(d)) if n.endswith(".parquet")]
+
+
+# parquet physical types whose footer bounds only parquet-mr writes exactly
+_INEXACT_FOREIGN = {"BYTE_ARRAY", "FLOAT", "DOUBLE"}
+
+
+def footer_datafiles(d: str, cols: list[str]) -> list[DataFile] | None:
+    """Enumerate the parquet files in ``d`` with rows + per-column
+    min/max/nulls read from their footers — metadata reads, no Spark job.
+    Returns ``None`` (the caller scans instead) when any footer lacks an
+    exact bound for a requested column:
+
+    - a row group with non-null values but no min/max: parquet-mr drops
+      the bounds of a string chunk whose min + max reach 4 KB;
+    - a NaN bound: parquet-mr records NaN as a bound, and NaN does not
+      order, so row groups cannot be merged by comparison;
+    - a missing null count, or a column the footer does not expose under
+      its plain name;
+    - a string or float bound from a writer other than parquet-mr: pyarrow
+      16 bounds skip values over 4 KB and NaNs, so ``["b", "c" * 5000]``
+      records max ``""`` and ``[1.0, nan]`` max ``1.0``; a driver-side
+      write (:meth:`SnapshotTable._try_local_write`) scans for them.
+
+    An all-null column is NOT a fallback: min/max None with a full null
+    count is exactly what the scan path records."""
+    import pyarrow.parquet as pq
+
+    out: list[DataFile] = []
+    for p in _parquet_files(d):
+        md = pq.ParquetFile(p).metadata
+        if md.num_rows == 0:
+            continue  # zero-row part file: reference nothing, GC later
+        exact_all = md.created_by.startswith("parquet-mr ")
+        col_idx = {md.schema.column(i).path: i for i in range(md.num_columns)}
+        stats: dict[str, dict] = {}
+        for c in cols:
+            i = col_idx.get(c)
+            if i is None:
+                return None
+            mn = mx = None
+            nulls = 0
+            for rg in range(md.num_row_groups):
+                group = md.row_group(rg)
+                chunk = group.column(i)
+                st = chunk.statistics
+                if st is None or not st.has_null_count:
+                    return None
+                nulls += st.null_count
+                if group.num_rows == st.null_count:
+                    continue  # all-null row group: no bounds to merge
+                if not st.has_min_max or st.min != st.min or st.max != st.max:
+                    return None  # no bounds, or NaN ones
+                if not exact_all and chunk.physical_type in _INEXACT_FOREIGN:
+                    return None
+                if mn is None or st.min < mn:
+                    mn = st.min
+                if mx is None or st.max > mx:
+                    mx = st.max
+            stats[c] = {"min": _jsonable(mn), "max": _jsonable(mx), "nulls": nulls}
+        out.append(DataFile(p, md.num_rows, os.path.getsize(p), stats))
+    return out
 
 
 def _strip_scheme(p: str) -> str:

@@ -184,6 +184,25 @@ def test_rewrite_data_files_binpacks_small_keeps_big(spark, tmp_path):
     assert {r.id for r in t.read().collect()} == {0, 1, 2, 3}
 
 
+def test_rewrite_data_files_keeps_evolved_columns(spark, tmp_path):
+    """Binpack after an additive schema evolution: three pre-evolution
+    files and one evolved file rewrite to one file that still holds the
+    evolved column's values. A read schema inferred from the files takes
+    ONE file's schema — a pre-evolution one — and loses them; binpack
+    reads with the manifest schema."""
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    for i in range(3):
+        t.append(_df(spark, [(i, f"v{i}")]).coalesce(1))
+    t.append(
+        spark.createDataFrame([(3, "v3", 9.5)], "id long, val string, score double")
+    )
+    out = t.rewrite_data_files(target_file_bytes=1 << 20)
+    assert out["rewritten"] == 4 and len(t.snapshot().files) == 1
+    rows = {r.id: (r.val, r.score) for r in t.read().collect()}
+    assert rows == {0: ("v0", None), 1: ("v1", None), 2: ("v2", None), 3: ("v3", 9.5)}
+    assert "score" in t.snapshot().files[0].stats
+
+
 def test_snapshot_maintenance_runs_all_four(spark, tmp_path):
     t = SnapshotTable(spark, str(tmp_path / "t"))
     for i in range(4):
@@ -405,11 +424,15 @@ def test_concurrent_appends_with_retry_all_land(spark, tmp_path):
 
 
 def test_footer_stats_match_scan_stats(spark, tmp_path):
-    """The footer fast path (no second scan job) must record byte-identical
-    manifest stats to the scan path for every footer-exact type, including
-    null mixes and an all-null column; a string stat column must force the
-    scan path (footer bounds for binary may be truncated)."""
+    """Every stats type — string included — takes its manifest stats from
+    the parquet-mr footers (no second scan job), and they are
+    byte-identical, file by file, to the scan path's: null mixes, an
+    all-null column, dates, booleans. The adversarial string and float
+    shapes are gated in tests/test_footer_stats.py."""
     import datetime as dt
+    import json
+
+    from analytics_data_platform_spark.tables.snapshots import footer_datafiles
 
     rows = [
         (1, 2.5, dt.date(2024, 1, 2), True, None, "aa"),
@@ -418,35 +441,21 @@ def test_footer_stats_match_scan_stats(spark, tmp_path):
     ]
     schema = "i bigint, x double, d date, b boolean, allnull int, s string"
     df = spark.createDataFrame(rows, schema).repartition(2)
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    files = t._write_files(df)
+    d = os.path.dirname(files[0].path)
+    cols = ["i", "x", "d", "b", "allnull", "s"]
+    footer = footer_datafiles(d, cols)
+    assert footer is not None  # the fast path engaged, string column and all
+    scan = t._scan_datafiles(d, df.schema, cols)
 
-    numeric = SnapshotTable(
-        spark, str(tmp_path / "num"), stats_cols=["i", "x", "d", "b", "allnull"]
-    )
-    files = numeric._write_files(df)
-    footer = numeric._footer_datafiles(
-        os.path.dirname(files[0].path), ["i", "x", "d", "b", "allnull"]
-    )
-    assert footer is not None  # the fast path actually engaged
+    def manifest(fs):
+        return json.dumps(
+            [f.to_json() for f in sorted(fs, key=lambda f: f.path)], sort_keys=True
+        )
 
-    scan_stats = {}  # force the scan path by including the string column
-    stringy = SnapshotTable(spark, str(tmp_path / "str"))
-    sfiles = stringy._write_files(df)
-    # same frame, same partitioning -> same per-file row sets; compare the
-    # union-of-files aggregate view of both stats paths
-    def merged(fs, col):
-        mins = [f.stats[col]["min"] for f in fs if f.stats[col]["min"] is not None]
-        maxs = [f.stats[col]["max"] for f in fs if f.stats[col]["max"] is not None]
-        nulls = sum(f.stats[col]["nulls"] for f in fs)
-        return (min(mins) if mins else None, max(maxs) if maxs else None, nulls)
-
-    for col in ("i", "x", "d", "b", "allnull"):
-        assert merged(files, col) == merged(sfiles, col), col
-    assert all(f.rows == s.rows for f, s in zip(
-        sorted(files, key=lambda f: f.rows), sorted(sfiles, key=lambda f: f.rows)
-    ))
-    # string column: present in the scan table's stats, exact bounds
-    scol = [f.stats["s"] for f in sfiles]
-    assert min(s["min"] for s in scol if s["min"] is not None) == "aa"
+    assert manifest(files) == manifest(footer) == manifest(scan)
+    assert sum(f.rows for f in files) == 3
 
 
 def test_commit_refuses_stale_parent_lineage(spark, tmp_path, monkeypatch):

@@ -21,7 +21,9 @@ Runs the cheap structural gates that the r04 end-of-round commit skipped:
 5. the SURVEY coverage map and the module/function reachability scan
    (no engine code that only its own tests reach);
 6. the pinned ``F.hash`` vectors of the driver-side string-hash port that
-   routes index lookups to bucket directories.
+   routes index lookups to bucket directories;
+7. the snapshot-table footer reader refusing the string and float bounds
+   pyarrow writes wrong (adversarial strings, NaN doubles).
 
 It does NOT replace the full sweep — after a plan-affecting change still run
 
@@ -74,6 +76,7 @@ def main() -> int:
             "tests/test_coverage_map.py",
             "tests/test_reachability.py",
             "tests/test_spark_hash.py::test_pinned_vectors",
+            "tests/test_footer_stats.py::test_foreign_footer_bounds_refused",
             "-q",
             "--no-header",
         ],
